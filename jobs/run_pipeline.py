@@ -65,9 +65,14 @@ def main() -> None:
 
     extra = None
     if args.femc_seed:
-        from xmltoldmigration_spark.kg.transfers.femc import femc_seed_parsed
+        from xmltoldmigration_spark.kg.transfers.femc import WORKS_CSV, femc_seed_parsed
 
-        extra = femc_seed_parsed(spark)
+        # an optional input like the authority tables: report it, run on
+        if WORKS_CSV.exists():
+            extra = femc_seed_parsed(spark)
+        else:
+            print(f"--femc-seed: {WORKS_CSV} not found, no FEMC works seeded",
+                  file=sys.stderr)
     if args.rkts_dir:
         from xmltoldmigration_spark.kg.transfers.rkts import rkts_parsed
 

@@ -1,4 +1,5 @@
-"""Distributed-path tests for connected_components (G1, SURVEY §2.6).
+"""Tests for connected_components (G1, SURVEY §2.6) and its driver-side
+union_find.
 
 The authority cluster lists this operator usually sees (~130k pairs,
 CommonMigration.java:152-157 semantics) ride the driver-side union-find;
@@ -12,7 +13,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from xmltoldmigration_spark.operators.connected_components import connected_components
+from xmltoldmigration_spark.operators.connected_components import (
+    connected_components,
+    union_find,
+)
 
 
 def _synthetic_edges(spark, n_components=30_000, star_size=10):
@@ -70,3 +74,34 @@ def test_distributed_cc_chain_needs_iterations(spark):
     assert (
         chain_labels.filter(F.col("comp") != F.lit(chain_base)).count() == 0
     )
+
+
+def test_union_find_maps_to_min_id():
+    """The driver-side helper shared by connected_components and the
+    pipeline's authority canonicalization: every node maps to the minimum
+    id reachable from it, whatever order the edges arrive in."""
+    chain = [(4, 5), (3, 4), (2, 3), (1, 2)]  # reverse order
+    assert union_find(chain) == {n: 1 for n in range(1, 6)}
+    stars = [(10, 11), (10, 12), (20, 21), (20, 22), (22, 12)]
+    assert union_find(stars) == {n: 10 for n in (10, 11, 12, 20, 21, 22)}
+    assert union_find([(7, 7), (9, 8)]) == {7: 7, 8: 8, 9: 8}
+
+
+def test_authority_rep_pairs_only_rewritten_nodes(monkeypatch):
+    """_authority_rep_pairs feeds _canonicalize's rewrite join: it must
+    hold only node != representative pairs, representative = min id."""
+    from xmltoldmigration_spark.kg import authority
+    from xmltoldmigration_spark.plans import pipeline
+
+    clusters = {"WA3": "WA1", "WA2": "WA3", "WA9": "WA8", "WA5": "WA5"}
+    monkeypatch.setattr(
+        authority, "get_authority",
+        lambda test_mode=False: authority.Authority(clusters=clusters),
+    )
+    pipeline._authority_rep_pairs.cache_clear()
+    try:
+        assert pipeline._authority_rep_pairs() == (
+            ("WA2", "WA1"), ("WA3", "WA1"), ("WA9", "WA8"),
+        )
+    finally:
+        pipeline._authority_rep_pairs.cache_clear()

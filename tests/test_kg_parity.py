@@ -14,7 +14,9 @@ from pathlib import Path
 
 import pytest
 
-XML_DIR = Path("/root/reference/src/test/xml")
+from xmltoldmigration_spark import REFERENCE_ROOT
+
+XML_DIR = REFERENCE_ROOT / "src/test/xml"
 
 pytestmark = pytest.mark.skipif(
     not XML_DIR.exists(), reason="reference golden corpus not present"

@@ -23,6 +23,8 @@ def spark():
 
 @pytest.fixture(scope="module")
 def fixture_out(spark, tmp_path_factory):
+    if not corpus.XML_DIR.exists():
+        pytest.skip("no golden corpus")
     out = tmp_path_factory.mktemp("kgpipe")
     src = corpus.load_fixture_src(spark)
     pipe = Pipeline(spark, str(out))
@@ -351,26 +353,17 @@ def test_etext_page_name_translation(spark, tmp_path):
     assert any("IMG29-9999.tif" in m for m in msgs)
 
 
-def test_materialize_all_equals_fused(spark, tmp_path):
-    """materialize='all' (per-stage parquet) must produce exactly the
-    fused path's triple set — including the round-2 J13/J14/page-name
-    stages — and resume from its per-stage markers."""
-    src = corpus.load_synthetic_src(spark, 60, num_partitions=2)
-    fused = Pipeline(spark, str(tmp_path / "fused")).run(src, resume=False)
-    pa = Pipeline(spark, str(tmp_path / "all"))
-    allm = pa.run(src, resume=False, materialize="all")
-    cols = ", ".join(c for c in fused.columns if c != "subject_bucket")
-    hf = fused.select(F.expr(f"bit_xor(xxhash64({cols}))")).collect()[0][0]
-    ha = allm.select(F.expr(f"bit_xor(xxhash64({cols}))")).collect()[0][0]
-    assert fused.count() == allm.count() > 0
-    assert hf == ha
-    # resume: all stage markers honored, same result
-    again = Pipeline(spark, str(tmp_path / "all")).run(
-        src, resume=True, materialize="all"
-    )
-    assert again.count() == allm.count()
-    stages = {r["stage"] for r in pa.lineage()}
-    assert {"parsed", "linked", "completed", "canonical", "graph"} <= stages
+def test_empty_source_gives_empty_graph(spark, tmp_path):
+    """A zero-row source writes zero-row stages (no parquet schema to infer
+    from) and returns an empty graph, fresh and on resume."""
+    src = corpus.load_synthetic_src(spark, 10, num_partitions=2).limit(0)
+    out = str(tmp_path / "empty")
+    pipe = Pipeline(spark, out)
+    assert pipe.run(src, resume=False).count() == 0
+    lineage = {r["stage"]: r for r in pipe.lineage()}
+    assert lineage["graph"]["rows"] == 0
+    assert all(r["rows"] == 0 for r in lineage.values())
+    assert Pipeline(spark, out).run(src, resume=True).count() == 0
 
 
 def test_multimodal_resize_and_features(spark):

@@ -6,11 +6,11 @@ tests run with normalizeOneDirection(false, false)."""
 from __future__ import annotations
 
 import csv
-from pathlib import Path
-
 import pytest
 
-TEST_DIR = Path("/root/reference/src/test")
+from xmltoldmigration_spark import REFERENCE_ROOT
+
+TEST_DIR = REFERENCE_ROOT / "src/test"
 
 pytestmark = pytest.mark.skipif(
     not TEST_DIR.exists(), reason="reference corpus not present"

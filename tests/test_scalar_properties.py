@@ -7,7 +7,7 @@ failures."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from xmltoldmigration_spark.functions import lang as L
@@ -148,17 +148,27 @@ def test_simhash_byte_hash_matches_pandas(tokens):
         max_size=40,
     )
 )
+@example(["\x08\r\x08\x00"])
 @settings(max_examples=80, deadline=None)
 def test_simhash_ascii_path_equals_split_path(texts):
     """The zero-object byte-domain tokenizer must reproduce str.split()
     exactly on ASCII input (including runs of mixed whitespace, control
-    chars, empty and whitespace-only docs)."""
+    chars, empty and whitespace-only docs).  The dispatcher is what runs in
+    production: it sends NUL-bearing batches to the split path, because
+    pandas' object-string hash stops at NUL and the byte-domain hash does
+    not."""
     import numpy as np
     import pandas as pd
 
-    from xmltoldmigration_spark.operators.simhash import _simhash_ascii, _simhash_values
+    from xmltoldmigration_spark.operators.simhash import (
+        _simhash_ascii,
+        _simhash_from_texts,
+        _simhash_values,
+    )
 
-    a = _simhash_ascii(texts)
+    a = _simhash_from_texts(pd.Series(texts, dtype=object))
+    if not any("\x00" in t for t in texts):
+        assert np.array_equal(a, _simhash_ascii(texts))
     b = _simhash_values(pd.Series(texts, dtype=object).fillna("").str.split())
     assert np.array_equal(a, b)
 

@@ -47,18 +47,22 @@ def main() -> None:
         clean = p["ctl_cpu"] <= CPU_CLEAN_S and p["ctl_mem8"] <= MEM_CLEAN_S
         p["clean"] = clean
         if clean:
-            out = subprocess.run(
-                [sys.executable, str(REPO / "bench.py")],
-                capture_output=True,
-                text=True,
-                cwd=str(REPO),
-                timeout=1800,
-            )
-            line = out.stdout.strip().splitlines()[-1] if out.stdout.strip() else ""
             try:
-                p["bench"] = json.loads(line)
-            except (json.JSONDecodeError, IndexError):
-                p["bench_error"] = (out.stderr or "no output")[-500:]
+                out = subprocess.run(
+                    [sys.executable, str(REPO / "bench.py")],
+                    capture_output=True,
+                    text=True,
+                    cwd=str(REPO),
+                    timeout=1800,
+                )
+            except subprocess.TimeoutExpired:
+                p["bench_error"] = "timeout"
+            else:
+                line = out.stdout.strip().splitlines()[-1] if out.stdout.strip() else ""
+                try:
+                    p["bench"] = json.loads(line)
+                except (json.JSONDecodeError, IndexError):
+                    p["bench_error"] = (out.stderr or "no output")[-500:]
             runs += 1
         with LOG.open("a") as f:
             f.write(json.dumps(p) + "\n")

@@ -12,13 +12,14 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from xmltoldmigration_spark import REFERENCE_ROOT
 from xmltoldmigration_spark.kg.common import Ctx
 from xmltoldmigration_spark.kg.compare import precision_recall
 from xmltoldmigration_spark.kg.migrators import migrate_record
 from xmltoldmigration_spark.kg.ttl import parse_ttl_file
 
-XML_DIR = Path("/root/reference/src/test/xml")
-TTL_DIR = Path("/root/reference/src/test/ttl")
+XML_DIR = REFERENCE_ROOT / "src/test/xml"
+TTL_DIR = REFERENCE_ROOT / "src/test/ttl"
 
 TYPE_BY_PREFIX = [
     ("PR", "product"),

@@ -15,4 +15,10 @@ Everything is DataFrame-first: Catalyst owns the physical plan; Python only
 runs inside Arrow-batched pandas UDFs (parse stage, text scalar functions).
 """
 
+from pathlib import Path
+
 __version__ = "0.1.0"
+
+# The buda-base/xmltoldmigration checkout: authority resources, the golden
+# XML/TTL corpus and the transfer fixtures are read from here when present.
+REFERENCE_ROOT = Path("/root/reference")

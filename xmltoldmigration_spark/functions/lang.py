@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from pathlib import Path
+
+from xmltoldmigration_spark import REFERENCE_ROOT
 
 EWTS_TAG = "bo-x-ewts"
 
@@ -225,7 +226,7 @@ class EwtsFixer:
     """
 
     _table: dict[str, dict[str, str]] | None = None
-    SOURCE = Path("/root/reference/src/main/resources/ewts-fixes.txt")
+    SOURCE = REFERENCE_ROOT / "src/main/resources/ewts-fixes.txt"
 
     @classmethod
     def table(cls) -> dict[str, dict[str, str]]:

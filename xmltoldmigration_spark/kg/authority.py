@@ -16,9 +16,10 @@ from __future__ import annotations
 
 import csv
 from dataclasses import dataclass, field
-from pathlib import Path
 
-RESOURCES = Path("/root/reference/src/main/resources")
+from xmltoldmigration_spark import REFERENCE_ROOT
+
+RESOURCES = REFERENCE_ROOT / "src/main/resources"
 
 
 def _csv_map(name: str, key_col: int = 0, val_col: int = 1, skip_header: bool = False):

@@ -42,7 +42,7 @@ def bench_kg_pipeline(spark, n: int | None = None) -> dict:
     src_dir = tempfile.mkdtemp(prefix="kgbenchsrc_", dir=out_base)
     prev_split = None  # set below; finally must not NameError on early failure
     try:
-        # materialize the source OUTSIDE the timed window and read it
+        # write the source out OUTSIDE the timed window and read it
         # back as a columnar scan — the engine's real input is a
         # parquet/Iceberg table of raw records, not an in-job generator
         # (same methodology as tools/scaling_bench.py --src parquet).

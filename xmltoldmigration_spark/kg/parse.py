@@ -80,7 +80,7 @@ def _parse_batches(batches):
     Bandwidth discipline (the 32-wide wall is memory-bound, BENCH.md):
     - record XML stays in the incoming Arrow buffer until ElementTree
       needs it — the string column is viewed as binary (zero-copy cast)
-      and each record materializes ONE bytes object at a time, parsed and
+      and each record holds ONE bytes object at a time, parsed and
       freed before the next, instead of the old mapInPandas shape where
       the whole batch's contents became resident Python strings inside a
       pandas object block (plus a utf-8 decode pass per record);

@@ -14,6 +14,7 @@ import csv
 from pathlib import Path
 
 from xmltoldmigration_spark.kg import common as C
+from xmltoldmigration_spark.kg.authority import RESOURCES
 from xmltoldmigration_spark.kg.common import Ctx
 from xmltoldmigration_spark.kg.model import (
     ADM,
@@ -29,7 +30,7 @@ from xmltoldmigration_spark.kg.model import (
     lit,
 )
 
-WORKS_CSV = Path("/root/reference/src/main/resources/femc-works.csv")
+WORKS_CSV = RESOURCES / "femc-works.csv"
 
 
 def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:

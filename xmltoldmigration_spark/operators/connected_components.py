@@ -27,54 +27,55 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-    driver_threshold: int = 250_000,
-) -> DataFrame:
+# Edge lists up to this size are broadcast-scale (comfortably above the
+# ~130k-row authority cluster lists, small enough that the collect can't
+# strain the driver): one driver-side union_find, zero shuffles.
+DRIVER_THRESHOLD = 250_000
+MAX_ITERATIONS = 50
+
+
+def union_find(pairs) -> dict:
+    """{node: min node id reachable from node} over the undirected edge
+    sequence `pairs` (path compression, union by min id)."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for pair in pairs for n in pair}
+
+
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Return DataFrame[node, component] where component = min node id
     reachable from `node` over the undirected edge set.
 
-    Size-adaptive: an edge list under `driver_threshold` rows (default
-    250k — comfortably above the ~130k-row authority cluster lists this
-    pipeline feeds it, and small enough that the collect can't strain the
-    driver) is broadcast-scale authority data — a driver-side union-find
-    computes components in one pass with zero shuffles, exactly like any
-    other broadcast side-table.  Above the threshold the distributed
-    min-propagation loop below takes over (each iteration one shuffle
-    join + aggregation, lineage truncated by localCheckpoint).
+    Size-adaptive: an edge list of at most DRIVER_THRESHOLD rows is
+    broadcast-scale authority data — `union_find` computes components on
+    the driver in one pass, exactly like any other broadcast side-table.
+    Above the threshold the distributed min-propagation loop below takes
+    over (each iteration one shuffle join + aggregation, lineage truncated
+    by localCheckpoint).
 
     `edges` must have two columns of the same orderable type. Isolated
     nodes appear only if present as a self-edge or in both columns.
     """
-    approx = edges.limit(driver_threshold + 1).count()
-    if approx <= driver_threshold:
-        rows = edges.select(src, dst).collect()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in rows:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so the representative is the min id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        nodes = {n for row in rows for n in row}
-        out = [(n, find(n)) for n in sorted(nodes)]
+    if edges.limit(DRIVER_THRESHOLD + 1).count() <= DRIVER_THRESHOLD:
+        comp = union_find(edges.select(src, dst).collect())
         import pandas as pd
 
         # pandas -> Arrow path avoids per-row Py4J conversion
         return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out, columns=["node", "comp"])
+            pd.DataFrame(sorted(comp.items()), columns=["node", "comp"])
         )
     # Size the iteration width from the data, not a constant: a small
     # edge list coalesces so each propagation round isn't scheduling-
@@ -106,7 +107,7 @@ def connected_components(
     )
     labels = labels.localCheckpoint(eager=True)
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         # propagate: candidate label for node v = min over neighbors u of label(u)
         neighbor_labels = (
             sym.join(labels, sym.b == labels.node, "inner")
@@ -120,7 +121,7 @@ def connected_components(
         )
         # pointer doubling: comp(v) <- comp(comp(v)).  One-hop propagation
         # alone needs O(diameter) rounds — a path graph of length 300
-        # would exhaust max_iterations and return wrong labels.  Labels
+        # would exhaust MAX_ITERATIONS and return wrong labels.  Labels
         # are monotone non-increasing and always name a live node (self-
         # edges put every node in `labels`), so chasing one extra hop per
         # round gives the usual O(log d) convergence.
@@ -147,6 +148,6 @@ def connected_components(
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
-        " — raise max_iterations (labels would be silently wrong otherwise)"
+        f"connected_components did not converge in {MAX_ITERATIONS} iterations"
+        " — raise MAX_ITERATIONS (labels would be silently wrong otherwise)"
     )

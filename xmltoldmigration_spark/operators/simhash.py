@@ -229,10 +229,12 @@ def _simhash_ascii(vals: list[str]) -> np.ndarray:
 def _simhash_from_texts(texts: "pd.Series") -> np.ndarray:
     """Dispatch: byte-domain path for all-ASCII batches (byte offsets ==
     char offsets, so the vectorized tokenizer equals str.split()), legacy
-    object path otherwise.  Both produce identical fingerprints on ASCII
-    input (pinned by test_simhash_ascii_path_equals_split_path)."""
+    object path otherwise.  NUL-bearing batches also take the object path:
+    pandas' object-string hash stops at NUL, the byte-domain hash does not.
+    The two paths agree on every batch routed here (pinned by
+    test_simhash_ascii_path_equals_split_path)."""
     vals = texts.fillna("").tolist()
-    if all(v.isascii() for v in vals):
+    if all(v.isascii() and "\x00" not in v for v in vals):
         return _simhash_ascii(vals)
     return _simhash_values(pd.Series(vals).str.split())
 

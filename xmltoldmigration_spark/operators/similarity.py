@@ -139,22 +139,6 @@ def _hyperplanes(dim: int, n_planes: int, table: int = 0) -> np.ndarray:
     return np.array(vals[: dim * n_planes]).reshape(n_planes, dim)
 
 
-def _bucket_expr(vec: str, planes: np.ndarray):
-    """JVM-side bucket id: sum of sign bits of the projections onto the
-    plane matrix (shipped as array literals — no Python in the hot path)."""
-    bits = []
-    for p in range(len(planes)):
-        lit = F.array(*[F.lit(float(x)) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(F.col(vec), lit, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def lsh_candidates(
     corpus: DataFrame,
     queries: DataFrame,
@@ -185,7 +169,8 @@ def lsh_candidates(
     entries per vector — the classic LSH storage cost); the join is
     bucket-local on (table, bucket), and a pair colliding in several
     tables is deduped before scoring so the expensive cosine runs once
-    per pair.  All ids/masks are literals; everything stays JVM-side."""
+    per pair.  Bucket ids come from one GEMM per Arrow batch; table ids and
+    probe masks are literals."""
     from itertools import combinations
 
     masks = [0] + [
@@ -194,53 +179,39 @@ def lsh_candidates(
         for bits in combinations(range(n_planes), r)
     ]
 
-    if n_tables * n_planes <= 64:
-        # small plane budget: bucket ids as pure JVM expressions (plane
-        # rows shipped as array literals) — zero Python in the plan, and
-        # bit-stable sequential folds keep historical goldens unchanged
-        per_table = []
-        for t in range(n_tables):
-            planes = _hyperplanes(dim, n_planes, table=t)
-            per_table.append(
-                F.struct(F.lit(t).alias("tbl"), _bucket_expr("v", planes).alias("bkt"))
-            )
-        buckets = F.array(*per_table)
-    else:
-        # large (L, k): hundreds of plane projections per row would blow
-        # up the Catalyst expression tree, so compute all L*k projections
-        # in one Arrow-batched GEMM against the closure-shipped plane
-        # matrix and pack them into per-table bucket ids.  Projections
-        # are quantized to 6 decimals before the sign test — BLAS GEMM
-        # noise is batch-shape-dependent (~1e-16..1e-7), so an unrounded
-        # near-zero projection would flip buckets with the partitioning.
-        from pyspark.sql import types as T
-        from pyspark.sql.functions import pandas_udf
+    # all L*k plane projections in one Arrow-batched GEMM against the
+    # closure-shipped plane matrix, packed into per-table bucket ids.
+    # Projections are quantized to 6 decimals before the sign test — BLAS
+    # GEMM noise is batch-shape-dependent (~1e-16..1e-7), so an unrounded
+    # near-zero projection would flip buckets with the partitioning.
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
 
-        P = np.vstack(
-            [_hyperplanes(dim, n_planes, table=t) for t in range(n_tables)]
-        )  # (L*k, dim)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))  # bit p -> 2^p
+    P = np.vstack(
+        [_hyperplanes(dim, n_planes, table=t) for t in range(n_tables)]
+    )  # (L*k, dim)
+    weights = (1 << np.arange(n_planes, dtype=np.int64))  # bit p -> 2^p
 
-        @pandas_udf(T.ArrayType(T.StructType([
-            T.StructField("tbl", T.IntegerType()),
-            T.StructField("bkt", T.LongType()),
-        ])))
-        def bucket_ids(vecs):
-            import pandas as pd
+    @pandas_udf(T.ArrayType(T.StructType([
+        T.StructField("tbl", T.IntegerType()),
+        T.StructField("bkt", T.LongType()),
+    ])))
+    def bucket_ids(vecs):
+        import pandas as pd
 
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            proj = np.round(V @ P.T, 6)  # (n, L*k)
-            bits = (proj >= 0).reshape(len(V), n_tables, n_planes)
-            bkts = (bits * weights).sum(axis=2)  # (n, L)
-            tbl = np.arange(n_tables, dtype=np.int32)
-            return pd.Series(
-                [
-                    [{"tbl": int(t), "bkt": int(b)} for t, b in zip(tbl, row)]
-                    for row in bkts
-                ]
-            )
+        V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        proj = np.round(V @ P.T, 6)  # (n, L*k)
+        bits = (proj >= 0).reshape(len(V), n_tables, n_planes)
+        bkts = (bits * weights).sum(axis=2)  # (n, L)
+        tbl = np.arange(n_tables, dtype=np.int32)
+        return pd.Series(
+            [
+                [{"tbl": int(t), "bkt": int(b)} for t, b in zip(tbl, row)]
+                for row in bkts
+            ]
+        )
 
-        buckets = bucket_ids(F.col("v"))
+    buckets = bucket_ids(F.col("v"))
 
     c = (
         corpus.select(

@@ -1,12 +1,16 @@
 """The KG-construction pipeline: parse -> link -> symmetric -> canonicalize
--> write, with per-stage checkpointing and resume (SURVEY.md §3.4).
+-> write, with checkpointing and resume (SURVEY.md §3.4).
 
-Each stage materializes to parquet under `out_dir/<stage>/` and records a
-lineage row (stage, partitions, rows, value hash, wall seconds) in
-`out_dir/_lineage/`.  A `_DONE` marker makes the stage skippable: rerunning
-the pipeline after a failure resumes mid-pipeline (north_rule
-resumability), because every stage is a pure function of the previous
-stage's parquet + the deterministic authority tables.
+Stage 1 (parse) is written to parquet under `out_dir/parsed/`; stages
+2-5 are fused into one plan whose only write is `out_dir/graph/` (every
+extra written stage would rewrite the whole triple table).  The
+side tables (errors, dangling, conflicts) are written alongside.  Each
+written stage records a lineage row (stage, partitions, rows, value hash,
+wall seconds) in `out_dir/_lineage/`; the fused stages record their row
+counts there too.  A `_DONE` marker makes a written stage skippable:
+rerunning the pipeline after a failure resumes at parsed + graph + the
+side tables (north_rule resumability), because each is a pure function of
+the parse output + the deterministic authority tables.
 
 Scale notes (100 TB / 1000 executors):
 - stage 1 (parse) is shuffle-free mapInArrow over the Iceberg scan;
@@ -23,56 +27,36 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from xmltoldmigration_spark.kg.model import ADM, BDA, BDO, BDR, RDF_TYPE, XSD
 from xmltoldmigration_spark.kg.parse import parse_src, split_streams
+from xmltoldmigration_spark.operators.connected_components import union_find
 
 N_SUBJECT_BUCKETS = 64
 
 
-def _authority_rep_pairs() -> list[tuple[str, str]]:
+@functools.cache
+def _authority_rep_pairs() -> tuple[tuple[str, str], ...]:
     """(node, representative) pairs for the STATIC authority duplicate
-    clusters, representative = min reachable id (same semantics as
-    operators/connected_components.py), node != comp only.
+    clusters, representative = min reachable id, node != rep only.
 
-    Computed once per process with a driver-side union-find: the input is
-    the shipped cluster CSVs (CommonMigration.java:152-157), fixed at
+    Computed once per process with the driver-side `union_find`: the input
+    is the shipped cluster CSVs (CommonMigration.java:152-157), fixed at
     build time and ~38k pairs — there is nothing distributed about it.
     """
-    global _AUTH_REP_CACHE
-    if _AUTH_REP_CACHE is not None:
-        return _AUTH_REP_CACHE
     from xmltoldmigration_spark.kg.authority import get_authority
 
-    pairs = list(get_authority().clusters.items())
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    nodes = {n for p in pairs for n in p}
-    _AUTH_REP_CACHE = [
-        (n, find(n)) for n in sorted(nodes) if find(n) != n
-    ]
-    return _AUTH_REP_CACHE
-
-
-_AUTH_REP_CACHE: list[tuple[str, str]] | None = None
+    comp = union_find(list(get_authority().clusters.items()))
+    return tuple((n, c) for n, c in sorted(comp.items()) if n != c)
 
 
 class Pipeline:
@@ -97,8 +81,6 @@ class Pipeline:
         # lineage metrics ride along with the write via observe() — row
         # count + order-insensitive content hash (bit_xor of row hashes,
         # partition-order invariant) at zero extra passes
-        from pyspark.sql import Observation
-
         obs = Observation(f"lineage_{name}")
         observed = df.observe(
             obs,
@@ -110,18 +92,15 @@ class Pipeline:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         stats = obs.get
-        written = self.spark.read.parquet(path)
         # per-partition lineage (north_rule): row count per output file read
         # straight from the parquet FOOTERS — no second scan of the data
         # pages (on a cluster the same metadata comes from the FileSystem
         # API / Iceberg manifest; here pyarrow reads each footer locally)
         import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
 
         all_files = sorted(
             p for p in Path(path).rglob("*.parquet") if not p.name.startswith(".")
         )
-        part_files = all_files[:512]
 
         def _footer(p):
             return {"file": p.name, "rows": pq.ParquetFile(p).metadata.num_rows}
@@ -129,13 +108,13 @@ class Pipeline:
         # footer reads are I/O-bound; a small pool keeps this out of the
         # per-stage serial component
         with ThreadPoolExecutor(max_workers=8) as ex:
-            per_file = list(ex.map(_footer, part_files))
+            per_file = list(ex.map(_footer, all_files))
         lineage = {
             "stage": name,
             "rows": stats["rows"],
             "value_hash": str(stats["value_hash"]),
             "wall_s": round(time.time() - t0, 3),
-            "partitions": per_file,
+            "partitions": per_file[:512],
         }
         # side stages submitted concurrently with the main graph write:
         # wall_s is ELAPSED under core-sharing (includes scheduler wait),
@@ -147,20 +126,31 @@ class Pipeline:
         # list keeps the first 512 but the truncation is MARKED (total file
         # count + remainder row sum) so lineage consumers never mistake the
         # sample for the whole write.
-        if len(all_files) > 512:
-            rest = all_files[512:]
-            with ThreadPoolExecutor(max_workers=8) as ex:
-                rest_rows = sum(r["rows"] for r in ex.map(_footer, rest))
+        if len(per_file) > 512:
             lineage["truncated"] = True
-            lineage["n_files_total"] = len(all_files)
-            lineage["rows_in_unlisted_files"] = rest_rows
+            lineage["n_files_total"] = len(per_file)
+            lineage["rows_in_unlisted_files"] = sum(r["rows"] for r in per_file[512:])
         with open(self.out / "_lineage" / f"{name}.json", "w") as f:
             json.dump(lineage, f)
-        (self._stage_dir(name) / "_DONE").touch()
-        return written
+        # the marker carries the written schema (data columns first,
+        # partition columns last — the order a parquet read returns), so
+        # the read-back never infers it: a zero-row write has no files to
+        # infer from
+        parts = set(partition_by or ())
+        schema = T.StructType(
+            [f for f in df.schema if f.name not in parts]
+            + [f for f in df.schema if f.name in parts]
+        )
+        (self._stage_dir(name) / "_DONE").write_text(schema.json())
+        return self._read_stage(name)
 
     def _read_stage(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._stage_dir(name)))
+        d = self._stage_dir(name)
+        schema = (d / "_DONE").read_text()
+        reader = self.spark.read
+        if schema:  # markers written before schemas were recorded are empty
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.parquet(str(d))
 
     def lineage(self) -> list[dict]:
         rows = []
@@ -171,16 +161,14 @@ class Pipeline:
     # ------------------------------------------------------------ stages
 
     def run(self, src: DataFrame, resume: bool = True,
-            materialize: str = "minimal",
             extra_parsed: DataFrame | None = None) -> DataFrame:
-        """materialize='minimal' (default): stages 2-5 fuse into ONE
+        """Stage 1 (parse) is written to parquet; stages 2-5 (link,
+        symmetric completion, canonicalize, final write) fuse into ONE
         write — Catalyst pipelines the narrow joins/dedups, and per-stage
         lineage still lands via observe() points inside the single plan.
-        Materializing every stage ('all') quadruples the I/O on the full
-        triple set, which is the single-node bottleneck (each pass writes
-        the whole table); at cluster scale the same fusion argument holds
-        per-executor.  Resume granularity: parsed + graph ('minimal') or
-        every stage ('all')."""
+        Fused because every extra written stage rewrites the whole
+        triple table, the single-node bottleneck.  Resume granularity:
+        parsed + graph + the side tables (errors, dangling, conflicts)."""
         # stage 1: PARSE (record-local, no shuffle)
         if resume and self._done("parsed"):
             parsed = self._read_stage("parsed")
@@ -205,12 +193,12 @@ class Pipeline:
         # triples — a single column-pruned scan of the parse output —
         # and reuse it in every existence semi/anti-join.  Without this
         # each `.distinct()` re-executed the whole join chain (3 extra
-        # full-chain runs per pipeline).  localCheckpoint materializes
-        # the small list on first use.
+        # full-chain runs per pipeline).  localCheckpoint computes
+        # the small list once, on first use.
         cores = self.spark.sparkContext.defaultParallelism
         # eager ONLY when side-table jobs will actually run CONCURRENTLY
         # with the main graph write (>=4 cores AND at least one side stage
-        # pending): two threads racing to materialize one lazy checkpoint
+        # pending): two threads racing to compute one lazy checkpoint
         # would compute it twice.  On a fully-warm resume (graph + all
         # sides done) nothing consumes `graphs`, so an unconditional eager
         # checkpoint would pay a full distinct-over-parse job per call —
@@ -225,42 +213,8 @@ class Pipeline:
         )
 
         def _run_main() -> DataFrame:
-            if materialize == "all":
-                # stage 2: LINK (J1 runtime redirects + J13 admin
-                # propagation + J14 etext back-links — same chain as the
-                # fused path)
-                if resume and self._done("linked"):
-                    triples = self._read_stage("linked")
-                else:
-                    linked = self._link(streams)
-                    linked = self._propagate_work_admin(linked, streams, graphs)
-                    linked = self._etext_backlinks(linked, streams, graphs)
-                    linked = self._resolve_etext_pages(linked, streams)
-                    triples = self._write_stage("linked", linked)
-                # stage 3: SYMMETRIC COMPLETION (A1)
-                if resume and self._done("completed"):
-                    triples = self._read_stage("completed")
-                else:
-                    triples = self._write_stage(
-                        "completed",
-                        self._complete_symmetric(triples, streams["symmetric"], graphs),
-                    )
-                # stage 4: CANONICALIZE (G1/G2)
-                if resume and self._done("canonical"):
-                    triples = self._read_stage("canonical")
-                else:
-                    triples = self._write_stage("canonical", self._canonicalize(triples))
-                # stage 5: WRITE final graph table
-                if resume and self._done("graph"):
-                    return self._read_stage("graph")
-                return self._write_stage(
-                    "graph",
-                    self._finalize(triples, streams["triples"]),
-                    partition_by=["type_part"],
-                )
             if resume and self._done("graph"):
                 return self._read_stage("graph")
-            from pyspark.sql import Observation
 
             triples = self._link(streams)
             triples = self._propagate_work_admin(triples, streams, graphs)
@@ -277,9 +231,14 @@ class Pipeline:
                 self._finalize(triples, streams["triples"]),
                 partition_by=["type_part"],
             )
+            # the graph is empty iff the completed triples are (dedup and
+            # the left join to roots keep non-empty input non-empty), and
+            # linked is a subset of completed; on an empty chain AQE prunes
+            # the observe() points with the rest of the subtree
+            graph_rows = json.loads((self.out / "_lineage" / "graph.json").read_text())["rows"]
             for name, obs in (("linked", obs_link), ("completed", obs_sym)):
                 with open(self.out / "_lineage" / f"{name}.json", "w") as f:
-                    json.dump({"stage": name, "rows": obs.get["rows"],
+                    json.dump({"stage": name, "rows": obs.get["rows"] if graph_rows else 0,
                                "fused": True}, f)
             return final
 
@@ -310,8 +269,6 @@ class Pipeline:
         side_thunks = [side_builders[s] for s in sides_pending]
 
         if cores >= 4 and side_thunks:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=1 + len(side_thunks)) as ex:
                 f_main = ex.submit(_run_main)
                 f_sides = [ex.submit(t) for t in side_thunks]
@@ -330,10 +287,9 @@ class Pipeline:
         record-locally in the parse stage (MigrationHelpers.sanitizeRID)."""
         triples = streams["triples"]
         redirects = streams["redirects"].dropDuplicates(["old_rid"])
-        bdr = "http://purl.bdrc.io/resource/"
         red = redirects.select(
-            F.concat(F.lit(bdr), "old_rid").alias("_old_iri"),
-            F.concat(F.lit(bdr), "new_rid").alias("_new_iri"),
+            F.concat(F.lit(BDR), "old_rid").alias("_old_iri"),
+            F.concat(F.lit(BDR), "new_rid").alias("_new_iri"),
         )
         # no broadcast hint: redirects are DATA-derived (withdrawn records
         # scale with the corpus, unlike the authority CSVs) — AQE still
@@ -357,7 +313,6 @@ class Pipeline:
         UNFILTERED admin rows — a "||1" payload (no access, ric set)
         still restricts the etext IE; the access-override join only
         cares about rows carrying an access value."""
-        adm = "http://purl.bdrc.io/ontology/admin/"
         admin = (
             streams["contents"]
             .filter(F.col("kind").startswith("workAdmin:"))
@@ -384,12 +339,12 @@ class Pipeline:
         access = admin.filter(F.col("_access") != "").drop("_ric")
         ric_all = admin.filter(F.col("_ric") == "1").select(
             F.col("_ie").alias("graph"),
-            F.concat(F.lit("http://purl.bdrc.io/admindata/"), "_ie").alias("subject"),
-            F.lit(adm + "restrictedInChina").alias("predicate"),
+            F.concat(F.lit(BDA), "_ie").alias("subject"),
+            F.lit(ADM + "restrictedInChina").alias("predicate"),
             F.lit("lit").alias("o_kind"),
             F.lit("true").alias("o_value"),
             F.lit(None).cast("string").alias("o_lang"),
-            F.lit("http://www.w3.org/2001/XMLSchema#boolean").alias("o_datatype"),
+            F.lit(XSD + "boolean").alias("o_datatype"),
         )
         return access, ric_all
 
@@ -400,13 +355,12 @@ class Pipeline:
         (EtextMigration.java:494-499 reads WorkMigration.workAccessMap).
         No broadcast hint anywhere: workAdmin rows are data-derived (one
         per migrated work) — AQE broadcasts when actually small."""
-        adm = "http://purl.bdrc.io/ontology/admin/"
         access, ric_all = self._admin_frames(streams)
         out = (
             triples.join(
                 access,
                 (triples.graph == F.col("_ie"))
-                & (triples.predicate == adm + "access"),
+                & (triples.predicate == ADM + "access"),
                 "left",
             )
             .withColumn(
@@ -424,8 +378,6 @@ class Pipeline:
 
     def _repro_rows(self, streams: dict, graph_prefix: str) -> DataFrame:
         """Candidate J14 back-link triples for one instance-graph prefix."""
-        bdo = "http://purl.bdrc.io/ontology/core/"
-        bdr = "http://purl.bdrc.io/resource/"
         repro = (
             streams["links"]
             .filter(F.col("prop") == "instanceHasReproduction")
@@ -434,11 +386,11 @@ class Pipeline:
         )
         return repro.select(
             F.concat(F.lit(graph_prefix), F.col("work_rid")).alias("graph"),
-            F.concat(F.lit(bdr + graph_prefix), F.col("work_rid")).alias("subject"),
-            F.lit(bdo + "instanceHasReproduction").alias("predicate"),
+            F.concat(F.lit(BDR + graph_prefix), F.col("work_rid")).alias("subject"),
+            F.lit(BDO + "instanceHasReproduction").alias("predicate"),
             F.lit("iri").alias("o_kind"),
             F.concat(
-                F.lit(bdr + "IE"), F.expr("substring(work_rid, 2)")
+                F.lit(BDR + "IE"), F.expr("substring(work_rid, 2)")
             ).alias("o_value"),
             F.lit(None).cast("string").alias("o_lang"),
             F.lit(None).cast("string").alias("o_datatype"),
@@ -509,15 +461,14 @@ class Pipeline:
         distributed join — no record-local foreign-file reads.  Pages
         whose image is absent from the list become ET_GEN error rows via
         _error_sides (java:116-117)."""
-        bdo = "http://purl.bdrc.io/ontology/core/"
         resolved = self._page_join(streams).filter(F.col("seq").isNotNull()).select(
             "graph",
             "subject",
-            F.lit(bdo + "seqNum").alias("predicate"),
+            F.lit(BDO + "seqNum").alias("predicate"),
             F.lit("lit").alias("o_kind"),
             F.col("seq").cast("string").alias("o_value"),
             F.lit(None).cast("string").alias("o_lang"),
-            F.lit("http://www.w3.org/2001/XMLSchema#integer").alias("o_datatype"),
+            F.lit(XSD + "integer").alias("o_datatype"),
         )
         return triples.unionByName(resolved)
 
@@ -569,17 +520,15 @@ class Pipeline:
         """A1: queued inverse edges land in their destination graph iff
         that graph was migrated (the reference only patches existing files,
         MigrationApp.insertMissingSymetricTriples:547-568), then dedup."""
-        bdr = "http://purl.bdrc.io/resource/"
-        bdo = "http://purl.bdrc.io/ontology/core/"
         inverse = (
             symmetric.dropDuplicates(["dest_rid", "prop", "src_rid"])
             .join(graphs, symmetric.dest_rid == graphs.graph, "leftsemi")
             .select(
                 F.col("dest_rid").alias("graph"),
-                F.concat(F.lit(bdr), "dest_rid").alias("subject"),
-                F.concat(F.lit(bdo), "prop").alias("predicate"),
+                F.concat(F.lit(BDR), "dest_rid").alias("subject"),
+                F.concat(F.lit(BDO), "prop").alias("predicate"),
                 F.lit("iri").alias("o_kind"),
-                F.concat(F.lit(bdr), "src_rid").alias("o_value"),
+                F.concat(F.lit(BDR), "src_rid").alias("o_value"),
                 F.lit(None).cast("string").alias("o_lang"),
                 F.lit(None).cast("string").alias("o_datatype"),
             )
@@ -612,12 +561,11 @@ class Pipeline:
             return triples.dropDuplicates(dedup_cols)
         import pandas as pd
 
-        bdr = "http://purl.bdrc.io/resource/"
         # pandas -> Arrow path: one zero-copy batch instead of per-row
         # Py4J conversion of tens of thousands of tuples
         rep = self.spark.createDataFrame(
             pd.DataFrame(
-                [(bdr + n, bdr + c) for n, c in rep_pairs],
+                [(BDR + n, BDR + c) for n, c in rep_pairs],
                 columns=["_n", "_c"],
             )
         )
@@ -638,28 +586,24 @@ class Pipeline:
             .withColumn("o_value", F.coalesce("_c", "o_value"))
             .drop("_n", "_c")
         )
-        return t.dropDuplicates(
-            ["graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"]
-        )
+        return t.dropDuplicates(dedup_cols)
 
     def _finalize(self, triples: DataFrame, parsed_triples: DataFrame) -> DataFrame:
         """Partitioning columns: rdf-type group of the graph's root + a
         hash bucket over subject (the reference's md5 sharding,
         MigrationApp.getDstFileName:133-147).
 
-        Root types come from `parsed_triples` (the materialized parse
+        Root types come from `parsed_triples` (the written parse
         output), not from the fully-chained `triples`: the graph->type
         mapping is fixed at parse time (the reference routes each record
         by its migrated type regardless of later cluster rewrites), and
         reading it from the parquet-backed parse stage means the roots
         subquery is one column-pruned scan instead of a second execution
         of the whole link/complete/canonicalize chain."""
-        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-        bdr = "http://purl.bdrc.io/resource/"
         roots = (
             parsed_triples.filter(
-                (F.col("predicate") == rdf_type)
-                & (F.col("subject") == F.concat(F.lit(bdr), F.col("graph")))
+                (F.col("predicate") == RDF_TYPE)
+                & (F.col("subject") == F.concat(F.lit(BDR), F.col("graph")))
             )
             .groupBy("graph")
             .agg(F.min("o_value").alias("_root_type"))
@@ -708,7 +652,3 @@ class Pipeline:
         )
         return links.join(released, "dst_rid", "left_anti")
 
-
-def run_pipeline(spark: SparkSession, src: DataFrame, out_dir: str, resume: bool = True,
-                 extra_parsed: DataFrame | None = None) -> DataFrame:
-    return Pipeline(spark, out_dir).run(src, resume=resume, extra_parsed=extra_parsed)

@@ -35,12 +35,14 @@ JACCARD_THRESHOLD = 0.8
 # Each shingle is carried as a single xxhash64 LONG over the token triple,
 # never as the ~25-byte joined string: tokens contain no whitespace (they
 # come from a whitespace split), so the (tok_j, tok_j+1, tok_j+2) -> hash
-# map collides only on a 64-bit hash collision (~1e-6 birthday odds even at
-# 5M shingles), and every downstream step — per-doc distinct, the 64-way
-# min-hash signature, the inverted-index join, and the exact-verify
-# equi-join — only ever compares shingles for EQUALITY.  Cuts the dominant
-# shuffle/aggregate byte width ~3x; jaccard counts are unchanged, so the
-# string-based DuckDB oracle still matches value-for-value.
+# map collides only on a 64-bit hash collision, and every downstream step —
+# per-doc distinct, the 64-way min-hash signature, the inverted-index join,
+# and the exact-verify equi-join — only ever compares shingles for
+# EQUALITY.  Equivalence with string shingles is therefore exact at the
+# validated scale factors (the string-based DuckDB oracle matches
+# value-for-value at sf0.001/sf0.01) and holds w.h.p. at 1e9 shingles
+# (birthday odds ~n^2/2^65, about 3% there).  Cuts the dominant
+# shuffle/aggregate byte width ~3x.
 _SHINGLES_EXPR = """
 CASE WHEN size(toks) >= 3 THEN
   transform(sequence(0, size(toks) - 3),
@@ -176,7 +178,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="training-data dedup: MinHash+LSH (shingle->minhash->band->bucket join)",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize shingles once: reused by signature agg, exact-verify (both
+    # compute shingles once: reused by signature agg, exact-verify (both
     # sides) and sizes — without this the scan+shingle runs 4x
     sh = shingle_df(spark, sf_dir).localCheckpoint(eager=False)
     # 64 seeded xxhash64 functions (one JVM long hash each — no string md5

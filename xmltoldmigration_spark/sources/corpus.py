@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import hashlib
 import random
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from xmltoldmigration_spark import REFERENCE_ROOT
+
 SRC_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
-XML_DIR = Path("/root/reference/src/test/xml")
+XML_DIR = REFERENCE_ROOT / "src/test/xml"
 
 _TYPE_DIR = {
     "person": "tbrc-persons",

@@ -63,7 +63,7 @@ def write_graph_table(df: DataFrame, target: str, fmt: str | None = None) -> Non
 
     Iceberg: declarative partition transforms + atomic snapshot commit.
     Parquet fallback: directory partitioning on type_part (the
-    subject_bucket column is already materialized by _finalize, so
+    subject_bucket column is already computed by _finalize, so
     downstream per-entity reads prune identically).
     """
     spark = df.sparkSession
