@@ -2,9 +2,9 @@
 """Host-speed control probes for the scaling methodology (BENCH.md).
 
 The sandbox VM's effective CPU speed swings 1.5-1.8x across hours (shared
-hypervisor), so every scaling leg (tools/scaling_bench.py) is bracketed by
-a single-core control, and the N-vs-4N ratio is taken from best-of-k legs
-in quiet windows (control ~ its observed floor).  This tool provides:
+hypervisor), so every bench.py run (each scaling leg included) is
+bracketed by a single-core control and followed by a parallel
+memory-streaming control.  This tool provides:
 
   python tools/cpu_control.py            # single-core control (seconds)
   python tools/cpu_control.py --procs 4  # N concurrent controls: hardware's

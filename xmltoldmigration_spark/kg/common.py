@@ -31,11 +31,14 @@ from xmltoldmigration_spark.kg.model import (
     SKOS,
     XSD,
     Emitter,
+    FACET_CONTENT_LOC,
+    FACET_CREATOR,
     FACET_EVENT,
     FACET_IDENTIFIER,
     FACET_LOG_ENTRY,
     FACET_NAME,
     FACET_NOTE,
+    FACET_TITLE,
     RDF_TYPE,
     RecordResult,
     boolean,
@@ -1040,9 +1043,6 @@ def add_descriptions(
 
 # ---------------------------------------------------------------- titles
 
-FACET_TITLE = ("TT", BDR)
-FACET_CREATOR = ("CR", BDR)
-
 _TITLE_DIRECT = frozenset(
     "titlePageTitle fullTitle subtitle runningTitle colophonTitle coverTitle "
     "incipitTitle halfTitle otherTitle spineTitle copyrightPageTitle".split()
@@ -1330,8 +1330,6 @@ def add_agent_as_creator(
 
 
 # ---------------------------------------------------------------- locations
-
-FACET_CONTENT_LOC = ("CL", BDR)
 
 
 def _add_location_int_or_string(ctx: Ctx, em: Emitter, main: str, loc: str,

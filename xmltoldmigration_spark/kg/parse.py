@@ -88,13 +88,6 @@ def _parse_batches(batches):
       the tuple list -> pa.array), skipping the tuple-list -> pandas
       object DataFrame -> Arrow re-conversion round trip.
     """
-    # executor-side workers don't inherit the driver's sys.path mutations;
-    # mapInArrow closures are cloudpickled by value, so this nested-module
-    # import pattern keeps the package importable on any worker
-    import sys
-
-    if _REPO_PATH not in sys.path:
-        sys.path.insert(0, _REPO_PATH)
     import pyarrow as pa
 
     out: list[tuple] = []

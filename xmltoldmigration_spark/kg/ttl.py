@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import re
 
+from xmltoldmigration_spark.kg.model import RDF, XSD
+
 _TOKEN = re.compile(
     r"""
     (?P<comment>\#[^\n]*)
@@ -80,10 +82,6 @@ def _tokenize(text: str):
             continue
         # 'true'/'false'/'a' can also lex as pname; disambiguate on value
         yield kind, m.group()
-
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 
 class _Parser:

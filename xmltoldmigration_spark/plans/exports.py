@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-BDO = "http://purl.bdrc.io/ontology/core/"
-RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
+from xmltoldmigration_spark.kg.model import BDO, RDFS
+
+RDFS_LABEL = RDFS + "label"
 
 
 def export_title_info(triples: DataFrame) -> DataFrame:

@@ -12,6 +12,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, or every core this process may use if unset/``*``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "xmltoldmigration_spark",
     master: str | None = None,
@@ -20,13 +26,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract) or
-    ``local[*]``. ``shuffle_partitions`` defaults to the local core count so
-    small-scale runs aren't over-parallelized; on a real cluster this should
-    be ~2-3x total executor cores (set via spark-submit conf).
+    ``master`` defaults to ``local[local_cores()]`` (driver contract).
+    ``shuffle_partitions`` defaults to the same core count so small-scale
+    runs aren't over-parallelized; on a real cluster this should be ~2-3x
+    total executor cores (set via spark-submit conf).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
+    cores = local_cores()
+    master = master or f"local[{cores}]"
     # Module-level UDFs (e.g. operators/simhash._simhash_hex) pickle by
     # module REFERENCE, so Python workers must be able to import this
     # package regardless of the driver's cwd.  PYTHONPATH set before the
@@ -40,8 +46,7 @@ def get_spark(
             repo_root + (os.pathsep + pp if pp else "")
         )
     if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = int(cpus) if cpus.isdigit() else min(n, 32)
+        shuffle_partitions = cores
 
     builder = (
         SparkSession.builder.master(master)
