@@ -19,6 +19,11 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from xmltoldmigration_spark.session import export_pythonpath  # noqa: E402
+
+# a session the caller builds after this import gets importable workers
+export_pythonpath()
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""

@@ -46,7 +46,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from xmltoldmigration_spark.plans.pipeline import Pipeline
+    from xmltoldmigration_spark.session import export_pythonpath
 
+    export_pythonpath()
     spark = SparkSession.builder.appName("xmltoldmigration-kg").getOrCreate()
     if args.src:
         from xmltoldmigration_spark.sources.iceberg import load_src

@@ -440,8 +440,11 @@ def test_errors_table_resume_idempotent(spark, tmp_path):
 
 def test_run_pipeline_cli_smoke(tmp_path):
     """jobs/run_pipeline.py end-to-end via subprocess: synthetic corpus +
-    FEMC seed + rKTs dir, resumable output, one JSON result line."""
+    FEMC seed + rKTs dir, resumable output, one JSON result line.  Runs
+    from a foreign cwd with no PYTHONPATH, so the job itself must make
+    the package importable in its Python workers."""
     import json as _json
+    import os
     import subprocess
     import sys
 
@@ -456,13 +459,36 @@ def test_run_pipeline_cli_smoke(tmp_path):
         "--synthetic", "30", "--out", str(out),
         "--femc-seed", "--rkts-dir", str(rkts_dir),
     ]
-    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420,
+                       cwd=tmp_path, env=env)
     assert r.returncode == 0, r.stderr[-2000:]
     payload = _json.loads(r.stdout.strip().splitlines()[-1])
     assert payload["triples"] > 0
     assert any(row["stage"] == "graph" for row in payload["lineage"])
     graphs = {d.name for d in (out / "graph").iterdir() if d.is_dir()}
     assert any(g.startswith("type_part=") for g in graphs)
+
+
+def test_transfer_to_parsed_matches_driver_expansion(spark):
+    """A CSV transfer run through Spark (workers call the transfer's
+    resources_from_line) yields exactly the rows of the same expansion
+    done on the driver."""
+    from collections import Counter
+
+    from xmltoldmigration_spark.kg.common import Ctx
+    from xmltoldmigration_spark.kg.parse import PARSED_COLS, emitter_rows
+    from xmltoldmigration_spark.kg.transfers import femc
+    from xmltoldmigration_spark.kg.transfers.spark import transfer_to_parsed
+
+    line = ["WA1FEMC0001", "km title", "twktt title", "", "", "T1KG123", "LangKm"]
+    df = spark.createDataFrame([tuple(line)], [f"c{i}" for i in range(len(line))])
+    parsed = transfer_to_parsed(df, "femc")
+    assert parsed.columns == PARSED_COLS
+    ctx = Ctx(one_direction=False, prefer_many=False)
+    want = Counter(emitter_rows(femc.resources_from_line(line, ctx), ctx.result.symmetric))
+    assert Counter(tuple(r) for r in parsed.collect()) == want
+    assert sum(want.values()) > 5
 
 
 def test_ivf_topk_recall_and_determinism(spark):

@@ -86,6 +86,41 @@ def test_query_matches_oracle(spark, ddb, name):
     assert not mismatches, f"{name}: first value mismatch {mismatches[:3]}"
 
 
+def test_sessionization_fractional_gap_matches_oracle(spark, tmp_path):
+    """A 1800.753 s gap starts a new session, as the oracle's fractional
+    epoch(ts) says; an exact 1800 s gap does not.  Measuring in whole
+    seconds floors the first gap to 1800 and merges the sessions."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xmltoldmigration_spark.queries import registry
+
+    t0 = dt.datetime(2024, 1, 1)
+    t1 = t0 + dt.timedelta(seconds=1800, microseconds=753_000)
+    t2 = t1 + dt.timedelta(seconds=1800)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array([t0, t1, t2], pa.timestamp("us")),
+            "user_id": pa.array([5, 5, 5], pa.int64()),
+        }),
+        tmp_path / "events.parquet",
+    )
+    spec = registry()["stream_sessionization"]
+    sdf = spec.fn(spark, str(tmp_path))
+    scols = [c.lower() for c in sdf.columns]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    ores = con.execute(spec.oracle)
+    ocols = [d[0].lower() for d in ores.description]
+    want = _canon(ores.fetchall(), ocols)
+    con.close()
+    assert _canon([tuple(r) for r in sdf.collect()], scols) == want
+    assert len(want) == 2
+
+
 @pytest.mark.parametrize("name", [n for n, s in _spec_items() if s.oracle is None])
 def test_rows_only_queries_run(spark, name):
     from xmltoldmigration_spark.queries import registry

@@ -161,3 +161,20 @@ def test_plan_audit_parser():
     assert facts["cartesian"] == 0
     assert facts["pushed_filters"] == 1
     assert facts["scans"] == [{"file": "lineitem.parquet", "read_cols": 2}]
+
+    # single-partition and round-robin exchanges are shuffles too; a
+    # truncated ReadSchema ('... N more fields') still counts every column
+    plan = (
+        "AdaptiveSparkPlan\n"
+        "+- HashAggregate(keys=[], functions=[count(1)])\n"
+        "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=7]\n"
+        "      +- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=6]\n"
+        "         +- FileScan parquet [a#0L,b#1L,... 3 more fields] Batched: true, "
+        "Location: InMemoryFileIndex(1 paths)[file:/data/orders.parquet], "
+        "PartitionFilters: [], PushedFilters: [], "
+        "ReadSchema: struct<a:bigint,b:bigint,... 3 more fields>\n"
+    )
+    facts = audit_plan(plan)
+    assert facts["shuffle_exchanges"] == 2
+    assert facts["broadcast_exchanges"] == 0
+    assert facts["scans"] == [{"file": "orders.parquet", "read_cols": 5}]

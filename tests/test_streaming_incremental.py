@@ -90,9 +90,10 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
     }
 
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    gap = F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), F.col("ts"))
     batch = (
-        ev.withColumn("new_session", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+        ev.withColumn("new_session",
+                      F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0))
         .withColumn("session_id", F.sum("new_session").over(
             w.rowsBetween(W.unboundedPreceding, 0)))
         .groupBy("user_id", "session_id")
@@ -168,13 +169,13 @@ class _FakeState:
 
 
 def _batch_sessionize(events, gap_s=1800):
-    """Pure-Python oracle: events = [(epoch, event_id)] for ONE user ->
+    """Pure-Python oracle: events = [(epoch_us, event_id)] for ONE user ->
     {session_id: (n_events, first_event)} with sessions numbered 1..k in
-    (epoch, event_id) order, split on gap > gap_s."""
+    (epoch_us, event_id) order, split on gap > gap_s."""
     out = {}
     sid, last = 0, None
     for ep, eid in sorted(events):
-        if last is None or ep - last > gap_s:
+        if last is None or ep - last > gap_s * 1_000_000:
             sid += 1
             out[sid] = [0, eid]
         out[sid][0] += 1
@@ -183,21 +184,24 @@ def _batch_sessionize(events, gap_s=1800):
     return {k: tuple(v) for k, v in out.items()}
 
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(
-        st.tuples(st.integers(0, 50_000), st.integers(0, 1_000_000)),
+        st.tuples(st.integers(0, 50_000_000_000), st.integers(0, 1_000_000)),
         min_size=1,
         max_size=60,
         unique_by=lambda t: t[1],
     ),
-    st.data(),
+    st.lists(st.integers(1, 60), max_size=4),
 )
-def test_stateful_sessionizer_split_invariant(events, data):
+# a 1800.753 s gap opens a session, an exact 1800 s gap does not
+@example([(0, 1), (1_800_753_000, 2), (3_600_753_000, 3)], [])
+@example([(0, 1), (1_800_753_000, 2), (3_600_753_000, 3)], [1, 2])
+def test_stateful_sessionizer_split_invariant(events, cuts):
     """The production applyInPandasWithState group function must produce
     the same final per-session aggregates as the batch oracle no matter
     where the stream is cut into micro-batches (update-mode consumers
@@ -210,16 +214,8 @@ def test_stateful_sessionizer_split_invariant(events, data):
 
     fn = make_sessionize_group(1800)
     ordered = sorted(events)  # stream arrival order = event-time order
-    n_cuts = data.draw(st.integers(0, min(4, len(ordered))))
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(1, len(ordered)), min_size=n_cuts, max_size=n_cuts
-            )
-        )
-    )
     batches, prev = [], 0
-    for c in cuts + [len(ordered)]:
+    for c in sorted(min(c, len(ordered)) for c in cuts) + [len(ordered)]:
         if c > prev:
             batches.append(ordered[prev:c])
             prev = c
@@ -230,7 +226,7 @@ def test_stateful_sessionizer_split_invariant(events, data):
         pdf = pd.DataFrame(
             {
                 "ts": np.array([e[0] for e in batch], dtype="int64").astype(
-                    "datetime64[s]"
+                    "datetime64[us]"
                 ),
                 "event_id": np.array([e[1] for e in batch], dtype="int64"),
             }

@@ -3,7 +3,8 @@
 Walks the full registry at a small scale factor, captures each query's
 physical plan, and extracts the scale-relevant facts:
 
-- shuffle exchange count (every one is a full-data network pass at 100 TB)
+- shuffle exchange count, every partitioning kind (every one is a
+  full-data network pass at 100 TB)
 - broadcast exchange count (fine for dims, a driver OOM for data-derived
   sides — those are listed with their build-side row source)
 - cartesian products / broadcast nested-loop joins (quadratic unless the
@@ -44,17 +45,25 @@ _BNLJ_OK = {
 _SKIP = {"stream_stateful_sessionization"}
 
 
+def _read_cols(schema: str) -> int:
+    """Columns in a ReadSchema struct body.  Plan strings truncate long
+    field lists to '..., ... N more fields', so those N count too."""
+    more = re.search(r"\.\.\. (\d+) more fields", schema)
+    return schema.count(":") + (int(more.group(1)) if more else 0)
+
+
 def audit_plan(plan: str) -> dict:
     return {
-        "shuffle_exchanges": len(re.findall(r"\bExchange hashpartitioning", plan))
-        + len(re.findall(r"\bExchange rangepartitioning", plan)),
+        # every partitioning (hash, range, single, round-robin) is a full
+        # network pass; \b keeps BroadcastExchange out
+        "shuffle_exchanges": len(re.findall(r"\bExchange ", plan)),
         "broadcast_exchanges": plan.count("BroadcastExchange"),
         "cartesian": plan.count("CartesianProduct"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "scans": [
             {
                 "file": (fm.group(1).rsplit("/", 1)[-1] if fm else "?"),
-                "read_cols": (sm.group(1).count(":") if sm else -1),
+                "read_cols": (_read_cols(sm.group(1)) if sm else -1),
             }
             for line in plan.splitlines()
             if "FileScan parquet" in line

@@ -5,7 +5,7 @@ The reference preloads ~30 resource CSVs into static HashMaps
 DataFrames (kg/link.py).  Record-local lookups (sanitizeRID,
 isDisconnected) also need them inside the parse UDF, so this module
 loads them once per executor as plain dicts — the Python equivalent of a
-broadcast variable for a mapInPandas stage.
+broadcast variable for a mapInArrow stage.
 
 Tables are read from the reference's resources directory when present
 (read-only, they are data inputs, not code) and default to empty so the

@@ -20,7 +20,8 @@ downstream stages:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from itertools import islice
 
 from pyspark.sql import DataFrame
 
@@ -28,18 +29,46 @@ PARSED_SCHEMA = (
     "stream string, graph string, subject string, predicate string, "
     "o_kind string, o_value string, o_lang string, o_datatype string"
 )
+PARSED_COLS = PARSED_SCHEMA.replace(" string", "").split(", ")
 
 _CHUNK = 20000
 
 
-_REPO_PATH = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
+def error_row(graph: str, subject: str, etype: str, err) -> tuple:
+    """One `stream='error'` row; `err` is the exception or the message."""
+    msg = f"{type(err).__name__}: {err}" if isinstance(err, BaseException) else err
+    return ("error", graph, subject, etype, None, msg, None, None)
 
 
-_COLS = list(PARSED_SCHEMA.replace(" string", "").split(", "))
+def emitter_rows(emitters, symmetric=()) -> Iterator[tuple]:
+    """Migrated emitters -> `triple` rows; queued inverse edges
+    (dest, prop, src) -> `symmetric` rows."""
+    for em in emitters:
+        for (g, s, p, k, v, lang, dt) in em.rows():
+            yield ("triple", g, s, p, k, v, lang, dt)
+    for (dest, prop, src) in symmetric:
+        yield ("symmetric", dest, dest, prop, None, src, None, None)
 
 
-def _parse_record(path: str, content, out: list) -> None:
-    """Parse ONE record into tagged output tuples appended to `out`.
+def to_batches(rows: Iterable[tuple]) -> Iterator:
+    """Tagged rows -> Arrow string batches of at most _CHUNK rows.
+
+    Rows are pulled lazily and each batch builds its string arrays
+    directly (one zip pass -> pa.array), with no pandas round trip.  A
+    mega-record (outline with 1e4-1e5 nodes, SURVEY §7.3) can emit more
+    rows than _CHUNK on its own, and one oversized Arrow batch is exactly
+    the per-batch memory spike the chunking exists to prevent."""
+    import pyarrow as pa
+
+    rows = iter(rows)
+    while chunk := list(islice(rows, _CHUNK)):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(col, type=pa.string()) for col in zip(*chunk)], names=PARSED_COLS
+        )
+
+
+def _parse_record(path: str, content) -> Iterator[tuple]:
+    """Parse ONE record into tagged output rows.
 
     `content` may be str or bytes — ElementTree accepts both, and the
     Arrow path hands in a zero-decode bytes view of the record."""
@@ -53,85 +82,50 @@ def _parse_record(path: str, content, out: list) -> None:
         rtype = rtype_from_path(path)
         emitters = migrate_record(rtype, content, ctx)
     except Exception as e:  # record-level failure -> error row
-        out.append(("error", rid, rid, "parse", None, f"{type(e).__name__}: {e}", None, None))
+        yield error_row(rid, rid, "parse", e)
         return
     # status was captured during migrate_record — no second parse
-    out.append(("status", rid, rid, None, None, ctx.result.status, None, None))
-    for em in emitters:
-        for (g, s, p, k, v, lang, dt) in em.rows():
-            out.append(("triple", g, s, p, k, v, lang, dt))
-    for (dest, prop, src) in ctx.result.symmetric:
-        out.append(("symmetric", dest, dest, prop, None, src, None, None))
+    yield ("status", rid, rid, None, None, ctx.result.status, None, None)
+    yield from emitter_rows(emitters, ctx.result.symmetric)
     for (etype, erid, sub, prop, msg) in ctx.result.errors:
-        out.append(("error", erid, sub, etype + ":" + (prop or ""), None, msg, None, None))
+        yield error_row(erid, sub, etype + ":" + (prop or ""), msg)
     for (src, prop, dst) in ctx.result.links:
-        out.append(("link", rid, src, prop, None, dst, None, None))
+        yield ("link", rid, src, prop, None, dst, None, None)
     for (kind, payload) in ctx.result.contents:
         if kind == "ridReplacement":
             old, _, new = payload.partition(",")
-            out.append(("redirect", rid, old, None, None, new, None, None))
+            yield ("redirect", rid, old, None, None, new, None, None)
         else:
-            out.append(("content", rid, kind, None, None, payload, None, None))
+            yield ("content", rid, kind, None, None, payload, None, None)
 
 
-def _parse_batches(batches):
-    """Arrow-native batch iterator: pa.RecordBatch in -> pa.RecordBatch out.
-
-    Bandwidth discipline (the 32-wide wall is memory-bound, BENCH.md):
-    - record XML stays in the incoming Arrow buffer until ElementTree
-      needs it — the string column is viewed as binary (zero-copy cast)
-      and each record holds ONE bytes object at a time, parsed and
-      freed before the next, instead of the old mapInPandas shape where
-      the whole batch's contents became resident Python strings inside a
-      pandas object block (plus a utf-8 decode pass per record);
-    - output rows build Arrow string arrays directly (one zip pass over
-      the tuple list -> pa.array), skipping the tuple-list -> pandas
-      object DataFrame -> Arrow re-conversion round trip.
-    """
+def _parse_rows(batches) -> Iterator[tuple]:
     import pyarrow as pa
-
-    out: list[tuple] = []
-
-    def flush():
-        # slice into <=_CHUNK batches: a mega-record (outline with 1e4-1e5
-        # nodes, SURVEY §7.3) can emit more rows than _CHUNK from a single
-        # record, and one oversized Arrow batch is exactly the per-batch
-        # memory spike the chunking exists to prevent
-        nonlocal out
-        while out:
-            chunk, out = out[:_CHUNK], out[_CHUNK:]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, type=pa.string()) for col in zip(*chunk)], names=_COLS
-            )
 
     for rb in batches:
         paths = rb.column(0)
         contents = rb.column(1)
+        # record XML stays in the incoming Arrow buffer until ElementTree
+        # needs it: the string column is viewed as binary (zero-copy cast)
+        # and each record holds ONE bytes object at a time, parsed and
+        # freed before the next
         if pa.types.is_string(contents.type):
-            contents = contents.cast(pa.binary())  # zero-copy view
+            contents = contents.cast(pa.binary())
         elif pa.types.is_large_string(contents.type):
             contents = contents.cast(pa.large_binary())
         for i in range(rb.num_rows):
-            _parse_record(paths[i].as_py(), contents[i].as_py(), out)
-            if len(out) >= _CHUNK:
-                yield from flush()
-    yield from flush()
+            yield from _parse_record(paths[i].as_py(), contents[i].as_py())
+
+
+def _parse_batches(batches):
+    """Arrow-native batch iterator: pa.RecordBatch(path, content) in ->
+    tagged pa.RecordBatch out."""
+    return to_batches(_parse_rows(batches))
 
 
 def parse_src(src: DataFrame) -> DataFrame:
     """src(repo,path,commit,lang,content) -> tagged parse output."""
-    repo = _REPO_PATH
-
-    def run(batches):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from xmltoldmigration_spark.kg.parse import _parse_batches
-
-        return _parse_batches(batches)
-
-    return src.select("path", "content").mapInArrow(run, schema=PARSED_SCHEMA)
+    return src.select("path", "content").mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
 
 
 def split_streams(parsed: DataFrame) -> dict[str, DataFrame]:

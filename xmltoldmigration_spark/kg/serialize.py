@@ -40,44 +40,30 @@ def serialize_row(s: str, p: str, kind: str, value: str, lang, dt) -> str:
     return f"<{s}> <{p}> {obj} ."
 
 
+def _serialize_group(pdf):
+    """One named graph's rows -> (graph, canonical body, sha256)."""
+    import hashlib
+
+    import pandas as pd
+
+    rows = list(pdf.itertuples(index=False))
+    keyed = sorted(
+        ((r.subject, _PRIORITY.get(r.predicate, 9), r.predicate),
+         serialize_row(r.subject, r.predicate, r.o_kind, r.o_value, r.o_lang, r.o_datatype))
+        for r in rows
+    )
+    body = "\n".join(line for _, line in keyed) + "\n"
+    return pd.DataFrame(
+        [(rows[0].graph, body, hashlib.sha256(body.encode("utf-8")).hexdigest())],
+        columns=["graph", "body", "sha256"],
+    )
+
+
 def serialize_graphs(triples: DataFrame) -> DataFrame:
     """graph table -> one row per named graph: canonical text + sha256.
 
     The sha256 column is the per-graph content hash used for diffable
     output and idempotent re-publication (the Spark analog of the
     reference's git-diffable TriG files)."""
-    repo = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
-
-    def run(pdf):
-        import hashlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        import pandas as pd
-
-        from xmltoldmigration_spark.kg.serialize import _PRIORITY, serialize_row
-
-        out = []
-        for graph, g in pdf.groupby("graph"):
-            lines = [
-                serialize_row(r.subject, r.predicate, r.o_kind, r.o_value, r.o_lang, r.o_datatype)
-                for r in g.itertuples(index=False)
-            ]
-            keyed = sorted(
-                zip(
-                    (
-                        (r.subject, _PRIORITY.get(r.predicate, 9), r.predicate)
-                        for r in g.itertuples(index=False)
-                    ),
-                    lines,
-                )
-            )
-            body = "\n".join(line for _, line in keyed) + "\n"
-            out.append(
-                (graph, body, hashlib.sha256(body.encode("utf-8")).hexdigest())
-            )
-        return pd.DataFrame(out, columns=["graph", "body", "sha256"])
-
     cols = ["graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"]
-    return triples.select(*cols).groupBy("graph").applyInPandas(run, SERIALIZED_SCHEMA)
+    return triples.select(*cols).groupBy("graph").applyInPandas(_serialize_group, SERIALIZED_SCHEMA)

@@ -15,7 +15,7 @@ store —
   union + dropDuplicates — no file re-read is needed.
 
 Spark shape: one `spark.read.text(wholetext)` scan over the TTL
-directory, TTL parsing in `mapInPandas` (non-SQL, record-local, zero
+directory, TTL parsing in `mapInArrow` (non-SQL, record-local, zero
 shuffle), output in the tagged parse schema so the rows union into the
 pipeline as a second source exactly like the CSV transfers.  Unreadable
 files degrade to error rows (java:138-141 prints and continues).
@@ -35,7 +35,7 @@ from xmltoldmigration_spark.kg.model import (
     iri,
     lit,
 )
-from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA
+from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA, emitter_rows, error_row, to_batches
 
 # rKTsTransfer.initLists:41-75 (duplicates in the reference list collapse:
 # RidModels is a map keyed by RID)
@@ -47,8 +47,6 @@ EDITION_RIDS = (
     "MW1KG12671", "MW3CN1302", "MW1KG13607", "MW4CZ45313",
     "MW3CN20612", "MW2KG5015", "MW2PD17098", "MW2KG5014", "MW30532",
 )
-
-_REPO_PATH = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
 
 
 def edition_seed_emitters(split_outlines: bool) -> list[Emitter]:
@@ -81,15 +79,13 @@ def triples_for_file(file_name: str, text: str, split_outlines: bool = False):
     is_edition = "_" in rid or base in EDITION_RIDS
     if is_edition and base not in EDITION_RIDS:
         # java:129-131 "rKTs-migration: cannot find <base>"
-        rows.append(("error", base, rid, "rkts",
-                     None, f"cannot find edition {base}", None, None))
+        rows.append(error_row(base, rid, "rkts", f"cannot find edition {base}"))
         return rows
     graph = (("O" + base[2:]) if split_outlines else base) if is_edition else rid
     try:
         triples = parse_ttl(text)
     except Exception as e:  # java:138-141: report and continue
-        rows.append(("error", graph, rid, "rkts",
-                     None, f"{type(e).__name__}: {e}", None, None))
+        rows.append(error_row(graph, rid, "rkts", e))
         return rows
     for (s, p, k, v, lang, dt) in triples:
         rows.append(("triple", graph, s, p, k, v, lang, dt))
@@ -111,43 +107,28 @@ def rkts_parsed(spark: SparkSession, ttl_dir: str,
     """TTL directory -> tagged parse-output rows (kg/parse.py schema)."""
     from pyspark.sql import functions as F
 
-    repo = _REPO_PATH
     src = (
         spark.read.text(f"{ttl_dir.rstrip('/')}/*.ttl", wholetext=True)
         .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
     )
-
-    def run(batches):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        import pandas as pd
-
-        from xmltoldmigration_spark.kg.transfers.rkts import triples_for_file
-
-        cols = list(PARSED_SCHEMA.replace(" string", "").split(", "))
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                out.extend(triples_for_file(path, content, split_outlines))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-    parsed = src.mapInPandas(run, schema=PARSED_SCHEMA)
+    parsed = src.mapInArrow(
+        lambda batches: to_batches(_ttl_rows(batches, split_outlines)),
+        schema=PARSED_SCHEMA,
+    )
     seeds = edition_seed_emitters(split_outlines)
     if seeds:
-        seed_rows = [
-            ("triple", g, s, p, k, v, lang, dt)
-            for em in seeds
-            for (g, s, p, k, v, lang, dt) in em.rows()
-        ]
         # Typed schema, not bare names: seed rows carry None in o_lang /
         # o_datatype on every row, so name-only inference cannot determine
         # their types (PySparkValueError CANNOT_DETERMINE_TYPE).
         parsed = parsed.unionByName(
-            spark.createDataFrame(seed_rows, schema=PARSED_SCHEMA))
+            spark.createDataFrame(list(emitter_rows(seeds)), schema=PARSED_SCHEMA))
     return parsed
+
+
+def _ttl_rows(batches, split_outlines: bool):
+    for rb in batches:
+        for path, text in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+            yield from triples_for_file(path, text, split_outlines)
 
 
 # ---------------------------------------------------------------- test data

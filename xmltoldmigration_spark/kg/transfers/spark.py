@@ -1,7 +1,7 @@
 """Spark wrapper for the CSV transfer pipelines (S5).
 
 A transfer source is just another `src` shape: a CSV DataFrame mapped
-through the same record-local emitters via mapInPandas, then unioned
+through the same record-local emitters via mapInArrow, then unioned
 into the triple stream before stages 2-5 — the reference's per-source
 `transfer*()` loops (e.g. EAPTransfer.transferEAP:82-107) collapse into
 one extra scan.
@@ -9,11 +9,12 @@ one extra scan.
 
 from __future__ import annotations
 
+import importlib
+
 from pyspark.sql import DataFrame
 
-from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA
-
-_REPO_PATH = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
+from xmltoldmigration_spark.kg.common import Ctx
+from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA, emitter_rows, error_row, to_batches
 
 
 def transfer_to_parsed(csv_df: DataFrame, transfer_name: str,
@@ -23,40 +24,23 @@ def transfer_to_parsed(csv_df: DataFrame, transfer_name: str,
     `transfer_name` is one of eap/cudl/gretil/nsi/hodgson; columns of
     `csv_df` must be the positional columns of the source CSV (c0..cN).
     """
-    repo = _REPO_PATH
+    from_line = importlib.import_module(
+        f"xmltoldmigration_spark.kg.transfers.{transfer_name}"
+    ).resources_from_line
+    return csv_df.mapInArrow(
+        lambda batches: to_batches(_transfer_rows(batches, from_line, one_direction)),
+        schema=PARSED_SCHEMA,
+    )
 
-    def run(batches):
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        import importlib
-
-        import pandas as pd
-
-        from xmltoldmigration_spark.kg.common import Ctx
-
-        mod = importlib.import_module(
-            f"xmltoldmigration_spark.kg.transfers.{transfer_name}"
-        )
-        cols = list(PARSED_SCHEMA.replace(" string", "").split(", "))
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                line = [("" if v is None else str(v)) for v in row]
-                ctx = Ctx(one_direction=one_direction, prefer_many=False)
-                try:
-                    emitters = mod.resources_from_line(line, ctx)
-                except Exception as e:
-                    out.append(("error", line[0], line[0], "transfer", None,
-                                f"{type(e).__name__}: {e}", None, None))
-                    continue
-                for em in emitters:
-                    for (g, s, p, k, v, lang, dt) in em.rows():
-                        out.append(("triple", g, s, p, k, v, lang, dt))
-                for (dest, prop, src) in ctx.result.symmetric:
-                    out.append(("symmetric", dest, dest, prop, None, src, None, None))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-    return csv_df.mapInPandas(run, schema=PARSED_SCHEMA)
+def _transfer_rows(batches, from_line, one_direction: bool):
+    for rb in batches:
+        for row in zip(*(col.to_pylist() for col in rb.columns)):
+            line = [("" if v is None else str(v)) for v in row]
+            ctx = Ctx(one_direction=one_direction, prefer_many=False)
+            try:
+                emitters = from_line(line, ctx)
+            except Exception as e:
+                yield error_row(line[0], line[0], "transfer", e)
+                continue
+            yield from emitter_rows(emitters, ctx.result.symmetric)

@@ -20,13 +20,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-# executor python workers don't inherit the driver's sys.path mutations;
-# each mapInPandas closure captures this STRING and bootstraps sys.path
-# itself (same pattern as kg/parse.py) — capturing a helper FUNCTION
-# would be pickled by module reference and defeat the purpose
-_REPO_PATH = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
-
-
 def decode_image(payload: bytes) -> "object":
     """STUB — real impl: PIL.Image.open(io.BytesIO(payload)) -> ndarray."""
     raise NotImplementedError(
@@ -56,15 +49,7 @@ def sample_frames(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """media: DataFrame[doc_id, payload binary, mime_type] ->
     DataFrame[doc_id, frame_idx, frame_sig] (one row per sampled frame)."""
 
-    repo = _REPO_PATH
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from xmltoldmigration_spark.operators.multimodal import fake_decode
-
         for pdf in batches:
             out_ids, out_idx, out_sig = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -105,15 +90,7 @@ def resize_images(media: DataFrame, target_w: int = 16, target_h: int = 16) -> D
     Arrow moves the binary column once per batch; output payload size is
     fixed (target_w*target_h), so downstream partition sizing is exact."""
 
-    repo = _REPO_PATH
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from xmltoldmigration_spark.operators.multimodal import resize_image
-
         for pdf in batches:
             yield pd.DataFrame(
                 {

@@ -59,6 +59,33 @@ def _authority_rep_pairs() -> tuple[tuple[str, str], ...]:
     return tuple((n, c) for n, c in sorted(comp.items()) if n != c)
 
 
+def inverse_edges(symmetric: DataFrame, graphs: DataFrame) -> DataFrame:
+    """A1: queued inverse edges land in their destination graph iff that
+    graph was migrated (the reference only patches existing files,
+    MigrationApp.insertMissingSymetricTriples:547-568)."""
+    return (
+        symmetric.dropDuplicates(["dest_rid", "prop", "src_rid"])
+        .join(graphs, symmetric.dest_rid == graphs.graph, "leftsemi")
+        .select(
+            F.col("dest_rid").alias("graph"),
+            F.concat(F.lit(BDR), "dest_rid").alias("subject"),
+            F.concat(F.lit(BDO), "prop").alias("predicate"),
+            F.lit("iri").alias("o_kind"),
+            F.concat(F.lit(BDR), "src_rid").alias("o_value"),
+            F.lit(None).cast("string").alias("o_lang"),
+            F.lit(None).cast("string").alias("o_datatype"),
+        )
+    )
+
+
+def dangling_links(streams: dict) -> DataFrame:
+    """J3: links to targets that are absent or not released."""
+    released = streams["statuses"].filter(F.col("status") == "released").select(
+        F.col("rid").alias("dst_rid")
+    )
+    return streams["links"].join(released, "dst_rid", "left_anti")
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
@@ -222,7 +249,10 @@ class Pipeline:
             triples = self._resolve_etext_pages(triples, streams)
             obs_link = Observation("linked")
             triples = triples.observe(obs_link, F.count(F.lit(1)).alias("rows"))
-            triples = self._complete_symmetric(triples, streams["symmetric"], graphs)
+            # no dedup here: the single full-row dropDuplicates runs once at
+            # the end of the fused chain (_canonicalize) — one shuffle of
+            # the big table instead of two
+            triples = triples.unionByName(inverse_edges(streams["symmetric"], graphs))
             obs_sym = Observation("completed")
             triples = triples.observe(obs_sym, F.count(F.lit(1)).alias("rows"))
             triples = self._canonicalize(triples)
@@ -262,7 +292,7 @@ class Pipeline:
                 co_scheduled=co,
             ),
             "dangling": lambda: self._write_stage(
-                "dangling", self._dangling(streams), co_scheduled=co),
+                "dangling", dangling_links(streams), co_scheduled=co),
             "conflicts": lambda: self._write_stage(
                 "conflicts", self._imagegroup_conflicts(streams), co_scheduled=co),
         }
@@ -515,29 +545,6 @@ class Pipeline:
             )
         )
 
-    def _complete_symmetric(self, triples: DataFrame, symmetric: DataFrame,
-                            graphs: DataFrame) -> DataFrame:
-        """A1: queued inverse edges land in their destination graph iff
-        that graph was migrated (the reference only patches existing files,
-        MigrationApp.insertMissingSymetricTriples:547-568), then dedup."""
-        inverse = (
-            symmetric.dropDuplicates(["dest_rid", "prop", "src_rid"])
-            .join(graphs, symmetric.dest_rid == graphs.graph, "leftsemi")
-            .select(
-                F.col("dest_rid").alias("graph"),
-                F.concat(F.lit(BDR), "dest_rid").alias("subject"),
-                F.concat(F.lit(BDO), "prop").alias("predicate"),
-                F.lit("iri").alias("o_kind"),
-                F.concat(F.lit(BDR), "src_rid").alias("o_value"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("string").alias("o_datatype"),
-            )
-        )
-        # no dedup here: the single full-row dropDuplicates runs once at
-        # the end of the fused chain (_canonicalize) — one shuffle of the
-        # big table instead of two
-        return triples.unionByName(inverse)
-
     def _canonicalize(self, triples: DataFrame) -> DataFrame:
         """G1/G2: connected components over the duplicate-cluster pair
         lists -> representative rewrite of subject and object columns.
@@ -643,12 +650,3 @@ class Pipeline:
             .filter(F.col("n") > 1)
             .select("imagegroup", F.sort_array("works").alias("works"))
         )
-
-    def _dangling(self, streams: dict) -> DataFrame:
-        """J3: links to targets that are absent or not released."""
-        links = streams["links"]
-        released = streams["statuses"].filter(F.col("status") == "released").select(
-            F.col("rid").alias("dst_rid")
-        )
-        return links.join(released, "dst_rid", "left_anti")
-

@@ -33,7 +33,7 @@ def _src(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "kg_parse_triple_extraction",
     oracle=None,
-    survey_ref="S1/S2 + §3.2 parse stage: XML -> candidate triples via mapInPandas",
+    survey_ref="S1/S2 + §3.2 parse stage: XML -> candidate triples via mapInArrow",
 )
 def kg_parse_triple_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xmltoldmigration_spark.kg.parse import parse_src, split_streams
@@ -54,22 +54,11 @@ def kg_parse_triple_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kg_symmetric_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xmltoldmigration_spark.kg.parse import parse_src, split_streams
+    from xmltoldmigration_spark.plans.pipeline import inverse_edges
 
     streams = split_streams(parse_src(_src(spark, sf_dir)).cache())
-    triples, symmetric = streams["triples"], streams["symmetric"]
-    bdr = "http://purl.bdrc.io/resource/"
-    bdo = "http://purl.bdrc.io/ontology/core/"
-    graphs = triples.select("graph").distinct()
-    inverse = (
-        symmetric.dropDuplicates(["dest_rid", "prop", "src_rid"])
-        .join(graphs, symmetric.dest_rid == graphs.graph, "leftsemi")
-        .select(
-            F.col("dest_rid").alias("graph"),
-            F.concat(F.lit(bdr), "dest_rid").alias("subject"),
-            F.concat(F.lit(bdo), "prop").alias("predicate"),
-            F.concat(F.lit(bdr), "src_rid").alias("o_value"),
-        )
-    )
+    graphs = streams["triples"].select("graph").distinct()
+    inverse = inverse_edges(streams["symmetric"], graphs)
     return inverse.groupBy("predicate").agg(F.count(F.lit(1)).alias("n")).orderBy("predicate")
 
 
@@ -80,14 +69,11 @@ def kg_symmetric_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kg_dangling_link_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xmltoldmigration_spark.kg.parse import parse_src, split_streams
+    from xmltoldmigration_spark.plans.pipeline import dangling_links
 
     streams = split_streams(parse_src(_src(spark, sf_dir)).cache())
-    links = streams["links"]
-    released = streams["statuses"].filter(F.col("status") == "released").select(
-        F.col("rid").alias("dst_rid")
-    )
     return (
-        links.join(released, "dst_rid", "left_anti")
+        dangling_links(streams)
         .groupBy("prop")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("prop")

@@ -65,10 +65,12 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    # whole microseconds, as the oracle's fractional epoch(): whole
+    # seconds would let a 1800.7 s gap continue a session
+    gap = F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), F.col("ts"))
     g = ev.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > 1800 * 1_000_000), F.lit(1)).otherwise(F.lit(0)),
     )
     s = g.withColumn(
         "session_id", F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, 0))

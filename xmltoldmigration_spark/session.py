@@ -18,6 +18,22 @@ def local_cores() -> int:
     return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
 
 
+def export_pythonpath() -> str:
+    """Put the repo root on ``$PYTHONPATH`` and return the new value.
+
+    Python workers import this package by module reference (UDFs and
+    mapInArrow/mapInPandas functions pickle that way), so they must find
+    it whatever the driver's cwd.  Call before the session's JVM starts:
+    local-mode workers inherit the JVM's environment, and
+    ``spark.executorEnv.PYTHONPATH`` carries the value to executors.
+    Under ``spark-submit``, ``--py-files`` ships the package instead."""
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if repo_root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = repo_root + (os.pathsep + pp if pp else "")
+    return os.environ["PYTHONPATH"]
+
+
 def get_spark(
     app_name: str = "xmltoldmigration_spark",
     master: str | None = None,
@@ -33,18 +49,7 @@ def get_spark(
     """
     cores = local_cores()
     master = master or f"local[{cores}]"
-    # Module-level UDFs (e.g. operators/simhash._simhash_hex) pickle by
-    # module REFERENCE, so Python workers must be able to import this
-    # package regardless of the driver's cwd.  PYTHONPATH set before the
-    # JVM spawns reaches local-mode workers; spark.executorEnv covers the
-    # cluster case.  (Nested closures instead capture the path string and
-    # bootstrap sys.path inside — see kg/transfers/rkts.py.)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            repo_root + (os.pathsep + pp if pp else "")
-        )
+    pythonpath = export_pythonpath()
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
@@ -70,7 +75,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -293,16 +293,7 @@ def load_synthetic_src(spark: SparkSession, n: int, seed: int = 42,
     num_partitions = num_partitions or max(sc.defaultParallelism, 8)
     step = (n + num_partitions - 1) // num_partitions
     ranges = [(i, min(i + step, n)) for i in range(0, n, step)]
-    repo = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
-
-    def gen(r):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from xmltoldmigration_spark.sources.corpus import synthetic_rows_partition
-
-        return synthetic_rows_partition(r[0], r[1], seed)
-
-    rdd = sc.parallelize(ranges, len(ranges)).flatMap(gen)
+    rdd = sc.parallelize(ranges, len(ranges)).flatMap(
+        lambda r: synthetic_rows_partition(r[0], r[1], seed)
+    )
     return spark.createDataFrame(rdd, schema=SRC_SCHEMA)

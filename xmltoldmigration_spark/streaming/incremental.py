@@ -1,7 +1,7 @@
 """Incremental KG construction: stream new src records -> triple table.
 
 `readStream` on the src directory (parquet; Iceberg streaming scan in
-production) -> the same mapInPandas parse stage as batch -> append sink.
+production) -> the same mapInArrow parse stage as batch -> append sink.
 The streaming checkpoint gives exactly-once file-level progress, which is
 the streaming twin of the batch pipeline's per-stage lineage markers.
 

@@ -5,8 +5,8 @@ The batch twin (`queries/streamq.py::stream_sessionization`, lag+cumsum
 windows) is oracle-checked; this operator computes the SAME sessions
 over an unbounded stream with explicit per-user state:
 
-    state per user = (last event epoch, current session id,
-                      current session's n_events / first_event)
+    state per user = (last event epoch in microseconds, current session
+                      id, current session's n_events / first_event)
 
 Each micro-batch's rows are sessionized VECTORIZED inside the group
 (sorted epochs -> diff -> gap>30min -> cumsum -> groupby agg; no
@@ -44,9 +44,6 @@ def make_sessionize_group(gap_s: int = SESSION_GAP_S):
     Exposed as a factory so tests can drive the exact production
     function across arbitrary micro-batch splits with a fake GroupState
     (tests/test_streaming_incremental.py split-invariance property).
-    The returned function is still a CLOSURE (cloudpickled by value), so
-    executor python workers need no importable copy of this package —
-    the same worker-bootstrap pattern as kg/parse.py.
     """
 
     def sessionize_group(key, pdf_iter, state):
@@ -56,9 +53,10 @@ def make_sessionize_group(gap_s: int = SESSION_GAP_S):
         user_id = key[0]
         chunks = list(pdf_iter)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        # truncate to whole seconds regardless of the incoming unit
-        # (ns/us), matching the batch twin's unix_timestamp() semantics
-        epochs = rows["ts"].to_numpy().astype("datetime64[s]").astype("int64")
+        # whole microseconds (Spark's timestamp precision) whatever the
+        # incoming unit: truncating to seconds would let a 1800.7 s gap
+        # continue a session
+        epochs = rows["ts"].to_numpy().astype("datetime64[us]").astype("int64")
         event_ids = rows["event_id"].to_numpy()
         # stable (ts, event_id) order without a pandas sort: lexsort is
         # the numpy analog and skips per-group frame reindexing
@@ -74,7 +72,7 @@ def make_sessionize_group(gap_s: int = SESSION_GAP_S):
         prev = np.empty_like(epochs)
         prev[1:] = epochs[:-1]
         prev[0] = last_epoch if last_epoch is not None else np.iinfo("int64").min
-        new_session = (epochs - prev) > gap_s
+        new_session = (epochs - prev) > gap_s * 1_000_000
         if last_epoch is None:
             new_session[0] = True
         sids = sid + np.cumsum(new_session)
