@@ -32,6 +32,19 @@ def fixture_out(spark, tmp_path_factory):
     return out, pipe, final
 
 
+def _synthetic_src(spark):
+    # person, work and place records, no reference data needed
+    return corpus.load_synthetic_src(spark, 300, seed=42)
+
+
+@pytest.fixture(scope="module")
+def synthetic_out(spark, tmp_path_factory):
+    out = tmp_path_factory.mktemp("kgsynth")
+    pipe = Pipeline(spark, str(out))
+    final = pipe.run(_synthetic_src(spark), resume=False)
+    return out, pipe, final
+
+
 @pytest.mark.skipif(not corpus.XML_DIR.exists(), reason="no golden corpus")
 def test_fixture_corpus_parity(spark, fixture_out):
     """Full-pipeline output vs the union of golden triple sets: P/R>=0.95
@@ -57,18 +70,23 @@ def test_fixture_corpus_parity(spark, fixture_out):
     )
 
 
-def test_pipeline_resume(spark, fixture_out):
-    out, pipe, final = fixture_out
+def test_pipeline_resume(spark, synthetic_out):
+    out, pipe, final = synthetic_out
     n1 = final.count()
+    written = ("parsed", "graph", "errors", "dangling", "conflicts")
+    before = {s: (out / "_lineage" / f"{s}.json").read_bytes() for s in written}
     # resume run must reuse every stage (markers present) and agree
     pipe2 = Pipeline(spark, str(out))
-    final2 = pipe2.run(corpus.load_fixture_src(spark), resume=True)
+    final2 = pipe2.run(_synthetic_src(spark), resume=True)
     assert final2.count() == n1
     stages = {row["stage"] for row in pipe2.lineage()}
     assert {"parsed", "linked", "completed", "graph"} <= stages
+    # no stage was rewritten: each write records its own wall_s
+    after = {s: (out / "_lineage" / f"{s}.json").read_bytes() for s in written}
+    assert after == before
 
 
-def test_side_stages_marked_co_scheduled(fixture_out, spark):
+def test_side_stages_marked_co_scheduled(synthetic_out, spark):
     """At >= 4 cores the side tables are submitted concurrently with the
     main graph write, so their lineage wall_s is elapsed-under-sharing —
     the co_scheduled marker must be present (and absent below 4 cores,
@@ -76,7 +94,7 @@ def test_side_stages_marked_co_scheduled(fixture_out, spark):
     don't read it as exclusive stage cost.  The expectation is derived
     from the session's actual parallelism rather than hard-coding the
     conftest master, so lowering the fixture doesn't fail opaquely."""
-    _, pipe, _ = fixture_out
+    _, pipe, _ = synthetic_out
     expect_co = spark.sparkContext.defaultParallelism >= 4
     rows = {r["stage"]: r for r in pipe.lineage()}
     for stage in ("errors", "dangling", "conflicts"):
@@ -99,8 +117,8 @@ def test_lineage_truncation_marked(spark, tmp_path):
     assert listed + row["rows_in_unlisted_files"] == 2000 == row["rows"]
 
 
-def test_partition_layout(fixture_out):
-    out, pipe, final = fixture_out
+def test_partition_layout(synthetic_out):
+    out, pipe, final = synthetic_out
     assert "type_part" in final.columns and "subject_bucket" in final.columns
     parts = {r.type_part for r in final.select("type_part").distinct().collect()}
     assert "Person" in parts and "Place" in parts

@@ -9,6 +9,7 @@ double folds), everything else exactly.
 
 from __future__ import annotations
 
+import json
 import math
 
 import duckdb
@@ -206,10 +207,16 @@ def test_no_quadratic_joins_in_any_plan(spark):
     literal prop-inverse dim (tools/plan_audit.py allowlist).  Plans are
     compiled at sf0.001 — join strategy shape doesn't depend on sf, and
     a strategy flip (e.g. a lost equi-join condition turning a join
-    quadratic) fails here before it ships."""
-    from tools.plan_audit import _BNLJ_OK, _SKIP, audit_plan
+    quadratic) fails here before it ships.
+
+    The same plans must also match the committed `.plan_audit.json`
+    snapshot: shuffle and broadcast counts, pushed filters and each
+    scan's column count, so a new exchange or a lost pushdown fails the
+    suite and not just `git diff`."""
+    from tools.plan_audit import _BNLJ_OK, _SKIP, OUT, audit_plan
     from xmltoldmigration_spark.queries import registry
 
+    snapshot = json.loads(OUT.read_text())["queries"]
     sf = "/root/testdata/sf0.001"
     bad = []
     for name, spec in sorted(registry().items()):
@@ -221,4 +228,27 @@ def test_no_quadratic_joins_in_any_plan(spark):
             bad.append(f"{name}: CartesianProduct")
         if facts["bnlj"] and name not in _BNLJ_OK:
             bad.append(f"{name}: BroadcastNestedLoopJoin outside allowlist")
-    assert not bad, bad
+        bad.extend(_snapshot_diffs(name, facts, snapshot.get(name)))
+    assert not bad, "\n".join(bad)
+
+
+def _gated_facts(facts: dict) -> dict:
+    return {
+        "shuffle_exchanges": facts["shuffle_exchanges"],
+        "broadcast_exchanges": facts["broadcast_exchanges"],
+        "pushed_filters": facts["pushed_filters"],
+        "read_cols": [scan["read_cols"] for scan in facts["scans"]],
+    }
+
+
+def _snapshot_diffs(name: str, facts: dict, snap: dict | None) -> list[str]:
+    """Gated plan facts that differ from the `.plan_audit.json` entry."""
+    regen = "regenerate with `python tools/plan_audit.py` if intended"
+    if snap is None:
+        return [f"{name}: missing from .plan_audit.json; {regen}"]
+    got, want = _gated_facts(facts), _gated_facts(snap)
+    return [
+        f"{name}.{field}: plan {got[field]} != snapshot {want[field]}; {regen}"
+        for field in got
+        if got[field] != want[field]
+    ]

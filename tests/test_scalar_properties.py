@@ -88,99 +88,50 @@ def test_image_list_roundtrip_property(nums):
 
 # ---------------------------------------------------------------- simhash
 
-@given(st.lists(st.text(alphabet="abcdefg ", min_size=0, max_size=30), max_size=20))
-@settings(max_examples=50, deadline=None)
+# every ASCII code point (str.split() whitespace, C0 separators, NUL)
+# plus no-break space, ideographic space and the Tibetan tsheg
+_SIMHASH_ALPHABET = [chr(c) for c in range(128)] + ["\u00a0", "\u3000", "\u0f0b"]
+
+
+@given(st.lists(st.text(alphabet=_SIMHASH_ALPHABET, max_size=80), max_size=40))
+@example(["\x08\r\x08\x00"])
+@example(["h\u00e9llo w\u00f6rld", "plain ascii doc", "\u00a0nbsp separated\u2003em"])
+@settings(max_examples=80, deadline=None)
 def test_simhash_deterministic_and_batch_consistent(texts):
     import pandas as pd
 
-    from xmltoldmigration_spark.operators.simhash import _simhash_values, simhash64
+    from xmltoldmigration_spark.operators.simhash import _simhash_from_texts, simhash64
 
-    s = pd.Series(texts, dtype=object)
-    batch = _simhash_values(s.fillna("").str.split())
+    batch = _simhash_from_texts(pd.Series(texts, dtype=object))
+    assert len(batch) == len(texts)
     for t, v in zip(texts, batch):
         assert simhash64(t) == int(v)
         assert simhash64(t) == simhash64(t)
 
 
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(min_codepoint=33, max_codepoint=126),
-            min_size=1,
-            max_size=40,
-        ),
-        min_size=1,
-        max_size=200,
-    )
-)
-@settings(max_examples=50, deadline=None)
-def test_simhash_byte_hash_matches_pandas(tokens):
-    """_pd_hash_tokens (vectorized siphash24+splitmix64 over a concatenated
-    buffer) must be bit-identical to pandas.util.hash_array on the same
-    token strings — the contract that keeps the dedup_simhash golden
-    fixture unchanged across the byte-domain rewrite."""
-    import numpy as np
+def test_simhash_sub_chunks_match_per_text(monkeypatch):
+    """A 3-token budget splits the batch into several sub-chunks; a doc
+    longer than the budget must form a sub-chunk on its own, and empty
+    docs are skipped, without changing any fingerprint."""
     import pandas as pd
 
-    from xmltoldmigration_spark.operators.simhash import _pd_hash_tokens
+    from xmltoldmigration_spark.operators import simhash
 
-    buf = np.frombuffer((" ".join(tokens) + " ").encode(), dtype=np.uint8)
-    starts, lens, pos = [], [], 0
-    for t in tokens:
-        starts.append(pos)
-        lens.append(len(t))
-        pos += len(t) + 1
-    mine = _pd_hash_tokens(buf, np.array(starts), np.array(lens))
-    ref = pd.util.hash_array(np.array(tokens, dtype=object))
-    assert np.array_equal(mine, ref)
+    texts = ["", "a", "b c", "   ", "d e f g h i j", "", "k l", "m", "n o", None, "p"]
+    expected = [simhash.simhash64(t) for t in texts]
+    chunks = []
+    vote = simhash._vote
 
+    def spy(hashes, lengths):
+        chunks.append(lengths.tolist())
+        return vote(hashes, lengths)
 
-@given(
-    st.lists(
-        st.text(
-            # printable ASCII + every ASCII char str.split() treats as
-            # whitespace (incl. the C0 separators \x1c-\x1f)
-            alphabet=st.characters(min_codepoint=0, max_codepoint=127),
-            min_size=0,
-            max_size=80,
-        ),
-        min_size=0,
-        max_size=40,
-    )
-)
-@example(["\x08\r\x08\x00"])
-@settings(max_examples=80, deadline=None)
-def test_simhash_ascii_path_equals_split_path(texts):
-    """The zero-object byte-domain tokenizer must reproduce str.split()
-    exactly on ASCII input (including runs of mixed whitespace, control
-    chars, empty and whitespace-only docs).  The dispatcher is what runs in
-    production: it sends NUL-bearing batches to the split path, because
-    pandas' object-string hash stops at NUL and the byte-domain hash does
-    not."""
-    import numpy as np
-    import pandas as pd
-
-    from xmltoldmigration_spark.operators.simhash import (
-        _simhash_ascii,
-        _simhash_from_texts,
-        _simhash_values,
-    )
-
-    a = _simhash_from_texts(pd.Series(texts, dtype=object))
-    if not any("\x00" in t for t in texts):
-        assert np.array_equal(a, _simhash_ascii(texts))
-    b = _simhash_values(pd.Series(texts, dtype=object).fillna("").str.split())
-    assert np.array_equal(a, b)
-
-
-def test_simhash_unicode_fallback_routes_to_split_path():
-    import numpy as np
-    import pandas as pd
-
-    from xmltoldmigration_spark.operators.simhash import _simhash_from_texts, _simhash_values
-
-    s = pd.Series(["héllo wörld", "plain ascii doc", " nbsp separated em"])
-    assert np.array_equal(_simhash_from_texts(s), _simhash_values(s.str.split()))
+    monkeypatch.setattr(simhash, "_CHUNK_TOKENS", 3)
+    monkeypatch.setattr(simhash, "_vote", spy)
+    batch = simhash._simhash_from_texts(pd.Series(texts, dtype=object))
+    assert chunks == [[1, 2], [7], [2, 1], [2, 1]]
+    assert [int(v) for v in batch] == expected
+    assert expected[0] == expected[3] == expected[9] == 0
 
 
 def test_simhash_locality():
