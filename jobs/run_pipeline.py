@@ -46,10 +46,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from xmltoldmigration_spark.plans.pipeline import Pipeline
-    from xmltoldmigration_spark.session import export_pythonpath
+    from xmltoldmigration_spark.session import ENGINE_CONF, export_pythonpath
 
     export_pythonpath()
-    spark = SparkSession.builder.appName("xmltoldmigration-kg").getOrCreate()
+    # the engine's settings; master, shuffle width and memory come from
+    # spark-submit
+    spark = (SparkSession.builder.appName("xmltoldmigration-kg")
+             .config(map=ENGINE_CONF).getOrCreate())
     if args.src:
         from xmltoldmigration_spark.sources.iceberg import load_src
 

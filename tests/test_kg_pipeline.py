@@ -265,8 +265,11 @@ def test_mega_record_bounded_batches_and_batch_size_invariance(spark):
     assert max(sizes) <= _CHUNK
 
     # 2. end-to-end through Spark at two Arrow batch sizes: identical output
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+
     def tagged_hash(max_records: int) -> tuple:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(max_records))
+        spark.conf.set(key, str(max_records))
         try:
             df = parse_src(spark.createDataFrame(rows, schema=SRC_SCHEMA))
             agg = df.agg(
@@ -277,7 +280,7 @@ def test_mega_record_bounded_batches_and_batch_size_invariance(spark):
             ).collect()[0]
             return agg["rows"], agg["content_hash"]
         finally:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+            spark.conf.set(key, prev)
 
     small, big = tagged_hash(2), tagged_hash(10_000)
     assert small == big
@@ -486,6 +489,100 @@ def test_run_pipeline_cli_smoke(tmp_path):
     assert any(row["stage"] == "graph" for row in payload["lineage"])
     graphs = {d.name for d in (out / "graph").iterdir() if d.is_dir()}
     assert any(g.startswith("type_part=") for g in graphs)
+
+
+def test_killed_run_resumes_to_same_graph(tmp_path, synthetic_out):
+    """SIGKILL the CLI after the parsed stage is done and before the graph
+    stage is, then rerun it: the rerun resumes from the parsed marker and
+    writes the same graph as an uninterrupted run (the xor value_hash does
+    not depend on partitioning)."""
+    import contextlib
+    import json as _json
+    import os
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    out = tmp_path / "killed"
+    cmd = [sys.executable, f"{repo}/jobs/run_pipeline.py",
+           "--synthetic", "300", "--out", str(out)]
+    parsed_done, graph_done = out / "parsed" / "_DONE", out / "graph" / "_DONE"
+    p = subprocess.Popen(cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                         start_new_session=True)
+    try:
+        deadline = time.monotonic() + 420
+        while not parsed_done.exists():
+            assert p.poll() is None, f"first run exited ({p.returncode}) before parsed was done"
+            assert time.monotonic() < deadline, "parsed stage not done within 420 s"
+            time.sleep(0.02)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(p.pid, signal.SIGKILL)
+        p.wait()
+    if graph_done.exists():
+        pytest.fail("the first run finished its graph stage before the kill "
+                    "landed, so this run did not test a resume")
+    parsed_lineage = (out / "_lineage" / "parsed.json").read_bytes()
+
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420)
+    assert r.returncode == 0, r.stderr[-2000:]
+    # resumed from the marker: the parsed stage was not written again
+    assert (out / "_lineage" / "parsed.json").read_bytes() == parsed_lineage
+
+    def graph_lineage(d):
+        row = _json.loads((d / "_lineage" / "graph.json").read_text())
+        return row["rows"], row["value_hash"]
+
+    assert graph_lineage(out) == graph_lineage(synthetic_out[0])
+
+
+# Two Pipeline.run calls in one session, counting Janino compilations
+# around each; prints the two counts as a JSON list.
+_COMPILE_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from xmltoldmigration_spark.plans.pipeline import Pipeline
+from xmltoldmigration_spark.session import get_spark
+from xmltoldmigration_spark.sources import corpus
+
+spark = get_spark("codegen-probe", master="local[4]", shuffle_partitions=8)
+compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+counts = []
+for i in range(2):
+    src = corpus.load_synthetic_src(spark, 300, seed=42)
+    before = compiled.getCount()
+    Pipeline(spark, f"{sys.argv[2]}/run{i}").run(src, resume=False)
+    counts.append(compiled.getCount() - before)
+print(json.dumps(counts))
+spark.stop()
+"""
+
+
+def test_second_run_reuses_generated_classes(tmp_path):
+    """A repeated kg run compiles less than a fifth of the classes the
+    first run compiles: the session's codegen cache holds the chain's
+    working set of about 146 generated classes.  At Spark's default of
+    100 entries both runs compile about as many (145, then 136).  With
+    the cache sized the second run compiled 6 to 16: AQE can still pick
+    a plan the first run did not, so the bound leaves room for that.
+    Runs in a fresh JVM,
+    because this test session's cache already holds the pipeline's
+    classes from earlier tests, and the cache size is fixed by the first
+    session a JVM builds."""
+    import json as _json
+    import os
+    import subprocess
+    import sys
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "2g"}
+    r = subprocess.run([sys.executable, "-c", _COMPILE_PROBE, repo, str(tmp_path)],
+                       capture_output=True, text=True, timeout=420, cwd=tmp_path, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    first, second = _json.loads(r.stdout.strip().splitlines()[-1])
+    assert second < first / 5, f"compiled {first} classes, then {second}"
 
 
 def test_transfer_to_parsed_matches_driver_expansion(spark):

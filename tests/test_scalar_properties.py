@@ -95,6 +95,7 @@ _SIMHASH_ALPHABET = [chr(c) for c in range(128)] + ["\u00a0", "\u3000", "\u0f0b"
 
 @given(st.lists(st.text(alphabet=_SIMHASH_ALPHABET, max_size=80), max_size=40))
 @example(["\x08\r\x08\x00"])
+@example(["\x00", "\x000"])
 @example(["h\u00e9llo w\u00f6rld", "plain ascii doc", "\u00a0nbsp separated\u2003em"])
 @settings(max_examples=80, deadline=None)
 def test_simhash_deterministic_and_batch_consistent(texts):

@@ -71,7 +71,10 @@ def _simhash_from_texts(texts: "pd.Series") -> np.ndarray:
             dtype=object,
             count=budget,
         )
-        out[docs] = _vote(pd.util.hash_array(flat), lengths[docs])
+        # categorize=False: pandas' factorize compares object strings up to
+        # the first NUL, so "\x00" and "\x000" in one batch would share
+        # a hash; each token is hashed on its own instead (same values)
+        out[docs] = _vote(pd.util.hash_array(flat, categorize=False), lengths[docs])
         start = end
     return out
 

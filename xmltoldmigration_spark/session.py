@@ -34,13 +34,37 @@ def export_pythonpath() -> str:
     return os.environ["PYTHONPATH"]
 
 
+# Settings that hold at any cluster size.  get_spark adds the sized ones
+# (master, shuffle width, driver memory); jobs/run_pipeline.py applies
+# these and leaves sizing to spark-submit.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # mega-records (outlines emit 1e4-1e5 triples) must not blow one
+    # Arrow batch: cap batch size in the parse stage (SURVEY.md §7.3)
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Spark keeps generated classes in an LRU of 100 by default.  One kg
+    # iteration at 5,000 records generates 146 distinct classes and one
+    # pass of the headline queries about 245 (one `bench.py headline`
+    # session runs both).  At 100 each class is evicted before its plan
+    # runs again, so every run pays Janino and C2 for all of them; 1000
+    # holds both working sets.  A static conf: the first session in a
+    # JVM fixes it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
+
+
 def get_spark(
     app_name: str = "xmltoldmigration_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a SparkSession with ``ENGINE_CONF``.
 
     ``master`` defaults to ``local[local_cores()]`` (driver contract).
     ``shuffle_partitions`` defaults to the same core count so small-scale
@@ -53,32 +77,19 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    conf = {
+        **ENGINE_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # AQE can COALESCE shuffle partitions but never split a too-coarse
         # aggregate shuffle: start wide and let it shrink to the advisory
         # size, so a 10x data growth can't spill a fixed partition count
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
             str(max(shuffle_partitions * 8, 64)),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # mega-records (outlines emit 1e4-1e5 triples) must not blow one
-        # Arrow batch: cap batch size in the parse stage (SURVEY.md §7.3)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.executorEnv.PYTHONPATH", pythonpath)
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        "spark.executorEnv.PYTHONPATH": pythonpath,
+        **(extra_conf or {}),
+    }
+    spark = SparkSession.builder.master(master).appName(app_name).config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
