@@ -73,10 +73,10 @@ _SPLIT_KEY = "spark.sql.files.maxPartitionBytes"
 
 def width(cpus: int) -> int:
     """Shuffle partitions, and half the kg source file count, of a session
-    at local[cpus]: sized for the larger of that session and the host
-    (floor 8), so every scaling leg on one host shuffles the same number of
-    partitions and scans the same parquet layout."""
-    return max(cpus, HOST_CPUS, 8)
+    at local[cpus]: sized for the larger of that session and the host, so
+    every scaling leg on one host shuffles the same number of partitions
+    and scans the same parquet layout."""
+    return max(cpus, HOST_CPUS)
 
 
 def run_queries(spark, names: list[str]) -> dict[str, float]:

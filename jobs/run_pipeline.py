@@ -45,6 +45,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from xmltoldmigration_spark.kg.authority import RESOURCES, get_authority
     from xmltoldmigration_spark.plans.pipeline import Pipeline
     from xmltoldmigration_spark.session import ENGINE_CONF, export_pythonpath
 
@@ -68,13 +69,19 @@ def main() -> None:
     else:
         ap.error("one of --src / --synthetic / --fixtures required")
 
+    # the authority tables are an input like the source: loaded once here
+    # and handed to every stage that reads them
+    auth = get_authority()
+    if not any(auth.row_counts().values()):
+        print(f"authority: every table under {RESOURCES} is missing or empty, "
+              "running with an empty authority", file=sys.stderr)
     extra = None
     if args.femc_seed:
         from xmltoldmigration_spark.kg.transfers.femc import WORKS_CSV, femc_seed_parsed
 
         # an optional input like the authority tables: report it, run on
         if WORKS_CSV.exists():
-            extra = femc_seed_parsed(spark)
+            extra = femc_seed_parsed(spark, auth)
         else:
             print(f"--femc-seed: {WORKS_CSV} not found, no FEMC works seeded",
                   file=sys.stderr)
@@ -84,7 +91,7 @@ def main() -> None:
         rk = rkts_parsed(spark, args.rkts_dir, split_outlines=args.split_outlines)
         extra = rk if extra is None else extra.unionByName(rk)
 
-    pipe = Pipeline(spark, args.out)
+    pipe = Pipeline(spark, args.out, auth)
     final = pipe.run(src, resume=not args.no_resume, extra_parsed=extra)
     print(json.dumps({"triples": final.count(), "lineage": pipe.lineage()}))
     spark.stop()

@@ -81,7 +81,7 @@ def test_scaling_legs_run_n_4n_with_one_layout(monkeypatch):
     assert (got["cpus_low"], got["cpus_high"]) == (1, 4)
     assert got["speedup"] == 3.0 and got["scaling_efficiency"] == 0.75
     assert got["stage_scaling_efficiency"] == {"parsed": 0.75, "graph": 0.75}
-    assert bench.width(1) == bench.width(4) == 8
+    assert bench.width(1) == bench.width(4) == bench.HOST_CPUS
 
 
 def test_scaling_refuses_hosts_without_4n(monkeypatch):

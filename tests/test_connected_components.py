@@ -87,21 +87,11 @@ def test_union_find_maps_to_min_id():
     assert union_find([(7, 7), (9, 8)]) == {7: 7, 8: 8, 9: 8}
 
 
-def test_authority_rep_pairs_only_rewritten_nodes(monkeypatch):
-    """_authority_rep_pairs feeds _canonicalize's rewrite join: it must
-    hold only node != representative pairs, representative = min id."""
-    from xmltoldmigration_spark.kg import authority
-    from xmltoldmigration_spark.plans import pipeline
+def test_authority_rep_pairs_only_rewritten_nodes():
+    """_rep_pairs feeds _canonicalize's rewrite join: it must hold only
+    node != representative pairs, representative = min id."""
+    from xmltoldmigration_spark.plans.pipeline import _rep_pairs
 
     clusters = {"WA3": "WA1", "WA2": "WA3", "WA9": "WA8", "WA5": "WA5"}
-    monkeypatch.setattr(
-        authority, "get_authority",
-        lambda test_mode=False: authority.Authority(clusters=clusters),
-    )
-    pipeline._authority_rep_pairs.cache_clear()
-    try:
-        assert pipeline._authority_rep_pairs() == (
-            ("WA2", "WA1"), ("WA3", "WA1"), ("WA9", "WA8"),
-        )
-    finally:
-        pipeline._authority_rep_pairs.cache_clear()
+    assert _rep_pairs(clusters) == (("WA2", "WA1"), ("WA3", "WA1"), ("WA9", "WA8"))
+    assert _rep_pairs({}) == ()

@@ -94,7 +94,7 @@ def test_per_row_sha256_equality():
         from xmltoldmigration_spark.kg.migrators import migrate_record
 
         content = (XML_DIR / f"{name}.xml").read_text(encoding="utf-8")
-        c = Ctx(auth=get_authority(test_mode=True))
+        c = Ctx(auth=get_authority().without_clusters())
         ours = []
         for em in migrate_record(rtype, content, c):
             ours.extend(
@@ -124,7 +124,7 @@ def test_etext_content_nopages_golden():
         encoding="utf-8"
     )
     root = ET.fromstring(xml_path.read_text(encoding="utf-8"))
-    ctx = Ctx(auth=get_authority(test_mode=True))
+    ctx = Ctx(auth=get_authority().without_clusters())
     _, _, content = etext_mod.migrate_one_etext(
         root, ctx,
         is_paginated=False,
@@ -151,7 +151,7 @@ def test_split_items_modes():
         content = (XML_DIR / f"{name}.xml").read_text(encoding="utf-8")
 
         def run(split):
-            ctx = Ctx(auth=get_authority(test_mode=True), split_items=split)
+            ctx = Ctx(auth=get_authority().without_clusters(), split_items=split)
             ems = migrate_record(rtype, content, ctx)
             rows = [(g, s, p, k, v, lang, dt)
                     for em in ems for (g, s, p, k, v, lang, dt) in em.rows()]

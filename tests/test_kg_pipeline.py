@@ -9,7 +9,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from xmltoldmigration_spark.plans.pipeline import Pipeline
+from xmltoldmigration_spark.kg.authority import Authority
+from xmltoldmigration_spark.kg.model import ADM, BDA, BDR
+from xmltoldmigration_spark.plans.pipeline import Pipeline, _rep_pairs
 from xmltoldmigration_spark.sources import corpus
 
 
@@ -260,7 +262,7 @@ def test_mega_record_bounded_batches_and_batch_size_invariance(spark):
         [pa.array([r[1] for r in rows]), pa.array([r[4] for r in rows])],
         names=["path", "content"],
     )
-    sizes = [b.num_rows for b in _parse_batches([rb])]
+    sizes = [b.num_rows for b in _parse_batches([rb], Authority())]
     assert sum(sizes) > _CHUNK  # the mega record alone overflows one chunk
     assert max(sizes) <= _CHUNK
 
@@ -271,7 +273,7 @@ def test_mega_record_bounded_batches_and_batch_size_invariance(spark):
     def tagged_hash(max_records: int) -> tuple:
         spark.conf.set(key, str(max_records))
         try:
-            df = parse_src(spark.createDataFrame(rows, schema=SRC_SCHEMA))
+            df = parse_src(spark.createDataFrame(rows, schema=SRC_SCHEMA), Authority())
             agg = df.agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.expr(
@@ -285,6 +287,8 @@ def test_mega_record_bounded_batches_and_batch_size_invariance(spark):
     small, big = tagged_hash(2), tagged_hash(10_000)
     assert small == big
     assert small[0] > 10_000  # the mega outline really expanded
+    # pinned with the full-scan label lookup: the linear one picks the same labels
+    assert small == (300786, -7034340925717623443)
 
 
 def test_work_admin_propagates_to_etext(spark, tmp_path):
@@ -538,6 +542,120 @@ def test_killed_run_resumes_to_same_graph(tmp_path, synthetic_out):
     assert graph_lineage(out) == graph_lineage(synthetic_out[0])
 
 
+def _withdrawn_person_xml(rid: str, target: str) -> str:
+    return "\n".join([
+        f'<p:person xmlns:p="http://www.tbrc.org/models/person#" RID="{rid}" status="withdrawn">',
+        '    <p:name lang="tibetan" encoding="extendedWylie">bkra shis</p:name>',
+        '    <p:log><entry when="2015-01-10T10:00:00.000Z" who="Gene Smith">'
+        f"withdrawn in favour of {target}</entry></p:log>",
+        "</p:person>",
+    ])
+
+
+# Two absent creators of the 300-record corpus's works (W9X5, W9X6),
+# written as withdrawn records that redirect at run time (J1)
+_WITHDRAWN = {"P9X3830": "P9X1", "P9X3172": "P9X2"}
+
+
+def _authority_corpus(spark):
+    """(src, Authority) over the 300-record synthetic corpus's own RIDs:
+
+    - a chain cluster of works (W9X26 -> W9X25 -> W9X15) and a star of
+      persons (P9X21, P9X22, P9X23 -> P9X20);
+    - one ridReplacements entry: W9X16's absent creator P9X3843 -> P9X3;
+    - one ric RID, P9X40;
+    - two appended withdrawn records, each another record's IRI object."""
+    extra = [("tbrc", f"tbrc-persons/{rid}.xml", "v1", "xml", _withdrawn_person_xml(rid, to))
+             for rid, to in _WITHDRAWN.items()]
+    src = _synthetic_src(spark).unionByName(
+        spark.createDataFrame(extra, schema=corpus.SRC_SCHEMA))
+    auth = Authority(
+        clusters={"W9X26": "W9X25", "W9X25": "W9X15",
+                  "P9X21": "P9X20", "P9X22": "P9X20", "P9X23": "P9X20"},
+        rid_replacements={"P9X3843": "P9X3"},
+        ric={"P9X40"},
+    )
+    return src, auth
+
+
+def test_authority_branches_rewrite_the_graph(spark, tmp_path):
+    """With a non-empty authority the graph chain runs the G1/G2
+    representative rewrite, the J1 redirect join and the record-local
+    ridReplacements/ric lookups; a resume with the same value rewrites the
+    graph to the same hash."""
+    import json as _json
+
+    src, auth = _authority_corpus(spark)
+    out = tmp_path / "auth"
+    final = Pipeline(spark, str(out), auth=auth).run(src, resume=False)
+    rows = final.select("graph", "subject", "predicate", "o_kind", "o_value").collect()
+
+    non_rep = {BDR + n for n, _ in _rep_pairs(auth.clusters)}
+    assert non_rep == {BDR + r for r in ("W9X25", "W9X26", "P9X21", "P9X22", "P9X23")}
+    replaced = {BDR + r for r in auth.rid_replacements}
+    withdrawn = {BDR + r for r in _WITHDRAWN}
+    objects = {r.o_value for r in rows if r.o_kind == "iri"}
+    subjects = {r.subject for r in rows}
+    assert not (subjects | objects) & non_rep
+    assert not objects & (replaced | withdrawn)
+    # a withdrawn record keeps its own graph; nothing else names it
+    assert all(r.graph == r.subject.removeprefix(BDR)
+               for r in rows if r.subject in withdrawn)
+    # the rewrites landed: representatives, the replacement, the redirects
+    assert {BDR + "W9X15", BDR + "P9X20", BDR + "P9X3", BDR + "P9X1", BDR + "P9X2"} <= objects
+    assert any(r.subject == BDA + "P9X40" and r.predicate == ADM + "restrictedInChina"
+               for r in rows)
+
+    def graph_lineage():
+        row = _json.loads((out / "_lineage" / "graph.json").read_text())
+        return row["rows"], row["value_hash"], row["authority_rows"]
+
+    pinned = graph_lineage()
+    assert pinned[:2] == (11078, "-3335409343101988562")
+    assert pinned[2]["clusters"] == 5 and pinned[2]["ric"] == 1
+    (out / "graph" / "_DONE").unlink()
+    Pipeline(spark, str(out), auth=auth).run(src, resume=True)
+    assert graph_lineage() == pinned
+
+
+def test_workers_use_the_authority_they_are_handed(spark):
+    """parse_src and transfer_to_parsed run their migrators on executors
+    with the Authority passed on the driver, not with the tables on disk."""
+    from xmltoldmigration_spark.kg.parse import parse_src
+    from xmltoldmigration_spark.kg.transfers.spark import transfer_to_parsed
+
+    person = "\n".join([
+        '<p:person xmlns:p="http://www.tbrc.org/models/person#" RID="P9XAUTH" status="released">',
+        '    <p:name lang="chinese">中文</p:name>',
+        '    <p:teacherOf pid="P9X5">bkra shis</p:teacherOf>',
+        "</p:person>",
+    ])
+    src = spark.createDataFrame([("tbrc", "tbrc-persons/P9XAUTH.xml", "v1", "xml", person)],
+                                schema=corpus.SRC_SCHEMA)
+    # an EAP line whose instance MWEAP1-1-1 links to its rKTs abstract
+    line = ["r1", "", "EAP1/1/1", "", "", "tib", "Newa", "MDARK1", "note", "", "", "",
+            "title@en", "", "", "K123"]
+    csv_df = spark.createDataFrame([tuple(line)], [f"c{i}" for i in range(len(line))])
+    handed = Authority(rid_replacements={"P9X5": "P9X3", "MWEAP1-1-1": "MWEAP1-1-9"},
+                       trad_chars={"中"})
+
+    def parsed(auth):
+        rows = parse_src(src, auth).collect()
+        # teacherOf queues the inverse edge into the teacher's graph
+        return ({r.subject for r in rows if r.stream == "symmetric"},
+                {r.o_lang for r in rows if r.o_value == "中文"})
+
+    def symmetric_sources(auth):
+        df = transfer_to_parsed(csv_df, "eap", auth=auth)
+        return {r.o_value for r in df.filter(F.col("stream") == "symmetric").collect()}
+
+    assert parsed(handed) == ({"P9X3"}, {"zh-hant"})
+    assert parsed(Authority()) == ({"P9X5"}, {"zh-hans"})
+    # a replaced source RID queues no inverse edge (addSymetricProperty)
+    assert symmetric_sources(handed) == {"WEAP1-1-1"}
+    assert symmetric_sources(Authority()) == {"MWEAP1-1-1", "WEAP1-1-1"}
+
+
 # Two Pipeline.run calls in one session, counting Janino compilations
 # around each; prints the two counts as a JSON list.
 _COMPILE_PROBE = """
@@ -598,9 +716,10 @@ def test_transfer_to_parsed_matches_driver_expansion(spark):
 
     line = ["WA1FEMC0001", "km title", "twktt title", "", "", "T1KG123", "LangKm"]
     df = spark.createDataFrame([tuple(line)], [f"c{i}" for i in range(len(line))])
-    parsed = transfer_to_parsed(df, "femc")
+    auth = Authority()
+    parsed = transfer_to_parsed(df, "femc", auth=auth)
     assert parsed.columns == PARSED_COLS
-    ctx = Ctx(one_direction=False, prefer_many=False)
+    ctx = Ctx(auth=auth, one_direction=False, prefer_many=False)
     want = Counter(emitter_rows(femc.resources_from_line(line, ctx), ctx.result.symmetric))
     assert Counter(tuple(r) for r in parsed.collect()) == want
     assert sum(want.values()) > 5

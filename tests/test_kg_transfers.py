@@ -40,7 +40,7 @@ def test_transfer_parity(fixture):
     mod = importlib.import_module(f"xmltoldmigration_spark.kg.transfers.{mod_name}")
     rows = list(csv.reader(open(TEST_DIR / f"{fixture}.csv", encoding="utf-8")))
     line = rows[line_idx]
-    ctx = Ctx(auth=get_authority(test_mode=True), one_direction=False, prefer_many=False)
+    ctx = Ctx(auth=get_authority().without_clusters(), one_direction=False, prefer_many=False)
     emitters = mod.resources_from_line(line, ctx)
     ours = []
     for em in emitters:
@@ -68,7 +68,7 @@ def test_eapfonds_structure():
     if not src.exists():
         pytest.skip("EAP310.csv not present")
     lines = list(_csv.reader(open(src, encoding="utf-8")))
-    ctx = Ctx(auth=get_authority(test_mode=True), one_direction=False)
+    ctx = Ctx(auth=get_authority().without_clusters(), one_direction=False)
     emitters = eapfonds.resources_from_lines(lines, ctx, simplified=False)
     graphs = [em.graph for em in emitters]
     fonds = eapfonds.group_by_fonds(lines, False)
@@ -97,7 +97,7 @@ def test_femc_works_seed_structure():
         pytest.skip("femc-works.csv not present")
     rows = femc.load_works_csv()
     assert len(rows) > 700
-    ctx = Ctx(auth=get_authority(test_mode=True), one_direction=False)
+    ctx = Ctx(auth=get_authority().without_clusters(), one_direction=False)
     bdo = "http://purl.bdrc.io/ontology/core/"
     adm = "http://purl.bdrc.io/ontology/admin/"
     bdr = "http://purl.bdrc.io/resource/"

@@ -62,7 +62,7 @@ def run_fixture(name: str, rtype: str | None = None):
     content = (XML_DIR / f"{name}.xml").read_text(encoding="utf-8")
     from xmltoldmigration_spark.kg.authority import get_authority
 
-    ctx = Ctx(auth=get_authority(test_mode=True))
+    ctx = Ctx(auth=get_authority().without_clusters())
     emitters = migrate_record(rtype, content, ctx)
     ours = []
     for em in emitters:

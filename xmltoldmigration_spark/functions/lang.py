@@ -12,8 +12,6 @@ from __future__ import annotations
 import re
 import unicodedata
 
-from xmltoldmigration_spark import REFERENCE_ROOT
-
 EWTS_TAG = "bo-x-ewts"
 
 # (lang, encoding) -> BCP-47 tag. "" = attribute absent/empty.
@@ -88,13 +86,11 @@ def is_hani(s: str) -> bool:
     return any("一" <= c <= "鿿" for c in s)
 
 
-def guess_zh_script(s: str) -> str:
+def guess_zh_script(s: str, trad_chars: set) -> str:
     """zh-hans vs zh-hant via the reference's traditional-only char list
-    (tclist.txt, loaded by CommonMigration.getTcList:214-226) with a small
-    built-in fallback set."""
-    from xmltoldmigration_spark.kg.authority import get_authority
-
-    trad_chars = get_authority().trad_chars or _TRAD_ONLY
+    (tclist.txt, loaded by CommonMigration.getTcList:214-226; the
+    authority's `trad_chars`) with a small built-in fallback set."""
+    trad_chars = trad_chars or _TRAD_ONLY
     trad = sum(1 for c in s if c in trad_chars)
     if trad_chars is not _TRAD_ONLY:
         return "zh-hant" if trad > 0 else "zh-hans"
@@ -215,37 +211,3 @@ def guess_lang(src: str) -> str:
     if c >= 0x2E00:
         return "zh"
     return "en"
-
-
-class EwtsFixer:
-    """Per-RID EWTS fix table (ewts-fixes.txt, format RID:::bad:::fixed).
-
-    Loaded lazily from the reference resources dir when present
-    (helpers/EwtsFixer.java:20-45); empty otherwise so the engine runs
-    standalone.
-    """
-
-    _table: dict[str, dict[str, str]] | None = None
-    SOURCE = REFERENCE_ROOT / "src/main/resources/ewts-fixes.txt"
-
-    @classmethod
-    def table(cls) -> dict[str, dict[str, str]]:
-        if cls._table is None:
-            cls._table = {}
-            if cls.SOURCE.exists():
-                with open(cls.SOURCE, encoding="utf-8") as f:
-                    for line in f:
-                        line = line.rstrip("\n")
-                        ci = line.find(":")
-                        if ci < 0:
-                            continue
-                        rid = line[:ci]
-                        data = line[ci + 3 :].split(":::")
-                        if len(data) >= 2:
-                            cls._table.setdefault(rid, {})[data[0]] = data[1]
-        return cls._table
-
-    @classmethod
-    def get_fixed(cls, res_id: str, src: str) -> str | None:
-        short = re.sub(r"_\d\d\d\d$", "", res_id)
-        return cls.table().get(short, {}).get(src)

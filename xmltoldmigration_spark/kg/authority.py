@@ -1,11 +1,13 @@
 """Authority / override side-tables (SURVEY.md §1.1, FIXTURES.md §A.3).
 
 The reference preloads ~30 resource CSVs into static HashMaps
-(MigrationHelpers.java:171-209); at Spark scale these become broadcast
-DataFrames (kg/link.py).  Record-local lookups (sanitizeRID,
-isDisconnected) also need them inside the parse UDF, so this module
-loads them once per executor as plain dicts — the Python equivalent of a
-broadcast variable for a mapInArrow stage.
+(MigrationHelpers.java:171-209) before it migrates anything.  Here they
+are one `Authority` value, an input to the run: `get_authority()` loads
+it once on the driver, `Pipeline` hands it to the parse stage, and the
+mapInArrow function carries it to the executors by value (Spark ships a
+pickled command over 1 MiB as a broadcast).  Record-local lookups
+(sanitizeRID, isDisconnected) read that copy; nothing on a worker reads
+the resource files.
 
 Tables are read from the reference's resources directory when present
 (read-only, they are data inputs, not code) and default to empty so the
@@ -15,6 +17,9 @@ engine runs standalone.
 from __future__ import annotations
 
 import csv
+import dataclasses
+import functools
+import re
 from dataclasses import dataclass, field
 
 from xmltoldmigration_spark import REFERENCE_ROOT
@@ -22,48 +27,55 @@ from xmltoldmigration_spark import REFERENCE_ROOT
 RESOURCES = REFERENCE_ROOT / "src/main/resources"
 
 
-def _csv_map(name: str, key_col: int = 0, val_col: int = 1, skip_header: bool = False):
-    out: dict[str, str] = {}
+def _read(name: str) -> list[str]:
+    """Lines of one resource file; none when it is absent."""
     p = RESOURCES / name
     if not p.exists():
-        return out
+        return []
     with open(p, encoding="utf-8") as f:
-        rows = csv.reader(f)
-        for i, row in enumerate(rows):
-            if skip_header and i == 0:
-                continue
-            if not row or row[0].startswith("#"):
-                continue
-            if len(row) > max(key_col, val_col):
-                out[row[key_col].strip()] = row[val_col].strip()
-    return out
+        return f.readlines()
+
+
+def _csv_rows(name: str, skip_header: bool = False) -> list[list[str]]:
+    rows = csv.reader(_read(name))
+    if skip_header:
+        next(rows, None)
+    return [row for row in rows if row and not row[0].startswith("#")]
+
+
+def _csv_map(name: str, key_col: int = 0, val_col: int = 1, skip_header: bool = False):
+    return {row[key_col].strip(): row[val_col].strip()
+            for row in _csv_rows(name, skip_header) if len(row) > max(key_col, val_col)}
 
 
 def _txt_set(name: str) -> set[str]:
-    p = RESOURCES / name
-    if not p.exists():
-        return set()
-    with open(p, encoding="utf-8") as f:
-        return {ln.strip() for ln in f if ln.strip() and not ln.startswith("#")}
+    return {ln.strip() for ln in _read(name) if ln.strip() and not ln.startswith("#")}
 
 
-def _csv_multimap(name: str, key_col: int = 0, val_col: int = 1):
+def _csv_multimap(name: str) -> dict[str, list[str]]:
     out: dict[str, list[str]] = {}
-    p = RESOURCES / name
-    if not p.exists():
-        return out
-    with open(p, encoding="utf-8") as f:
-        for row in csv.reader(f):
-            if not row or row[0].startswith("#"):
-                continue
-            if len(row) > max(key_col, val_col):
-                out.setdefault(row[key_col].strip(), []).append(row[val_col].strip())
+    for row in _csv_rows(name):
+        if len(row) > 1:
+            out.setdefault(row[0].strip(), []).append(row[1].strip())
+    return out
+
+
+def _ewts_fixes(name: str) -> dict[str, dict[str, str]]:
+    """`RID:::bad:::fixed` lines -> {rid: {bad: fixed}}
+    (helpers/EwtsFixer.java:20-45)."""
+    out: dict[str, dict[str, str]] = {}
+    for line in _read(name):
+        line = line.rstrip("\n")
+        ci = line.find(":")
+        data = line[ci + 3:].split(":::")
+        if ci >= 0 and len(data) >= 2:
+            out.setdefault(line[:ci], {})[data[0]] = data[1]
     return out
 
 
 @dataclass
 class Authority:
-    """All record-local authority lookups (one instance per executor)."""
+    """All record-local authority lookups, loaded once per run."""
 
     rid_replacements: dict = field(default_factory=dict)
     disconnected: set = field(default_factory=set)
@@ -85,6 +97,7 @@ class Authority:
     creator_roles: dict = field(default_factory=dict)  # role key -> R0ER id
     genre_topics: set = field(default_factory=set)  # topic rids tagged workGenre
     trad_chars: set = field(default_factory=set)  # traditional-only CJK chars
+    ewts_fixes: dict = field(default_factory=dict)  # rid -> {bad EWTS: fixed}
 
     _rkts_to_wa: dict | None = None
 
@@ -109,48 +122,51 @@ class Authority:
             return res
         return self.clusters.get(wa)
 
+    def ewts_fix(self, rid: str, src: str) -> str | None:
+        """EwtsFixer.getFixed: the fix of `src` in record `rid` (a volume
+        suffix _NNNN dropped), or None."""
+        return self.ewts_fixes.get(re.sub(r"_\d\d\d\d$", "", rid), {}).get(src)
 
-_AUTHORITY: Authority | None = None
-_AUTHORITY_TEST: Authority | None = None
-
-
-def get_authority(test_mode: bool = False) -> Authority:
-    """test_mode mirrors MigrationTest.init (MigrationTest.java:72-77):
-    the duplicate-cluster maps are loaded by CommonMigration.initClusters,
-    which only MigrationApp.main calls — golden fixtures were produced
-    with those maps EMPTY."""
-    global _AUTHORITY, _AUTHORITY_TEST
-    if test_mode:
-        if _AUTHORITY_TEST is None:
-            full = get_authority(False)
-            import dataclasses
-
-            _AUTHORITY_TEST = dataclasses.replace(
-                full, clusters={}, clusters_manual={}, series_clusters={},
-                instance_clusters={},
-            )
-        return _AUTHORITY_TEST
-    if _AUTHORITY is None:
-        _AUTHORITY = Authority(
-            rid_replacements=_csv_map("ridReplacements.csv"),
-            disconnected=_txt_set("disconnectedRIDs.txt"),
-            ric=_txt_set("rid-ric.txt"),
-            ric_with_outline=_txt_set("ricwithoutline.csv"),
-            tol=_csv_map("tol.csv", key_col=1, val_col=2, skip_header=True),
-            person_traditions=_csv_multimap("person-traditions.csv"),
-            clusters=_csv_map("clusters.csv"),
-            clusters_manual=_csv_map("clusters-manual.csv"),
-            instance_clusters=_csv_map("instance-clusters.csv"),
-            series_clusters=_csv_map("reconcileseries-clustered-inv.csv"),
-            remove_w=_txt_set("femc-removeW.csv"),
-            nok_for_lending=_txt_set("nokforcdl.txt"),
-            copyrighted=_txt_set("mw-copyrighted.csv"),
-            copyright_claimed=_txt_set("mw-copyright-claimed.csv"),
-            copyright_undetermined=_txt_set("mw-copyright-undetermined.csv"),
-            oclc=_csv_map("oclc-ia.csv"),
-            abstract_rkts=_csv_map("abstract-rkts.csv"),
-            creator_roles=_csv_map("creator-migrations.txt"),
-            genre_topics=_txt_set("topics-genres.txt"),
-            trad_chars={c[0] for c in _txt_set("tclist.txt") if c},
+    def without_clusters(self) -> Authority:
+        """Golden mode, as MigrationTest.init (MigrationTest.java:72-77)
+        runs it: the duplicate-cluster maps are loaded by
+        CommonMigration.initClusters, which only MigrationApp.main calls,
+        so the golden fixtures were produced with those maps EMPTY."""
+        return dataclasses.replace(
+            self, clusters={}, clusters_manual={}, series_clusters={},
+            instance_clusters={},
         )
-    return _AUTHORITY
+
+    def row_counts(self) -> dict[str, int]:
+        """Rows per table, for run reports."""
+        return {f.name: len(getattr(self, f.name)) for f in dataclasses.fields(self)
+                if not f.name.startswith("_")}
+
+
+@functools.cache
+def get_authority() -> Authority:
+    """The tables under RESOURCES, read once per process (empty when the
+    reference checkout is absent)."""
+    return Authority(
+        rid_replacements=_csv_map("ridReplacements.csv"),
+        disconnected=_txt_set("disconnectedRIDs.txt"),
+        ric=_txt_set("rid-ric.txt"),
+        ric_with_outline=_txt_set("ricwithoutline.csv"),
+        tol=_csv_map("tol.csv", key_col=1, val_col=2, skip_header=True),
+        person_traditions=_csv_multimap("person-traditions.csv"),
+        clusters=_csv_map("clusters.csv"),
+        clusters_manual=_csv_map("clusters-manual.csv"),
+        instance_clusters=_csv_map("instance-clusters.csv"),
+        series_clusters=_csv_map("reconcileseries-clustered-inv.csv"),
+        remove_w=_txt_set("femc-removeW.csv"),
+        nok_for_lending=_txt_set("nokforcdl.txt"),
+        copyrighted=_txt_set("mw-copyrighted.csv"),
+        copyright_claimed=_txt_set("mw-copyright-claimed.csv"),
+        copyright_undetermined=_txt_set("mw-copyright-undetermined.csv"),
+        oclc=_csv_map("oclc-ia.csv"),
+        abstract_rkts=_csv_map("abstract-rkts.csv"),
+        creator_roles=_csv_map("creator-migrations.txt"),
+        genre_topics=_txt_set("topics-genres.txt"),
+        trad_chars={c[0] for c in _txt_set("tclist.txt") if c},
+        ewts_fixes=_ewts_fixes("ewts-fixes.txt"),
+    )

@@ -17,7 +17,7 @@ from xmltoldmigration_spark.functions import text as T
 # Tibetan block U+0F00..U+0FFF — C-speed membership test for the script
 # sniff in get_literal (a per-char Python genexpr there was ~2 % of parse)
 _TIB_CHAR = re.compile("[ༀ-࿿]")
-from xmltoldmigration_spark.kg.authority import Authority, get_authority
+from xmltoldmigration_spark.kg.authority import Authority
 from xmltoldmigration_spark.kg.model import (
     ADM,
     BDA,
@@ -85,7 +85,9 @@ def normalize_keep(s: str) -> str:
 class Ctx:
     """Per-record migration context: authority tables + side outputs."""
 
-    auth: Authority = field(default_factory=get_authority)
+    # the run's tables, handed in by the caller; a bare Ctx() gets the
+    # empty authority, never a read of the resource files
+    auth: Authority = field(default_factory=Authority)
     result: RecordResult = field(default_factory=RecordResult)
     # per-graph logDate -> logEntry node (same-date merge for I* graphs,
     # CommonMigration.java:1062-1070)
@@ -283,7 +285,7 @@ def get_literal(
             if value.startswith("[") and value.endswith("]"):
                 value = "*" + value[1:-1].strip()
             if L.ewts_has_warnings(value):
-                fixed = L.EwtsFixer.get_fixed(rid, value)
+                fixed = ctx.auth.ewts_fix(rid, value)
                 if fixed is None:
                     if L.is_likely_english(value):
                         tag = "en"
@@ -298,7 +300,8 @@ def get_literal(
             else:
                 value = L.normalize_ewts(value)
     if tag == "zh":
-        tag = L.guess_zh_script(value) if L.is_hani(value) else "zh-latn-pinyin-x-ndia"
+        tag = (L.guess_zh_script(value, ctx.auth.trad_chars) if L.is_hani(value)
+               else "zh-latn-pinyin-x-ndia")
     if tag == "zh-latn-pinyin" and not L.has_pinyin_diacritics(value):
         tag = "zh-latn-pinyin-x-ndia"
     if tag == "en" and value and 0x0F00 <= ord(value[0]) <= 0x0FFF:

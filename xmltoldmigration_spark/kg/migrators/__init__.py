@@ -8,6 +8,7 @@ tests/test_kg_parity.py.
 
 from __future__ import annotations
 
+import functools
 import re
 import xml.etree.ElementTree as ET
 
@@ -34,47 +35,42 @@ TYPE_NS = {
 }
 
 
-_DISPATCH: dict | None = None
-
-
+@functools.cache
 def _dispatch_table() -> dict:
     """Built once per process (the parse UDF calls migrate_record per
     record — a fresh import + dict build per call cost ~3 % of the parse
     stage); imports stay function-local to keep package import light."""
-    global _DISPATCH
-    if _DISPATCH is None:
-        from xmltoldmigration_spark.kg.migrators import (
-            corporation,
-            lineage,
-            office,
-            outline,
-            person,
-            place,
-            etext,
-            imagegroup,
-            product,
-            pubinfo,
-            taxonomy,
-            topic,
-            work,
-        )
+    from xmltoldmigration_spark.kg.migrators import (
+        corporation,
+        lineage,
+        office,
+        outline,
+        person,
+        place,
+        etext,
+        imagegroup,
+        product,
+        pubinfo,
+        taxonomy,
+        topic,
+        work,
+    )
 
-        _DISPATCH = {
-            "person": person.migrate,
-            "topic": topic.migrate,
-            "office": office.migrate,
-            "corporation": corporation.migrate,
-            "place": place.migrate,
-            "lineage": lineage.migrate,
-            "work": work.migrate,
-            "outline": outline.migrate,
-            "product": product.migrate,
-            "pubinfo": pubinfo.migrate,
-            "imagegroup": imagegroup.migrate,
-            "etext": etext.migrate,
-            "taxonomy": taxonomy.migrate,
-        }
-    return _DISPATCH
+    return {
+        "person": person.migrate,
+        "topic": topic.migrate,
+        "office": office.migrate,
+        "corporation": corporation.migrate,
+        "place": place.migrate,
+        "lineage": lineage.migrate,
+        "work": work.migrate,
+        "outline": outline.migrate,
+        "product": product.migrate,
+        "pubinfo": pubinfo.migrate,
+        "imagegroup": imagegroup.migrate,
+        "etext": etext.migrate,
+        "taxonomy": taxonomy.migrate,
+    }
 
 
 def migrate_record(rtype: str, content: str, ctx: Ctx):

@@ -213,9 +213,13 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
     """OutlineMigration.addNode:555-757."""
     state.i += 1
     rid = C.attr(e, "RID").strip()
+    n_used = len(state.used_rid)
     node_rid = get_part_rid(state, rid, work_id)
     a_node_rid = get_part_rid_a(state, rid)
     node = BDR + node_rid
+    # every triple about a new node follows this mark; a node RID minted
+    # twice (repeated legacy RIDs) may have triples before it
+    mark = next(reversed(em.triples), None) if len(state.used_rid) > n_used else None
     value = C.attr(e, "type") or "text"
     if _is_karchak(e):
         value = "tableOfContent"
@@ -265,11 +269,14 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
                  (em_a, node_a) if node_a else None,
                  guess_label=not name_added, outline_mode=True)
 
+    # the node's first prefLabel in insertion order: scan back to the
+    # mark, not the whole outline (that made a record quadratic in nodes)
     label = None
-    for k in em.triples:
+    for k in reversed(em.triples):
+        if k == mark:
+            break
         if k[0] == node and k[1] == SKOS + "prefLabel":
             label = (k[3], k[4])
-            break
 
     loc_vp = C.add_locations(ctx, em, node, e, NS, work_id[1:], legacy_rid, rid,
                              label[0] if label else None)

@@ -67,8 +67,8 @@ def to_batches(rows: Iterable[tuple]) -> Iterator:
         )
 
 
-def _parse_record(path: str, content) -> Iterator[tuple]:
-    """Parse ONE record into tagged output rows.
+def _parse_record(path: str, content, auth) -> Iterator[tuple]:
+    """Parse ONE record into tagged output rows, with the run's Authority.
 
     `content` may be str or bytes — ElementTree accepts both, and the
     Arrow path hands in a zero-decode bytes view of the record."""
@@ -77,7 +77,7 @@ def _parse_record(path: str, content) -> Iterator[tuple]:
     from xmltoldmigration_spark.sources.corpus import rtype_from_path
 
     rid = path.rsplit("/", 1)[-1].removesuffix(".xml")
-    ctx = Ctx(app_mode=True, src_path=path)
+    ctx = Ctx(auth=auth, app_mode=True, src_path=path)
     try:
         rtype = rtype_from_path(path)
         emitters = migrate_record(rtype, content, ctx)
@@ -99,7 +99,7 @@ def _parse_record(path: str, content) -> Iterator[tuple]:
             yield ("content", rid, kind, None, None, payload, None, None)
 
 
-def _parse_rows(batches) -> Iterator[tuple]:
+def _parse_rows(batches, auth) -> Iterator[tuple]:
     import pyarrow as pa
 
     for rb in batches:
@@ -114,18 +114,25 @@ def _parse_rows(batches) -> Iterator[tuple]:
         elif pa.types.is_large_string(contents.type):
             contents = contents.cast(pa.large_binary())
         for i in range(rb.num_rows):
-            yield from _parse_record(paths[i].as_py(), contents[i].as_py())
+            yield from _parse_record(paths[i].as_py(), contents[i].as_py(), auth)
 
 
-def _parse_batches(batches):
+def _parse_batches(batches, auth):
     """Arrow-native batch iterator: pa.RecordBatch(path, content) in ->
     tagged pa.RecordBatch out."""
-    return to_batches(_parse_rows(batches))
+    return to_batches(_parse_rows(batches, auth))
 
 
-def parse_src(src: DataFrame) -> DataFrame:
-    """src(repo,path,commit,lang,content) -> tagged parse output."""
-    return src.select("path", "content").mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
+def parse_src(src: DataFrame, auth=None) -> DataFrame:
+    """src(repo,path,commit,lang,content) -> tagged parse output, migrated
+    with `auth` (default `get_authority()`), which travels in the function."""
+    if auth is None:
+        from xmltoldmigration_spark.kg.authority import get_authority
+
+        auth = get_authority()
+    return src.select("path", "content").mapInArrow(
+        lambda batches: _parse_batches(batches, auth), schema=PARSED_SCHEMA
+    )
 
 
 def split_streams(parsed: DataFrame) -> dict[str, DataFrame]:

@@ -13,8 +13,8 @@ from __future__ import annotations
 import csv
 from pathlib import Path
 
+from xmltoldmigration_spark import REFERENCE_ROOT
 from xmltoldmigration_spark.kg import common as C
-from xmltoldmigration_spark.kg.authority import RESOURCES
 from xmltoldmigration_spark.kg.common import Ctx
 from xmltoldmigration_spark.kg.model import (
     ADM,
@@ -30,7 +30,7 @@ from xmltoldmigration_spark.kg.model import (
     lit,
 )
 
-WORKS_CSV = RESOURCES / "femc-works.csv"
+WORKS_CSV = REFERENCE_ROOT / "src/main/resources/femc-works.csv"
 
 
 def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
@@ -58,10 +58,10 @@ def load_works_csv(path: Path = WORKS_CSV) -> list[list[str]]:
         return [row for row in csv.reader(f) if row]
 
 
-def femc_seed_parsed(spark, path: Path = WORKS_CSV):
-    """femc-works.csv -> tagged parse-output rows (kg/parse.py schema),
-    ready to union ahead of the XML-derived rows like the reference seeds
-    works before the main migration (MigrationApp.java:758)."""
+def femc_seed_parsed(spark, auth, path: Path = WORKS_CSV):
+    """femc-works.csv -> tagged parse-output rows (kg/parse.py schema) under
+    `auth`, ready to union ahead of the XML-derived rows like the reference
+    seeds works before the main migration (MigrationApp.java:758)."""
     from xmltoldmigration_spark.kg.transfers.spark import transfer_to_parsed
 
     rows = load_works_csv(path)
@@ -69,4 +69,4 @@ def femc_seed_parsed(spark, path: Path = WORKS_CSV):
     cols = [f"c{i}" for i in range(width)]
     padded = [tuple((r + [""] * width)[:width]) for r in rows]
     df = spark.createDataFrame(padded, cols)
-    return transfer_to_parsed(df, "femc")
+    return transfer_to_parsed(df, "femc", auth=auth)

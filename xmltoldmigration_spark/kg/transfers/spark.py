@@ -18,26 +18,31 @@ from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA, emitter_rows, error_r
 
 
 def transfer_to_parsed(csv_df: DataFrame, transfer_name: str,
-                       one_direction: bool = False) -> DataFrame:
+                       one_direction: bool = False, auth=None) -> DataFrame:
     """CSV rows -> tagged parse-output rows (same schema as kg/parse.py).
 
-    `transfer_name` is one of eap/cudl/gretil/nsi/hodgson; columns of
+    `transfer_name` is one of eap/cudl/gretil/nsi/hodgson/femc; columns of
     `csv_df` must be the positional columns of the source CSV (c0..cN).
+    `auth` is handled as in `parse_src`.
     """
+    if auth is None:
+        from xmltoldmigration_spark.kg.authority import get_authority
+
+        auth = get_authority()
     from_line = importlib.import_module(
         f"xmltoldmigration_spark.kg.transfers.{transfer_name}"
     ).resources_from_line
     return csv_df.mapInArrow(
-        lambda batches: to_batches(_transfer_rows(batches, from_line, one_direction)),
+        lambda batches: to_batches(_transfer_rows(batches, from_line, one_direction, auth)),
         schema=PARSED_SCHEMA,
     )
 
 
-def _transfer_rows(batches, from_line, one_direction: bool):
+def _transfer_rows(batches, from_line, one_direction: bool, auth):
     for rb in batches:
         for row in zip(*(col.to_pylist() for col in rb.columns)):
             line = [("" if v is None else str(v)) for v in row]
-            ctx = Ctx(one_direction=one_direction, prefer_many=False)
+            ctx = Ctx(auth=auth, one_direction=one_direction, prefer_many=False)
             try:
                 emitters = from_line(line, ctx)
             except Exception as e:

@@ -27,7 +27,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import functools
 import json
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -44,18 +43,15 @@ from xmltoldmigration_spark.operators.connected_components import union_find
 N_SUBJECT_BUCKETS = 64
 
 
-@functools.cache
-def _authority_rep_pairs() -> tuple[tuple[str, str], ...]:
-    """(node, representative) pairs for the STATIC authority duplicate
-    clusters, representative = min reachable id, node != rep only.
+def _rep_pairs(clusters: dict) -> tuple[tuple[str, str], ...]:
+    """(node, representative) pairs for the authority duplicate clusters,
+    representative = min reachable id, node != rep only.
 
-    Computed once per process with the driver-side `union_find`: the input
-    is the shipped cluster CSVs (CommonMigration.java:152-157), fixed at
-    build time and ~38k pairs — there is nothing distributed about it.
+    Computed on the driver with `union_find`: the input is the shipped
+    cluster CSVs (CommonMigration.java:152-157), ~38k pairs — there is
+    nothing distributed about it.
     """
-    from xmltoldmigration_spark.kg.authority import get_authority
-
-    comp = union_find(list(get_authority().clusters.items()))
+    comp = union_find(list(clusters.items()))
     return tuple((n, c) for n, c in sorted(comp.items()) if n != c)
 
 
@@ -87,7 +83,14 @@ def dangling_links(streams: dict) -> DataFrame:
 
 
 class Pipeline:
-    def __init__(self, spark: SparkSession, out_dir: str):
+    def __init__(self, spark: SparkSession, out_dir: str, auth=None):
+        """`auth`: the run's `Authority`, resolved once here on the driver
+        (default `get_authority()`) and handed to every stage that reads it."""
+        if auth is None:
+            from xmltoldmigration_spark.kg.authority import get_authority
+
+            auth = get_authority()
+        self.auth = auth
         self.spark = spark
         self.out = Path(out_dir)
         self.out.mkdir(parents=True, exist_ok=True)
@@ -142,6 +145,9 @@ class Pipeline:
             "value_hash": str(stats["value_hash"]),
             "wall_s": round(time.time() - t0, 3),
             "partitions": per_file[:512],
+            # which authority the run used: numbers from runs with and
+            # without the reference tables are not comparable
+            "authority_rows": self.auth.row_counts(),
         }
         # side stages submitted concurrently with the main graph write:
         # wall_s is ELAPSED under core-sharing (includes scheduler wait),
@@ -200,7 +206,7 @@ class Pipeline:
         if resume and self._done("parsed"):
             parsed = self._read_stage("parsed")
         else:
-            parsed = parse_src(src)
+            parsed = parse_src(src, self.auth)
             # seed graphs from CSV transfer sources (e.g. the FEMC works
             # seed the reference runs ahead of the XML work migration,
             # MigrationApp.java:758) union in before the stage write
@@ -553,17 +559,17 @@ class Pipeline:
         at 100 TB the same plan holds because the rewrite side stays small
         while the triple side never shuffles (two broadcast joins).
 
-        The components themselves come from `_authority_rep_pairs()` — a
-        process-cached pure-Python union-find: the clusters are STATIC
+        The components themselves come from `_rep_pairs(self.auth.clusters)`
+        — a pure-Python union-find on the driver: the clusters are the
         shipped CSVs, so spinning three Spark jobs per pipeline run
         (createDataFrame -> count -> collect, ~1.5 s of serial driver
-        time) to recompute a fixed 38k-entry mapping was pure overhead.
+        time) to compute a 38k-entry mapping was pure overhead.
         The distributed operator (operators/connected_components.py)
         remains the path for data-derived edge sets (G1 query)."""
         dedup_cols = [
             "graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"
         ]
-        rep_pairs = _authority_rep_pairs()
+        rep_pairs = _rep_pairs(self.auth.clusters)
         if not rep_pairs:
             return triples.dropDuplicates(dedup_cols)
         import pandas as pd
