@@ -75,7 +75,7 @@ def test_fixture_corpus_parity(spark, fixture_out):
 def test_pipeline_resume(spark, synthetic_out):
     out, pipe, final = synthetic_out
     n1 = final.count()
-    written = ("parsed", "graph", "errors", "dangling", "conflicts")
+    written = ("parsed", "graph", "errors")
     before = {s: (out / "_lineage" / f"{s}.json").read_bytes() for s in written}
     # resume run must reuse every stage (markers present) and agree
     pipe2 = Pipeline(spark, str(out))
@@ -89,8 +89,8 @@ def test_pipeline_resume(spark, synthetic_out):
 
 
 def test_side_stages_marked_co_scheduled(synthetic_out, spark):
-    """At >= 4 cores the side tables are submitted concurrently with the
-    main graph write, so their lineage wall_s is elapsed-under-sharing —
+    """At >= 4 cores the errors table is submitted concurrently with the
+    main graph write, so its lineage wall_s is elapsed-under-sharing —
     the co_scheduled marker must be present (and absent below 4 cores,
     where the pipeline takes the sequential path) so lineage consumers
     don't read it as exclusive stage cost.  The expectation is derived
@@ -99,9 +99,21 @@ def test_side_stages_marked_co_scheduled(synthetic_out, spark):
     _, pipe, _ = synthetic_out
     expect_co = spark.sparkContext.defaultParallelism >= 4
     rows = {r["stage"]: r for r in pipe.lineage()}
-    for stage in ("errors", "dangling", "conflicts"):
-        assert rows[stage].get("co_scheduled", False) is expect_co, stage
+    assert rows["errors"].get("co_scheduled", False) is expect_co
     assert "co_scheduled" not in rows["graph"]
+
+
+def test_jobs_per_run(spark, tmp_path):
+    """A fresh Pipeline.run on the 300-record corpus submits 23 Spark jobs
+    (28 while dangling links and imagegroup conflicts were side tables of
+    their own), so a change that adds a job fails here.  The DAG
+    scheduler's job-id counter moves when a job is submitted, so unlike a
+    listener-bus count it does not race the job-end events."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    src = _synthetic_src(spark)
+    before = dag.nextJobId()
+    Pipeline(spark, str(tmp_path / "jobs")).run(src, resume=False)
+    assert dag.nextJobId() - before == 23
 
 
 def test_lineage_truncation_marked(spark, tmp_path):
@@ -445,22 +457,26 @@ def test_documents_corpus_is_ascii(spark):
 
 def test_errors_table_resume_idempotent(spark, tmp_path):
     """Join-derived error rows (missing back-link targets, unresolvable
-    page images) must appear in the errors side table even when the
-    triple chain is RESUMED from its markers rather than rebuilt."""
+    page images, dangling links, imagegroup conflicts) must appear in the
+    errors table even when the triple chain is RESUMED from its markers
+    rather than rebuilt."""
     import shutil as _shutil
 
-    src = corpus.load_synthetic_src(spark, 60, num_partitions=2)
+    src = corpus.load_synthetic_src(spark, 60, num_partitions=2).unionByName(
+        _claiming_work_src(spark))
     out = tmp_path / "erridem"
     Pipeline(spark, str(out)).run(src, resume=False)
     fresh = spark.read.parquet(str(out / "errors"))
     fresh_counts = {r["etype"]: r["count"] for r in fresh.groupBy("etype").count().collect()}
     assert "ET_GEN:page" in fresh_counts  # UCB etext with a missing image
+    assert fresh_counts["A4:imagegroup"] == 1
+    assert any(e.startswith("J3:") for e in fresh_counts)
+    fresh_rows = sorted(map(tuple, fresh.collect()))
     # wipe ONLY the errors stage; resume must regenerate it identically
     _shutil.rmtree(out / "errors")
     Pipeline(spark, str(out)).run(src, resume=True)
     again = spark.read.parquet(str(out / "errors"))
-    again_counts = {r["etype"]: r["count"] for r in again.groupBy("etype").count().collect()}
-    assert again_counts == fresh_counts
+    assert sorted(map(tuple, again.collect())) == fresh_rows
 
 
 def test_run_pipeline_cli_smoke(tmp_path):
@@ -552,6 +568,19 @@ def _withdrawn_person_xml(rid: str, target: str) -> str:
     ])
 
 
+def _claiming_work_src(spark):
+    """One work whose only volume claims W9X5's imagegroup I9X5V1: an A4
+    conflict over any synthetic corpus that holds W9X5 (the corpus itself
+    has none at any size)."""
+    xml = "\n".join([
+        '<w:work xmlns:w="http://www.tbrc.org/models/work#" RID="W9XDUP" status="released">',
+        '    <w:volume num="1" imagegroup="I9X5V1"/>',
+        "</w:work>",
+    ])
+    return spark.createDataFrame([("tbrc", "tbrc-works/W9XDUP.xml", "v1", "xml", xml)],
+                                 schema=corpus.SRC_SCHEMA)
+
+
 # Two absent creators of the 300-record corpus's works (W9X5, W9X6),
 # written as withdrawn records that redirect at run time (J1)
 _WITHDRAWN = {"P9X3830": "P9X1", "P9X3172": "P9X2"}
@@ -597,10 +626,15 @@ def test_authority_branches_rewrite_the_graph(spark, tmp_path):
     objects = {r.o_value for r in rows if r.o_kind == "iri"}
     subjects = {r.subject for r in rows}
     assert not (subjects | objects) & non_rep
-    assert not objects & (replaced | withdrawn)
-    # a withdrawn record keeps its own graph; nothing else names it
+    assert not objects & replaced
+    # a withdrawn record keeps its own graph, whose admin node still
+    # names it; nothing outside that graph names it
     assert all(r.graph == r.subject.removeprefix(BDR)
                for r in rows if r.subject in withdrawn)
+    for rid in _WITHDRAWN:
+        assert (rid, BDA + rid, ADM + "adminAbout", "iri", BDR + rid) in rows
+    assert not {r.o_value for r in rows
+                if r.o_kind == "iri" and r.graph not in _WITHDRAWN} & withdrawn
     # the rewrites landed: representatives, the replacement, the redirects
     assert {BDR + "W9X15", BDR + "P9X20", BDR + "P9X3", BDR + "P9X1", BDR + "P9X2"} <= objects
     assert any(r.subject == BDA + "P9X40" and r.predicate == ADM + "restrictedInChina"
@@ -611,11 +645,34 @@ def test_authority_branches_rewrite_the_graph(spark, tmp_path):
         return row["rows"], row["value_hash"], row["authority_rows"]
 
     pinned = graph_lineage()
-    assert pinned[:2] == (11078, "-3335409343101988562")
+    assert pinned[:2] == (11078, "-8435364591771221770")
     assert pinned[2]["clusters"] == 5 and pinned[2]["ric"] == 1
     (out / "graph" / "_DONE").unlink()
     Pipeline(spark, str(out), auth=auth).run(src, resume=True)
     assert graph_lineage() == pinned
+
+
+def test_one_side_table(spark, tmp_path):
+    """Dangling links (J3) and imagegroup conflicts (A4) are rows of the
+    one errors table: the out dir holds no other side table, every
+    dangling link is a J3 row, and the imagegroup two works claim is one
+    A4 row naming both works in sorted order."""
+    from xmltoldmigration_spark.kg.parse import split_streams
+    from xmltoldmigration_spark.plans.pipeline import dangling_links
+
+    src, auth = _authority_corpus(spark)
+    out = tmp_path / "side"
+    pipe = Pipeline(spark, str(out), auth=auth)
+    pipe.run(src.unionByName(_claiming_work_src(spark)), resume=False)
+    assert sorted(p.name for p in out.iterdir()) == ["_lineage", "errors", "graph", "parsed"]
+    errors = pipe._read_stage("errors")
+    j3 = errors.filter(F.col("etype").startswith("J3:")).collect()
+    dangling = dangling_links(split_streams(pipe._read_stage("parsed"))).collect()
+    assert (sorted((r.rid, r.sub_rid, r.etype) for r in j3)
+            == sorted((r.src_rid, r.dst_rid, "J3:" + r.prop) for r in dangling))
+    a4 = errors.filter(F.col("etype") == "A4:imagegroup").collect()
+    assert [(r.rid, r.sub_rid, r.message) for r in a4] == [
+        ("I9X5V1", "I9X5V1", "imagegroup claimed by works W9X5, W9XDUP")]
 
 
 def test_workers_use_the_authority_they_are_handed(spark):

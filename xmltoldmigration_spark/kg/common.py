@@ -93,15 +93,13 @@ class Ctx:
     # CommonMigration.java:1062-1070)
     log_by_date: dict = field(default_factory=dict)
     # cross-record first-wins state (A5/A6/J13); record-local here, the
-    # Spark pipeline reconciles these via groupBy-first / joins (kg/link.py)
+    # Spark pipeline reconciles these via groupBy-first / joins
     series_members_to_works: dict = field(default_factory=dict)
     series_members_to_work_labels: dict = field(default_factory=dict)
     worktopics: dict = field(default_factory=dict)
     etext_instances: dict = field(default_factory=dict)
     work_access: dict = field(default_factory=dict)
-    work_legal: dict = field(default_factory=dict)
     work_ric: dict = field(default_factory=dict)
-    scans_low_quality: dict = field(default_factory=dict)
     work_vol_names: dict = field(default_factory=dict)  # workId -> {volnum: (value, tag)}
     subscriptions: dict = field(default_factory=dict)  # subscriber -> [collection] (J19)
     # SymetricNormalization.normalizeOneDirection flags (java:44-62):

@@ -278,7 +278,7 @@ def migrate_body(
                 # instead of a record-local lookup into another record's
                 # file, emit a pageimg reference row; the pipeline joins
                 # it against the imagegroup's exploded ondisk list
-                # (plans/pipeline.py _resolve_etext_pages)
+                # (plans/pipeline.py _side_joins)
                 dotidx = page_num.rfind(".")
                 m = _ID_P.match(etext_id)
                 if dotidx == -1:

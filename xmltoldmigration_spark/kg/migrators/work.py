@@ -328,7 +328,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
                 value = "AccessFairUse"
             elif value == "restrictedByQuality":
                 value = "AccessFairUse" if "Copyright" in license_value else "AccessOpen"
-                ctx.scans_low_quality[work_id] = True
             elif value == "restrictedInChina":
                 value = "AccessFairUse" if "Copyright" in license_value else "AccessOpen"
                 is_ric = True
@@ -356,7 +355,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
         if C._local(main) in ctx.auth.ric:
             is_ric = True
         ctx.work_access["M" + work_id] = access_uri
-        ctx.work_legal["M" + work_id] = legal_uri
         ctx.work_ric["M" + work_id] = is_ric
         # J13: emitted as a side row so the pipeline can propagate work
         # admin info into etext instances (MigrationApp.moveAdminInfo:152-171)

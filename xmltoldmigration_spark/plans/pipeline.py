@@ -3,14 +3,15 @@
 
 Stage 1 (parse) is written to parquet under `out_dir/parsed/`; stages
 2-5 are fused into one plan whose only write is `out_dir/graph/` (every
-extra written stage would rewrite the whole triple table).  The
-side tables (errors, dangling, conflicts) are written alongside.  Each
-written stage records a lineage row (stage, partitions, rows, value hash,
-wall seconds) in `out_dir/_lineage/`; the fused stages record their row
-counts there too.  A `_DONE` marker makes a written stage skippable:
-rerunning the pipeline after a failure resumes at parsed + graph + the
-side tables (north_rule resumability), because each is a pure function of
-the parse output + the deterministic authority tables.
+extra written stage would rewrite the whole triple table).  The one side
+table, `out_dir/errors/`, is written alongside: parse errors, the ET_GEN
+rows of the side joins, dangling links (J3) and imagegroup conflicts
+(A4).  Each written stage records a lineage row (stage, partitions,
+rows, value hash, wall seconds) in `out_dir/_lineage/`; the fused stages
+record their row counts there too.  A `_DONE` marker makes a written
+stage skippable: rerunning the pipeline after a failure resumes at
+parsed + graph + errors (north_rule resumability), because each is a
+pure function of the parse output + the deterministic authority tables.
 
 Scale notes (100 TB / 1000 executors):
 - stage 1 (parse) is shuffle-free mapInArrow over the Iceberg scan;
@@ -55,6 +56,34 @@ def _rep_pairs(clusters: dict) -> tuple[tuple[str, str], ...]:
     return tuple((n, c) for n, c in sorted(comp.items()) if n != c)
 
 
+TRIPLE_COLS = ["graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"]
+
+
+def _triple(graph, subject, predicate, o_kind, o_value, o_datatype=None) -> list:
+    """Select list of a triple-table row without a language tag; each
+    argument is a Column or a literal."""
+    return [
+        F.lit(graph).alias("graph"),
+        F.lit(subject).alias("subject"),
+        F.lit(predicate).alias("predicate"),
+        F.lit(o_kind).alias("o_kind"),
+        F.lit(o_value).alias("o_value"),
+        F.lit(None).cast("string").alias("o_lang"),
+        F.lit(o_datatype).cast("string").alias("o_datatype"),
+    ]
+
+
+def _error(rid, sub_rid, etype, message) -> list:
+    """Select list of an errors-table row; each argument is a Column or a
+    literal."""
+    return [
+        F.lit(rid).alias("rid"),
+        F.lit(sub_rid).alias("sub_rid"),
+        F.lit(etype).alias("etype"),
+        F.lit(message).alias("message"),
+    ]
+
+
 def inverse_edges(symmetric: DataFrame, graphs: DataFrame) -> DataFrame:
     """A1: queued inverse edges land in their destination graph iff that
     graph was migrated (the reference only patches existing files,
@@ -62,15 +91,13 @@ def inverse_edges(symmetric: DataFrame, graphs: DataFrame) -> DataFrame:
     return (
         symmetric.dropDuplicates(["dest_rid", "prop", "src_rid"])
         .join(graphs, symmetric.dest_rid == graphs.graph, "leftsemi")
-        .select(
-            F.col("dest_rid").alias("graph"),
-            F.concat(F.lit(BDR), "dest_rid").alias("subject"),
-            F.concat(F.lit(BDO), "prop").alias("predicate"),
-            F.lit("iri").alias("o_kind"),
-            F.concat(F.lit(BDR), "src_rid").alias("o_value"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("string").alias("o_datatype"),
-        )
+        .select(*_triple(
+            F.col("dest_rid"),
+            F.concat(F.lit(BDR), "dest_rid"),
+            F.concat(F.lit(BDO), "prop"),
+            "iri",
+            F.concat(F.lit(BDR), "src_rid"),
+        ))
     )
 
 
@@ -149,7 +176,7 @@ class Pipeline:
             # without the reference tables are not comparable
             "authority_rows": self.auth.row_counts(),
         }
-        # side stages submitted concurrently with the main graph write:
+        # the errors stage submitted concurrently with the main graph write:
         # wall_s is ELAPSED under core-sharing (includes scheduler wait),
         # not the stage's exclusive cost — mark it so lineage consumers
         # don't read co-scheduled elapsed time as per-stage work
@@ -201,7 +228,7 @@ class Pipeline:
         lineage still lands via observe() points inside the single plan.
         Fused because every extra written stage rewrites the whole
         triple table, the single-node bottleneck.  Resume granularity:
-        parsed + graph + the side tables (errors, dangling, conflicts)."""
+        parsed + graph + errors."""
         # stage 1: PARSE (record-local, no shuffle)
         if resume and self._done("parsed"):
             parsed = self._read_stage("parsed")
@@ -215,13 +242,12 @@ class Pipeline:
             # partition the tagged union by stream: every downstream
             # stage filters on exactly one stream value, so the filter
             # becomes partition PRUNING — the triple chain reads only
-            # triple files, the error/dangling/conflict side tables read
-            # only their (tiny) streams instead of re-scanning the full
-            # parse output
+            # triple files, the errors table reads only its (tiny)
+            # streams instead of re-scanning the full parse output
             parsed = self._write_stage("parsed", parsed, partition_by=["stream"])
         streams = split_streams(parsed)
-        # the set of migrated graphs is invariant through link/admin/
-        # backlink stages (they only rewrite objects or add rows into
+        # the set of migrated graphs is invariant through the link and
+        # side-join stages (they only rewrite objects or add rows into
         # graphs that already exist), so compute it ONCE from the parsed
         # triples — a single column-pruned scan of the parse output —
         # and reuse it in every existence semi/anti-join.  Without this
@@ -229,30 +255,23 @@ class Pipeline:
         # full-chain runs per pipeline).  localCheckpoint computes
         # the small list once, on first use.
         cores = self.spark.sparkContext.defaultParallelism
-        # eager ONLY when side-table jobs will actually run CONCURRENTLY
-        # with the main graph write (>=4 cores AND at least one side stage
-        # pending): two threads racing to compute one lazy checkpoint
-        # would compute it twice.  On a fully-warm resume (graph + all
-        # sides done) nothing consumes `graphs`, so an unconditional eager
-        # checkpoint would pay a full distinct-over-parse job per call —
-        # measured as the dominant per-query cost of warm kg bench runs.
-        sides_pending = [
-            s for s in ("errors", "dangling", "conflicts")
-            if not (resume and self._done(s))
-        ]
-        graphs = (
-            streams["triples"].select("graph").distinct()
-            .localCheckpoint(eager=cores >= 4 and bool(sides_pending))
-        )
+        # eager ONLY when the errors write will actually run CONCURRENTLY
+        # with the main graph write (>=4 cores AND errors pending): two
+        # threads racing to compute one lazy checkpoint would compute it
+        # twice.  On a fully-warm resume (graph + errors done) nothing
+        # consumes `graphs`, so an unconditional eager checkpoint would
+        # pay a full distinct-over-parse job per call — measured as the
+        # dominant per-query cost of warm kg bench runs.
+        errors_pending = not (resume and self._done("errors"))
+        co = cores >= 4 and errors_pending
+        graphs = streams["triples"].select("graph").distinct().localCheckpoint(eager=co)
 
         def _run_main() -> DataFrame:
             if resume and self._done("graph"):
                 return self._read_stage("graph")
 
-            triples = self._link(streams)
-            triples = self._propagate_work_admin(triples, streams, graphs)
-            triples = self._etext_backlinks(triples, streams, graphs)
-            triples = self._resolve_etext_pages(triples, streams)
+            triples = self._propagate_work_admin(self._link(streams), streams)
+            triples = triples.unionByName(self._side_joins(streams, graphs)[0])
             obs_link = Observation("linked")
             triples = triples.observe(obs_link, F.count(F.lit(1)).alias("rows"))
             # no dedup here: the single full-row dropDuplicates runs once at
@@ -278,52 +297,42 @@ class Pipeline:
                                "fused": True}, f)
             return final
 
-        # side tables (errors / dangling links / imagegroup conflicts):
-        # independent of the triple chain — they derive from the parse
-        # output alone, so a resumed run writes the SAME tables as a
-        # fresh one.  At >= 4 cores they are SUBMITTED CONCURRENTLY with
-        # the main graph write (a multi-tenant scheduler fills the main
-        # job's straggler/single-partition gaps with their tiny tasks —
-        # on a cluster these would be parallel job submissions from the
-        # driver for the same reason).  At 1-2 cores they stay
-        # sequential: a concurrent variant was measured at n=400k/
-        # local[1] and inflated the three writes ~6x (347 s e2e vs
-        # 267 s — interleaved small jobs thrash a single-threaded
-        # scheduler and page cache).
-        co = cores >= 4
-        side_builders = {
-            "errors": lambda: self._write_stage(
-                "errors",
-                streams["errors"].unionByName(self._error_sides(streams, graphs)),
-                co_scheduled=co,
-            ),
-            "dangling": lambda: self._write_stage(
-                "dangling", dangling_links(streams), co_scheduled=co),
-            "conflicts": lambda: self._write_stage(
-                "conflicts", self._imagegroup_conflicts(streams), co_scheduled=co),
-        }
-        side_thunks = [side_builders[s] for s in sides_pending]
+        def _write_errors():
+            self._write_stage("errors", self._errors(streams, graphs), co_scheduled=co)
 
-        if cores >= 4 and side_thunks:
-            with ThreadPoolExecutor(max_workers=1 + len(side_thunks)) as ex:
-                f_main = ex.submit(_run_main)
-                f_sides = [ex.submit(t) for t in side_thunks]
+        # the errors table derives from the parse output alone, so a
+        # resumed run writes the SAME table as a fresh one.  At >= 4 cores
+        # it is SUBMITTED CONCURRENTLY with the main graph write (a
+        # multi-tenant scheduler fills the main job's straggler/single-
+        # partition gaps with its tiny tasks — on a cluster this would be
+        # a parallel job submission from the driver for the same reason;
+        # run sequentially the side tables were slower in 4 of 4 A/B
+        # pairs).  At 1-2 cores it stays sequential: a concurrent variant
+        # was measured at n=400k/local[1] and inflated the side writes ~6x
+        # (347 s e2e vs 267 s — interleaved small jobs thrash a
+        # single-threaded scheduler and page cache).
+        if co:
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_main, f_errors = ex.submit(_run_main), ex.submit(_write_errors)
                 final = f_main.result()
-                for f in f_sides:
-                    f.result()
-        else:
-            final = _run_main()
-            for t in side_thunks:
-                t()
+                f_errors.result()
+            return final
+        final = _run_main()
+        if errors_pending:
+            _write_errors()
         return final
 
     def _link(self, streams: dict) -> DataFrame:
         """J1: apply run-time discovered redirects (withdrawn records) to
-        IRI objects.  The static ridReplacements table was already applied
-        record-locally in the parse stage (MigrationHelpers.sanitizeRID)."""
+        IRI objects outside the withdrawn record's own graph: like
+        MigrationHelpers.sanitizeRID it rewrites references, so the
+        record's own admin data still names it.  The static
+        ridReplacements table was already applied record-locally in the
+        parse stage."""
         triples = streams["triples"]
         redirects = streams["redirects"].dropDuplicates(["old_rid"])
         red = redirects.select(
+            F.col("old_rid").alias("_old_rid"),
             F.concat(F.lit(BDR), "old_rid").alias("_old_iri"),
             F.concat(F.lit(BDR), "new_rid").alias("_new_iri"),
         )
@@ -334,22 +343,19 @@ class Pipeline:
         return (
             triples.join(
                 red,
-                (triples.o_kind == "iri") & (triples.o_value == F.col("_old_iri")),
+                (triples.o_kind == "iri")
+                & (triples.o_value == F.col("_old_iri"))
+                & (triples.graph != F.col("_old_rid")),
                 "left",
             )
             .withColumn("o_value", F.coalesce("_new_iri", "o_value"))
-            .drop("_old_iri", "_new_iri")
+            .drop("_old_rid", "_old_iri", "_new_iri")
         )
 
-    def _admin_frames(self, streams: dict):
-        """(access, ric_all) derived from workAdmin content rows.
-
-        ric ("restricted in China") is set unconditionally by the
-        reference (WorkMigration.java:556-567) so it comes from the
-        UNFILTERED admin rows — a "||1" payload (no access, ric set)
-        still restricts the etext IE; the access-override join only
-        cares about rows carrying an access value."""
-        admin = (
+    def _work_admin(self, streams: dict) -> DataFrame:
+        """(_ie, _access, _ric): one row per IE instance from the
+        workAdmin content rows."""
+        return (
             streams["contents"]
             .filter(F.col("kind").startswith("workAdmin:"))
             .select(
@@ -372,27 +378,15 @@ class Pipeline:
             .select("_ie", F.col("_s._access").alias("_access"),
                     F.col("_s._ric").alias("_ric"))
         )
-        access = admin.filter(F.col("_access") != "").drop("_ric")
-        ric_all = admin.filter(F.col("_ric") == "1").select(
-            F.col("_ie").alias("graph"),
-            F.concat(F.lit(BDA), "_ie").alias("subject"),
-            F.lit(ADM + "restrictedInChina").alias("predicate"),
-            F.lit("lit").alias("o_kind"),
-            F.lit("true").alias("o_value"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(XSD + "boolean").alias("o_datatype"),
-        )
-        return access, ric_all
 
-    def _propagate_work_admin(self, triples: DataFrame, streams: dict,
-                              graphs: DataFrame) -> DataFrame:
-        """J13: the work record's archiveInfo (access/ric) overrides the
-        defaults the etext migrator wrote on its IE instance admin
+    def _propagate_work_admin(self, triples: DataFrame, streams: dict) -> DataFrame:
+        """J13: the work record's archiveInfo access overrides the default
+        the etext migrator wrote on its IE instance admin
         (EtextMigration.java:494-499 reads WorkMigration.workAccessMap).
         No broadcast hint anywhere: workAdmin rows are data-derived (one
         per migrated work) — AQE broadcasts when actually small."""
-        access, ric_all = self._admin_frames(streams)
-        out = (
+        access = self._work_admin(streams).filter(F.col("_access") != "").drop("_ric")
+        return (
             triples.join(
                 access,
                 (triples.graph == F.col("_ie"))
@@ -407,69 +401,26 @@ class Pipeline:
             )
             .drop("_ie", "_access")
         )
-        # only into IE graphs that actually exist; the dropped rows are
-        # reported by _error_sides (run unconditionally, resume-safe)
-        ric_rows = ric_all.join(graphs, "graph", "leftsemi")
-        return out.unionByName(ric_rows)
-
-    def _repro_rows(self, streams: dict, graph_prefix: str) -> DataFrame:
-        """Candidate J14 back-link triples for one instance-graph prefix."""
-        repro = (
-            streams["links"]
-            .filter(F.col("prop") == "instanceHasReproduction")
-            .select(F.col("dst_rid").alias("work_rid"))
-            .dropDuplicates(["work_rid"])
-        )
-        return repro.select(
-            F.concat(F.lit(graph_prefix), F.col("work_rid")).alias("graph"),
-            F.concat(F.lit(BDR + graph_prefix), F.col("work_rid")).alias("subject"),
-            F.lit(BDO + "instanceHasReproduction").alias("predicate"),
-            F.lit("iri").alias("o_kind"),
-            F.concat(
-                F.lit(BDR + "IE"), F.expr("substring(work_rid, 2)")
-            ).alias("o_value"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("string").alias("o_datatype"),
-        )
-
-    def _etext_backlinks(self, triples: DataFrame, streams: dict,
-                         graphs: DataFrame) -> DataFrame:
-        """J14: the reference re-opens the work/image-instance files to
-        add instanceHasReproduction links to the new etext instance
-        (EtextMigration.addReproToInstance:344-371); here the etext's
-        link rows become forward triples into the existing MW/W graphs.
-        Rows targeting a missing graph are reported by _error_sides."""
-
-        def into(graph_prefix: str):
-            return self._repro_rows(streams, graph_prefix).join(
-                graphs, "graph", "leftsemi"
-            )
-
-        # instance graph (bdr:M<rid>) and image-instance graph (bdr:<rid>)
-        return triples.unionByName(into("M")).unionByName(into(""))
 
     def _page_join(self, streams: dict) -> DataFrame:
         """Page-image refs left-joined to the exploded imagegroup ondisk
         lists: (graph, subject, ig, img, orig, seq-or-null)."""
-        from pyspark.sql.window import Window
-
         contents = streams["contents"]
         # imagegroup ondisk lists -> (ig, lowercase basename, 1-based seq);
         # entries without an extension are skipped WITHOUT consuming a
-        # sequence number (java:883-886), hence row_number after the filter
-        entries = (
+        # sequence number (java:883-886), hence the filter before posexplode
+        imgmap = (
             contents.filter(F.col("kind").startswith("imgmap:"))
             .select(F.expr("substring(kind, 8)").alias("ig"), "payload")
             .dropDuplicates(["ig"])
-            .select("ig", F.posexplode(F.split("payload", r"\|")))
-            .filter(F.col("col").contains("."))
+            .select("ig", F.posexplode(
+                F.filter(F.split("payload", r"\|"), lambda e: e.contains("."))))
             .select(
-                "ig", "pos",
+                "ig",
                 F.lower(F.regexp_replace("col", r"\.[^.]*$", "")).alias("img"),
+                (F.col("pos") + 1).alias("seq"),
             )
         )
-        w = Window.partitionBy("ig").orderBy("pos")
-        imgmap = entries.select("ig", "img", F.row_number().over(w).alias("seq"))
         refs = (
             contents.filter(F.col("kind").startswith("pageimg:"))
             .select(
@@ -486,69 +437,106 @@ class Pipeline:
         )
         return refs.join(imgmap, ["ig", "img"], "left")
 
-    def _resolve_etext_pages(self, triples: DataFrame, streams: dict) -> DataFrame:
-        """App-mode etext page-name translation (EtextBodyMigration.java:
-        108-120 + MigrationHelpers.getImgmapForImggrp:857-891): UCB-OCR
-        etext pages carry image FILE NAMES; their seqNum is the image's
-        1-based position in the source imagegroup's ondisk list.
+    def _side_joins(self, streams: dict, graphs: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(triples, errors) of the joins that add rows to graphs other
+        records migrated.  Computed from the parse output alone, so the
+        errors are the same whether the graph chain ran or was resumed.
 
-        The reference re-opens the imagegroup XML per etext; here both
-        sides ride the parse output's contents stream and meet in ONE
-        distributed join — no record-local foreign-file reads.  Pages
-        whose image is absent from the list become ET_GEN error rows via
-        _error_sides (java:116-117)."""
-        resolved = self._page_join(streams).filter(F.col("seq").isNotNull()).select(
-            "graph",
-            "subject",
-            F.lit(BDO + "seqNum").alias("predicate"),
-            F.lit("lit").alias("o_kind"),
-            F.col("seq").cast("string").alias("o_value"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(XSD + "integer").alias("o_datatype"),
+        - J13 ric: set unconditionally by the reference
+          (WorkMigration.java:556-567), so it comes from the UNFILTERED
+          admin rows — a "||1" payload (no access, ric set) still
+          restricts the etext IE.
+        - J14 back-links: the reference re-opens the work/image-instance
+          files to add instanceHasReproduction links to the new etext
+          instance (EtextMigration.addReproToInstance:344-371); here they
+          are forward triples into the instance graph (bdr:M<rid>) and the
+          image-instance graph (bdr:<rid>).
+        - App-mode etext page seqNums (EtextBodyMigration.java:108-120 +
+          MigrationHelpers.getImgmapForImggrp:857-891): UCB-OCR etext
+          pages carry image FILE NAMES; their seqNum is the image's
+          1-based position in the source imagegroup's ondisk list.  The
+          reference re-opens the imagegroup XML per etext; here both sides
+          meet in ONE distributed join.  An image absent from the list is
+          an error (java:116-117).
+
+        Each J13/J14 candidate carries the ET_GEN row it becomes when its
+        graph was not migrated (EtextMigration.java:333-335,351-353), so
+        one semi join keeps the triples and one anti join the errors."""
+        ric = self._work_admin(streams).filter(F.col("_ric") == "1").select(
+            *_triple(F.col("_ie"), F.concat(F.lit(BDA), "_ie"), ADM + "restrictedInChina",
+                     "lit", "true", XSD + "boolean"),
+            F.lit("ET_GEN:workAdmin").alias("_etype"),
+            F.lit("missing IE graph for workAdmin ric propagation").alias("_message"),
         )
-        return triples.unionByName(resolved)
-
-    def _error_sides(self, streams: dict, graphs: DataFrame) -> DataFrame:
-        """Join-derived error rows (errors stream schema), computed from
-        the parse output alone so they are identical whether the triple
-        chain ran or was resumed from its markers:
-
-        - workAdmin ric rows targeting a missing IE graph,
-        - J14 back-links targeting a missing MW/W graph
-          (EtextMigration.java:333-335,351-353 logs ET_GEN),
-        - etext page images absent from their imagegroup's ondisk list
-          (EtextBodyMigration.java:116-117)."""
-        _, ric_all = self._admin_frames(streams)
-        ric_err = ric_all.join(graphs, "graph", "left_anti").select(
-            F.col("graph").alias("rid"),
-            F.col("graph").alias("sub_rid"),
-            F.lit("ET_GEN:workAdmin").alias("etype"),
-            F.lit("missing IE graph for workAdmin ric propagation").alias("message"),
-        )
-        out = ric_err
-        for prefix in ("M", ""):
-            out = out.unionByName(
-                self._repro_rows(streams, prefix)
-                .join(graphs, "graph", "left_anti")
-                .select(
-                    F.col("graph").alias("rid"),
-                    F.col("graph").alias("sub_rid"),
-                    F.lit("ET_GEN:repro").alias("etype"),
-                    F.concat(
-                        F.lit("missing instance graph for back-link to "),
-                        F.col("o_value"),
-                    ).alias("message"),
-                )
-            )
-        return out.unionByName(
-            self._page_join(streams)
-            .filter(F.col("seq").isNull())
+        ie = F.concat(F.lit(BDR + "IE"), F.expr("substring(work_rid, 2)"))
+        repro = (
+            streams["links"]
+            .filter(F.col("prop") == "instanceHasReproduction")
+            .select(F.col("dst_rid").alias("work_rid"))
+            .dropDuplicates(["work_rid"])
+            .select("work_rid", F.explode(F.array(F.lit("M"), F.lit(""))).alias("_prefix"))
             .select(
-                F.col("graph").alias("rid"),
-                F.col("graph").alias("sub_rid"),
-                F.lit("ET_GEN:page").alias("etype"),
-                F.concat(F.lit("cannot find image "), F.col("orig")).alias("message"),
+                *_triple(F.concat("_prefix", "work_rid"),
+                         F.concat(F.lit(BDR), "_prefix", "work_rid"),
+                         BDO + "instanceHasReproduction", "iri", ie),
+                F.lit("ET_GEN:repro").alias("_etype"),
+                F.concat(F.lit("missing instance graph for back-link to "), ie).alias("_message"),
             )
+        )
+        candidates = ric.unionByName(repro)
+        pages = self._page_join(streams)
+        triples = candidates.join(graphs, "graph", "leftsemi").select(*TRIPLE_COLS).unionByName(
+            pages.filter(F.col("seq").isNotNull()).select(*_triple(
+                F.col("graph"), F.col("subject"), BDO + "seqNum", "lit",
+                F.col("seq").cast("string"), XSD + "integer",
+            ))
+        )
+        errors = candidates.join(graphs, "graph", "left_anti").select(
+            *_error(F.col("graph"), F.col("graph"), F.col("_etype"), F.col("_message"))
+        ).unionByName(
+            pages.filter(F.col("seq").isNull()).select(*_error(
+                F.col("graph"), F.col("graph"), "ET_GEN:page",
+                F.concat(F.lit("cannot find image "), "orig"),
+            ))
+        )
+        return triples, errors
+
+    def _errors(self, streams: dict, graphs: DataFrame) -> DataFrame:
+        """The errors table: parse errors, the side joins' ET_GEN rows,
+        J3 dangling links (MigrationHelpers.reportMissing:465-478) and A4
+        imagegroup conflicts."""
+        dangling = dangling_links(streams).select(*_error(
+            F.col("src_rid"), F.col("dst_rid"), F.concat(F.lit("J3:"), "prop"),
+            F.concat(F.lit("link target "), "dst_rid", F.lit(" is absent or not released")),
+        ))
+        return (
+            streams["errors"]
+            .unionByName(self._side_joins(streams, graphs)[1])
+            .unionByName(dangling)
+            .unionByName(self._imagegroup_conflicts(streams))
+        )
+
+    def _imagegroup_conflicts(self, streams: dict) -> DataFrame:
+        """A4: an image group claimed by more than one work is an error
+        row listing the works in sorted order (MigrationApp.java:106,
+        417-426 imageGroupWork map)."""
+        claims = streams["links"].filter(
+            F.col("prop").startswith("volume:") | (F.col("prop") == "isVolumeOf")
+        )
+        ig = F.when(
+            F.col("prop") == "isVolumeOf", F.col("src_rid")
+        ).otherwise(F.col("dst_rid"))
+        work = F.when(
+            F.col("prop") == "isVolumeOf", F.col("dst_rid")
+        ).otherwise(F.col("src_rid"))
+        return (
+            claims.groupBy(ig.alias("imagegroup"))
+            .agg(F.sort_array(F.collect_set(work)).alias("works"))
+            .filter(F.size("works") > 1)
+            .select(*_error(
+                F.col("imagegroup"), F.col("imagegroup"), "A4:imagegroup",
+                F.concat(F.lit("imagegroup claimed by works "), F.array_join("works", ", ")),
+            ))
         )
 
     def _canonicalize(self, triples: DataFrame) -> DataFrame:
@@ -566,12 +554,9 @@ class Pipeline:
         time) to compute a 38k-entry mapping was pure overhead.
         The distributed operator (operators/connected_components.py)
         remains the path for data-derived edge sets (G1 query)."""
-        dedup_cols = [
-            "graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"
-        ]
         rep_pairs = _rep_pairs(self.auth.clusters)
         if not rep_pairs:
-            return triples.dropDuplicates(dedup_cols)
+            return triples.dropDuplicates(TRIPLE_COLS)
         import pandas as pd
 
         # pandas -> Arrow path: one zero-copy batch instead of per-row
@@ -599,7 +584,7 @@ class Pipeline:
             .withColumn("o_value", F.coalesce("_c", "o_value"))
             .drop("_n", "_c")
         )
-        return t.dropDuplicates(dedup_cols)
+        return t.dropDuplicates(TRIPLE_COLS)
 
     def _finalize(self, triples: DataFrame, parsed_triples: DataFrame) -> DataFrame:
         """Partitioning columns: rdf-type group of the graph's root + a
@@ -634,25 +619,4 @@ class Pipeline:
                 "subject_bucket",
                 F.pmod(F.xxhash64("subject"), F.lit(N_SUBJECT_BUCKETS)).cast("int"),
             )
-        )
-
-    def _imagegroup_conflicts(self, streams: dict) -> DataFrame:
-        """A4: an image group claimed by more than one work is an error
-        (MigrationApp.java:106,417-426 imageGroupWork map)."""
-        claims = streams["links"].filter(
-            F.col("prop").startswith("volume:") | (F.col("prop") == "isVolumeOf")
-        )
-        ig = F.when(
-            F.col("prop") == "isVolumeOf", F.col("src_rid")
-        ).otherwise(F.col("dst_rid"))
-        work = F.when(
-            F.col("prop") == "isVolumeOf", F.col("dst_rid")
-        ).otherwise(F.col("src_rid"))
-        return (
-            claims.select(ig.alias("imagegroup"), work.alias("work"))
-            .distinct()
-            .groupBy("imagegroup")
-            .agg(F.collect_set("work").alias("works"), F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .select("imagegroup", F.sort_array("works").alias("works"))
         )
