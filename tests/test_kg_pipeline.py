@@ -776,7 +776,7 @@ def test_transfer_to_parsed_matches_driver_expansion(spark):
     auth = Authority()
     parsed = transfer_to_parsed(df, "femc", auth=auth)
     assert parsed.columns == PARSED_COLS
-    ctx = Ctx(auth=auth, one_direction=False, prefer_many=False)
+    ctx = Ctx(auth=auth, one_direction=False)
     want = Counter(emitter_rows(femc.resources_from_line(line, ctx), ctx.result.symmetric))
     assert Counter(tuple(r) for r in parsed.collect()) == want
     assert sum(want.values()) > 5

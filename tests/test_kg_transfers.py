@@ -12,10 +12,6 @@ from xmltoldmigration_spark import REFERENCE_ROOT
 
 TEST_DIR = REFERENCE_ROOT / "src/test"
 
-pytestmark = pytest.mark.skipif(
-    not TEST_DIR.exists(), reason="reference corpus not present"
-)
-
 # (module, line index) — NSI/Hodgson fixtures carry a header row
 # (NSITest.java:37-39, HodgsonTest.java:38-40)
 CASES = {
@@ -27,6 +23,7 @@ CASES = {
 }
 
 
+@pytest.mark.skipif(not TEST_DIR.exists(), reason="reference corpus not present")
 @pytest.mark.parametrize("fixture", sorted(CASES))
 def test_transfer_parity(fixture):
     import importlib
@@ -40,7 +37,7 @@ def test_transfer_parity(fixture):
     mod = importlib.import_module(f"xmltoldmigration_spark.kg.transfers.{mod_name}")
     rows = list(csv.reader(open(TEST_DIR / f"{fixture}.csv", encoding="utf-8")))
     line = rows[line_idx]
-    ctx = Ctx(auth=get_authority().without_clusters(), one_direction=False, prefer_many=False)
+    ctx = Ctx(auth=get_authority().without_clusters(), one_direction=False)
     emitters = mod.resources_from_line(line, ctx)
     ours = []
     for em in emitters:

@@ -1,4 +1,4 @@
-"""String/URL/date scalar transforms (SURVEY.md §2.3 C1, C6-C10, C15-C16).
+"""String/URL/date scalar transforms (SURVEY.md §2.3 C1, C6-C10, C16).
 
 Semantics pinned by MigrationTest.java:123-209 and the cited reference
 lines; implementations are fresh Python.
@@ -223,32 +223,3 @@ _EMPTY_PUB = re.compile(r"^\s*\[?\s*(s[\.]?\s?[nl]|n\.?\s?d)\.?\s*\]?\s*$")
 
 def is_empty_pub_value(s: str) -> bool:
     return bool(_EMPTY_PUB.match(s))
-
-
-# C15 — abstractTitle (CommonMigration.java:1672-1696), pinned by
-# MigrationTest.testAbstractTitle:123-136.
-_ABSTRACT_PARENS = re.compile(r"^\([^)]+\)\s*")
-_ABSTRACT_LEADER = re.compile(r"^[^ ]{1,4}\)[_ ]*")
-_BZHUGS = re.compile(r"[_ ]?(bzhugs|bzhugso|bzhug|bzhugs?so)[_ ]s?o?[/ _]*$")
-
-
-def abstract_title(title: str) -> str:
-    t = title
-    t = _ABSTRACT_PARENS.sub("", t)
-    t = _ABSTRACT_LEADER.sub("", t)
-    m = _BZHUGS.search(t)
-    if m:
-        t = t[: m.start()]
-        t = add_ewts_shad_import(t)
-    # edition parentheticals ending with a Chinese paren get stripped
-    m2 = re.search(r"[\(（][^\)）]*[）]\s*$", t)
-    if m2:
-        t = t[: m2.start()].strip()
-        t = add_ewts_shad_import(t)
-    return t
-
-
-def add_ewts_shad_import(s: str) -> str:
-    from xmltoldmigration_spark.functions.lang import add_ewts_shad
-
-    return add_ewts_shad(s)

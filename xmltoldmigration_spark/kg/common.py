@@ -71,10 +71,6 @@ def attr(e: ET.Element, name: str, default: str = "") -> str:
     return e.get(name, default)
 
 
-def parse_xml(content: str) -> ET.Element:
-    return ET.fromstring(content)
-
-
 def normalize_keep(s: str) -> str:
     return T.normalize_string(s, keep_spaces=True)
 
@@ -92,21 +88,21 @@ class Ctx:
     # per-graph logDate -> logEntry node (same-date merge for I* graphs,
     # CommonMigration.java:1062-1070)
     log_by_date: dict = field(default_factory=dict)
-    # cross-record first-wins state (A5/A6/J13); record-local here, the
-    # Spark pipeline reconciles these via groupBy-first / joins
+    # cross-record first-wins state (A5/A6); each Ctx serves one record,
+    # so a field one record type writes and another reads
+    # (etext_instances, work_vol_names) is empty where it is read
     series_members_to_works: dict = field(default_factory=dict)
     series_members_to_work_labels: dict = field(default_factory=dict)
     worktopics: dict = field(default_factory=dict)
     etext_instances: dict = field(default_factory=dict)
-    work_access: dict = field(default_factory=dict)
-    work_ric: dict = field(default_factory=dict)
     work_vol_names: dict = field(default_factory=dict)  # workId -> {volnum: (value, tag)}
-    subscriptions: dict = field(default_factory=dict)  # subscriber -> [collection] (J19)
-    # SymetricNormalization.normalizeOneDirection flags (java:44-62):
-    # the XML corpus runs (true, false); CSV transfers (EAP/CUDL) run
-    # (false, false) -> both directions kept
+    # SymetricNormalization.normalizeOneDirection(oneDirection,
+    # preferManyOverOne) (java:44-62): the XML corpus runs (true, false);
+    # the CSV transfers run (false, false) -> both directions kept.
+    # Every caller passes preferManyOverOne=false, so it is not a field:
+    # one-direction runs keep the "one" side (partOf, volumeOf,
+    # itemForInstance, instanceOf) and drop the "many" side.
     one_direction: bool = True
-    prefer_many: bool = False
     # True when running the full-corpus pipeline (MigrationApp shape);
     # False replicates the per-record test wrappers (MigrationTest shape)
     app_mode: bool = False
@@ -120,38 +116,11 @@ class Ctx:
     # true, or merge into the instance's own graph when false
     split_items: bool = True
 
-    @property
-    def add_item_for_work(self) -> bool:
-        return True if not self.one_direction else not self.prefer_many
-
-    @property
-    def add_work_has_item(self) -> bool:
-        return True if not self.one_direction else self.prefer_many
-
-    @property
-    def add_volume_of(self) -> bool:
-        return True if not self.one_direction else not self.prefer_many
-
-    @property
-    def add_item_has_volume(self) -> bool:
-        return True if not self.one_direction else self.prefer_many
-
-    @property
-    def add_work_haspart(self) -> bool:
-        return True if not self.one_direction else self.prefer_many
-
-    @property
-    def add_work_partof(self) -> bool:
-        return True if not self.one_direction else not self.prefer_many
-
     def error(self, etype: str, rid: str, sub_rid: str, prop: str, msg: str):
         self.result.errors.append((etype, rid, sub_rid, prop, msg))
 
     def link(self, src: str, prop: str, dst: str):
         self.result.links.append((src, prop, dst))
-
-    def symmetric(self, prop: str, src: str, dst: str, gender: str | None):
-        self.result.symmetric.append((prop, src, dst, gender))
 
 
 # ---------------------------------------------------------------- roots
@@ -182,17 +151,12 @@ def create_root(em: Emitter, rid_iri: str, type_iri: str) -> str:
 
 def create_admin_root(em: Emitter, main: str) -> str:
     """Models.createAdminRoot: bda:RID sidecar (golden P1331.ttl:43-51)."""
-    local = main[len(BDR):]
-    adm = BDA + local
-    em.add(adm, RDF_TYPE, iri(ADM + "AdminData"))
-    em.add(adm, ADM + "adminAbout", iri(main))
-    em.add(adm, ADM + "graphId", iri(BDG + local))
-    em.add(adm, BDO + "isRoot", boolean(True))
-    return adm
+    return create_admin_root_for(em, main, main[len(BDR):])
 
 
 def create_admin_root_for(em: Emitter, main_iri: str, local: str) -> str:
-    """createAdminRoot for a root outside the bdr namespace (subscribers)."""
+    """Models.createAdminRoot for any root IRI; subscribers live outside
+    the bdr namespace, so their graph-local name is passed in."""
     adm = BDA + local
     em.add(adm, RDF_TYPE, iri(ADM + "AdminData"))
     em.add(adm, ADM + "adminAbout", iri(main_iri))
@@ -669,12 +633,10 @@ def add_log(ctx: Ctx, em: Emitter, root: ET.Element, rez: str, ns: str, is_outli
 # normalizeOneDirection(oneDirection=true, preferManyOverOne=false)
 # (MigrationApp.main:748, MigrationTest.init:72-77): isMain semantics —
 # 0: direct edge dropped (inverse is canonical), 1: direct kept & no
-# inverse queued, 2: both directions kept.
-ONE_DIRECTION = True
-PREFER_MANY = False
-
-_MANY = 1 if PREFER_MANY else 0
-_ONE = 0 if PREFER_MANY else 1
+# inverse queued, 2: both directions kept.  Ctx.one_direction=False
+# keeps both directions of every pair.
+_MANY = 0
+_ONE = 1
 
 _SYM_PROPS = {
     "placeContains": ("placeLocatedIn", _MANY),
@@ -996,9 +958,8 @@ def add_descriptions(
                 fpl_em = Emitter(graph=fpl_local) if ctx.split_items else em
                 fpl_item = BDR + fpl_local
                 adm = create_admin_root(fpl_em, fpl_item)
-                if ctx.add_item_for_work:
-                    fpl_em.add(fpl_item, BDO + "itemForInstance", iri(rez))
-                if ctx.add_work_has_item:
+                fpl_em.add(fpl_item, BDO + "itemForInstance", iri(rez))
+                if not ctx.one_direction:
                     em.add(rez, BDO + "instanceHasItem", iri(fpl_item))
                 add_released(fpl_em, adm)
                 fpl_em.add(fpl_item, RDF_TYPE, iri(BDO + "Item"))

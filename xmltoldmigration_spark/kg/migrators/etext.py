@@ -160,18 +160,16 @@ def migrate_one_etext(
         item_em.add(adm_item, ADM + "contentProvider", iri(provider_uri))
         item_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
         C.add_released(item_em, adm_item)
-        if ctx.work_ric.get("M" + indicated_work_id, False):
-            item_em.add(adm_item, ADM + "restrictedInChina", boolean(True))
-        access_uri = ctx.work_access.get("M" + indicated_work_id) or (BDA + "AccessOpen")
-        item_em.add(adm_item, ADM + "access", iri(access_uri))
+        # the work's access and ric reach this AdminData in the pipeline
+        # (J13: Pipeline._propagate_work_admin and the ric side join)
+        item_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
         if not born_digital:
             item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + indicated_work_id))
             item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "M" + indicated_work_id))
             # back-links into work / image-instance graphs (J14) — emitted
             # as link rows, joined in the pipeline instead of file rewrites
             ctx.link(etext_id, "instanceHasReproduction", indicated_work_id)
-        if ctx.add_item_for_work:
-            item_em.add(item, BDO + "instanceOf", iri(BDR + abstract_work_id))
+        item_em.add(item, BDO + "instanceOf", iri(BDR + abstract_work_id))
 
     etext_em.add(etext, BDO + "eTextInInstance", iri(BDR + e_instance_id))
     adm_etext = BDA + etext_id

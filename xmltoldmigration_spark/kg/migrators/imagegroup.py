@@ -82,10 +82,9 @@ def migrate_into(
     if volume_number in vol_names:
         v, t = vol_names[volume_number]
         em.add(vol, SKOS + "prefLabel", lit(v, t))
-    if ctx.add_item_has_volume:
+    if not ctx.one_direction:
         em.add(item, BDO + "instanceHasVolume", iri(vol))
-    if ctx.add_volume_of:
-        em.add(vol, BDO + "volumeOf", iri(item))
+    em.add(vol, BDO + "volumeOf", iri(item))
 
     C.add_status(em, adm_vol, status)
     C.add_log(ctx, em, root, adm_vol, NS, False)

@@ -256,10 +256,9 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
     em.add(node, BDO + "legacyOutlineNodeRID", lit(rid))
     em.add(node, RDF_TYPE, iri(BDO + "Instance"))
     em.add(node, BDO + "partIndex", integer(part_index))
-    if ctx.add_work_haspart:
+    if not ctx.one_direction:
         em.add(r, BDO + "hasPart", iri(node))
-    if ctx.add_work_partof:
-        em.add(node, BDO + "partOf", iri(r))
+    em.add(node, BDO + "partOf", iri(r))
     em.add(node, BDO + "inRootInstance", iri(root_work))
 
     name_added = C.add_names(ctx, em, e, node, NS, True, None)

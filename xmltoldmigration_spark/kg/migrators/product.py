@@ -1,7 +1,9 @@
 """Product migrator — reference: xml2files/ProductMigration.java:36-247.
 
-Products split into bdo:Collection (with subscription fan-out, J19) and
-aut:Subscriber (IP allow-lists, recursive orgs).
+Products split into bdo:Collection and aut:Subscriber (IP allow-lists,
+recursive orgs).  The J19 rewrite of subscriber graphs from a
+collection's access/include list (ProductMigration.java:40-142, with the
+PR88CT000129 fan-out) is not ported: see COVERAGE.md.
 """
 
 from __future__ import annotations
@@ -28,18 +30,6 @@ AUT = "http://purl.bdrc.io/ontology/ext/auth/"
 ADR = "http://purl.bdrc.io/resource-nc/auth/"
 
 FACET_SUBSCRIBER_ORG = ("SO", ADR)
-
-# PR88CT000129 fans out to 33 subscriber orgs (ProductMigration.java:40-74)
-REPL_PR88CT000129 = [
-    "PRA99BRL01", "PRA99BUL01", "PRA99CUHK01", "PRA99COL01", "PRA99DDBC01",
-    "PRA99DRA01", "PRA99EMR01", "PRA99GTW01", "PRA99GOODMAN01", "PRA99HRVD01",
-    "PRA99IUL01", "PRA99KOMU01", "PRA99LOC01", "PRA99LMU01", "PRA99NWU01",
-    "PRA99OTANU01", "PRA99OXB01", "PRA99PRIU01", "PRA99RICE01", "PRA99RMA01",
-    "PRA99SBB01", "PRA99STU01", "PRA99TUFS01", "PRA99TORU01", "PRA99UCS01",
-    "PRA99UCOB01", "PRA99UHAM01", "PRA99ULAU01", "PRA99UMI01", "PRA99UVA01",
-    "PRA99VIU01", "PRA99YALE01",
-]
-
 
 def get_type(root: ET.Element) -> str:
     """ProductMigration.getType:80-105."""
@@ -74,21 +64,8 @@ def migrate_collection(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     C.add_externals(ctx, em, root, main, NS)
     C.add_log(ctx, em, root, adm, NS, False)
     C.add_descriptions(ctx, em, root, main, NS, guess_label=True)
-    for current in C.elems(root, NS, "access"):
-        for sub in C.elems(current, NS, "include"):
-            _add_subscription(ctx, rid, C.attr(sub, "RID"))
     C.finalize_graph(em, adm, "product")
     return [em]
-
-
-def _add_subscription(ctx: Ctx, collection_rid: str, subscriber_rid: str) -> None:
-    """J19 — consumed by the pipeline's subscription-rewrite join."""
-    if subscriber_rid == "PR88CT000129":
-        for sub in REPL_PR88CT000129:
-            ctx.subscriptions.setdefault(sub, []).append(collection_rid)
-    else:
-        sub = "PRA" + subscriber_rid[2:]
-        ctx.subscriptions.setdefault(sub, []).append(collection_rid)
 
 
 def migrate_subscriber(root: ET.Element, ctx: Ctx) -> list[Emitter]:

@@ -393,9 +393,8 @@ def migrate_into(
         it_em = Emitter(graph=item_name) if ctx.split_items else em
         holding = BDR + item_name
         it_em.add(holding, RDF_TYPE, iri(BDO + "Item"))
-        if ctx.add_item_for_work:
-            it_em.add(holding, BDO + "itemForInstance", iri(main))
-        if ctx.add_work_has_item:
+        it_em.add(holding, BDO + "itemForInstance", iri(main))
+        if not ctx.one_direction:
             em.add(main, BDO + "instanceHasItem", iri(BDR + item_name))
         _simple(ctx, it_em, current, holding, "exception", BDO + "itemException", C.EWTS)
         for sub in C.elems(root, NS, "shelf"):

@@ -354,8 +354,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
             legal_uri = BDA + "LD_BDRC_PD"
         if C._local(main) in ctx.auth.ric:
             is_ric = True
-        ctx.work_access["M" + work_id] = access_uri
-        ctx.work_ric["M" + work_id] = is_ric
         # J13: emitted as a side row so the pipeline can propagate work
         # admin info into etext instances (MigrationApp.moveAdminInfo:152-171)
         ctx.result.contents.append((
@@ -462,7 +460,7 @@ def _add_volumes(ctx: Ctx, em: Emitter, main: str, root: ET.Element, work_id: st
     for j, volume in enumerate(volumes):
         if j == 0 and work_id not in ctx.auth.remove_w:
             item_local = "W" + work_id[1:] + IMAGE_ITEM_SUFFIX
-            if ctx.add_work_has_item:
+            if not ctx.one_direction:
                 if redirection_instance_id is None:
                     em.add(main, BDO + "instanceHasReproduction", iri(BDR + item_local))
                 else:

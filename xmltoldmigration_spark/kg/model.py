@@ -62,22 +62,6 @@ PREFIXES = {
     "tmp": TMP,
 }
 
-# Spark-side schema of the triple table (strings keep it Arrow-friendly).
-TRIPLE_COLUMNS = (
-    "graph",
-    "subject",
-    "predicate",
-    "o_kind",
-    "o_value",
-    "o_lang",
-    "o_datatype",
-)
-
-TRIPLE_SCHEMA_DDL = (
-    "graph string, subject string, predicate string, o_kind string, "
-    "o_value string, o_lang string, o_datatype string"
-)
-
 # Facet prefixes, mirroring bdrc-libraries FacetType as observed in the
 # golden corpus (bdr:NM…/EV…/NT…/CR…/CL…/TT…/ID…, bda:LG…).
 FACET_NAME = ("NM", BDR)
@@ -157,9 +141,6 @@ class Emitter:
             self.add(node, RDF_TYPE, iri(rdf_type))
         return node
 
-    def named_node(self, ns: str, local: str) -> str:
-        return ns + local
-
     def rows(self):
         for (s, p, kind, value, lang, dt) in self.triples:
             yield (self.graph, s, p, kind, value, lang, dt)
@@ -169,9 +150,9 @@ class Emitter:
 class RecordResult:
     """Everything one record's migration produces.
 
-    triples      -- list of triple rows (graph, s, p, kind, value, lang, dt)
-    symmetric    -- queued inverse edges (prop, src_rid, dst_rid) for the
-                    global completion stage (SymetricNormalization.triplesToAdd)
+    symmetric    -- queued inverse edges (dest_rid, prop, src_rid) for the
+                    global completion stage (SymetricNormalization.triplesToAdd);
+                    the triples themselves live in the record's Emitters
     errors       -- (etype, rid, sub_rid, prop, msg) rows (ExceptionHelper)
     links        -- (src_rid, prop, dst_rid) outbound references for the
                     dangling-link report (MigrationHelpers.recordLinkTo)
@@ -180,7 +161,6 @@ class RecordResult:
                     migrate_record so the parse stage needn't re-parse
     """
 
-    triples: list = field(default_factory=list)
     symmetric: list = field(default_factory=list)
     errors: list = field(default_factory=list)
     links: list = field(default_factory=list)

@@ -16,17 +16,14 @@ from xmltoldmigration_spark.kg.model import (
     BDA,
     BDO,
     BDR,
-    RDF_TYPE,
     RDFS,
     SKOS,
     XSD,
     Emitter,
-    boolean,
-    integer,
     iri,
     lit,
 )
-from xmltoldmigration_spark.kg.transfers.eap import rkts_to_bdr
+from xmltoldmigration_spark.kg.transfers import image_instance, rkts_to_bdr
 
 ORIG_URL_BASE = "https://cudl.lib.cam.ac.uk/view/"
 
@@ -135,32 +132,8 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
         em.add(event, BDO + "notAfter", lit(line[11], None, XSD + "integer"))
         em.add(event, BDO + "notBefore", lit(line[10], None, XSD + "integer"))
 
-    item_rid = "W0CDL0" + rid
-    it_em = Emitter(graph=item_rid)
-    item = C.create_root(it_em, BDR + item_rid, BDO + "ImageInstance")
-    it_em.add(item, BDO + "inCollection", iri(BDR + "PR0CDL01"))
-    adm_item = C.create_admin_root(it_em, item)
-    emitters.append(it_em)
-    if ctx.add_work_has_item:
-        em.add(work, BDO + "instanceHasReproduction", iri(BDR + item_rid))
-    C.add_released(it_em, adm_item)
-    it_em.add(adm_item, ADM + "contentLegal", iri(BDA + "LD_CUDL_content"))
-    it_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_CUDL_metadata"))
-    it_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
-    it_em.add(adm_item, ADM + "restrictedInChina", boolean(False))
-
-    volume = BDR + "I0CDL0" + rid
-    it_em.add(volume, RDF_TYPE, iri(BDO + "ImageGroup"))
-    if ctx.add_volume_of:
-        it_em.add(volume, BDO + "volumeOf", iri(item))
-    if ctx.add_item_has_volume:
-        it_em.add(item, BDO + "instanceHasVolume", iri(volume))
+    it_em, _, volume = image_instance(ctx, em, work, (abstract_rid, em_a, work_a),
+                                      "W0CDL0" + rid, "I0CDL0" + rid, "PR0CDL01",
+                                      "LD_CUDL_content", "LD_CUDL_metadata", emitters)
     it_em.add(volume, BDO + "hasIIIFManifest", iri(line[8]))
-    it_em.add(volume, BDO + "volumeNumber", integer(1))
-    it_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "MW0CDL0" + rid))
-    if work_a is not None:
-        em_a.add(work_a, BDO + "workHasInstance", iri(BDR + item_rid))
-        it_em.add(item, BDO + "instanceOf", iri(BDR + abstract_rid))
-    else:
-        C.add_symmetric_property(ctx, it_em, "instanceOf", item_rid, abstract_rid)
     return emitters

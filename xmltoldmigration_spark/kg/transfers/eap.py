@@ -15,37 +15,20 @@ from xmltoldmigration_spark.kg.model import (
     BDA,
     BDO,
     BDR,
-    RDF_TYPE,
     RDFS,
     SKOS,
     XSD,
     Emitter,
-    boolean,
     integer,
     iri,
     lit,
 )
+from xmltoldmigration_spark.kg.transfers import abstract_work, image_instance, rkts_to_bdr
 
 ORIG_URL_BASE = "https://eap.bl.uk/archive-file/"
 
 _SCRIPTS = {"Newa": "ScriptNewa", "Ranj": "ScriptRanj", "Beng": "ScriptBeng"}
 _LANGS = {"san": ["LangSa"], "new": ["LangNew"], "san;new": ["LangNew", "LangSa"]}
-
-
-def rkts_to_bdr(ctx: Ctx, rkts: str, indic_version: bool) -> str | None:
-    """EAPTransfer.rKTsToBDR:125-142 via abstract-rkts.csv."""
-    if not rkts or "?" in rkts:
-        return None
-    # abstract-rkts.csv maps WA rid -> rKTs id; the transfer needs the
-    # inverse keyed on the rKTs id (cached on the Authority object)
-    wa = ctx.auth.rkts_to_wa(rkts)
-    if wa is not None:
-        return wa
-    rktsid = rkts[1:]
-    if not rktsid.isdigit():
-        return None
-    prefix = "WA0RK" if rkts.startswith("K") else "WA0RT"
-    return prefix + ("I" if indic_version else "") + rktsid
 
 
 def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
@@ -55,21 +38,9 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     work = C.create_root(em, BDR + "M" + rid, BDO + "Instance")
     emitters = [em]
 
-    abstract_rid = rkts_to_bdr(ctx, line[15], True)
-    em_a = None
-    work_a = None
-    if abstract_rid is None:
-        abstract_rid = "WA" + base_rid
-        em_a = Emitter(graph=abstract_rid)
-        work_a = C.create_root(em_a, BDR + abstract_rid, BDO + "Work")
-        adm_a = C.create_admin_root(em_a, work_a)
-        emitters.append(em_a)
-        em.add(work, BDO + "instanceOf", iri(work_a))
-        em_a.add(work_a, BDO + "workHasInstance", iri(work))
-        C.add_released(em_a, adm_a)
-        em_a.add(adm_a, ADM + "metadataLegal", iri(BDA + "LD_EAP_metadata"))
-    else:
-        C.add_symmetric_property(ctx, em, "instanceOf", "M" + rid, abstract_rid)
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[15], True),
+                             "WA" + base_rid, "LD_EAP_metadata", emitters)
+    _, em_a, work_a = abstract
 
     adm = C.create_admin_root(em, work)
     C.add_released(em, adm)
@@ -131,35 +102,8 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
                 em_a.add(work_a, BDO + "workGenre", iri(BDR + g))
     em.add(work, BDO + "material", iri(BDR + "MaterialPaper"))
 
-    # image instance + volume
-    item_rid = "W" + base_rid
-    it_em = Emitter(graph=item_rid)
-    item = C.create_root(it_em, BDR + item_rid, BDO + "ImageInstance")
-    emitters.append(it_em)
-    it_em.add(item, BDO + "inCollection", iri(BDR + "PR0EAP676"))
-    if ctx.add_work_has_item:
-        em.add(work, BDO + "instanceHasReproduction", iri(BDR + item_rid))
-    adm_item = C.create_admin_root(it_em, item)
-    C.add_status(it_em, adm_item, "released")
-    it_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
-    it_em.add(adm_item, ADM + "restrictedInChina", boolean(False))
-    it_em.add(adm_item, ADM + "contentLegal", iri(BDA + "LD_EAP_content"))
-    it_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_EAP_metadata"))
-
-    volume_rid = "I0" + item_rid[1:]
-    volume = BDR + volume_rid
-    it_em.add(volume, RDF_TYPE, iri(BDO + "ImageGroup"))
-    if ctx.add_volume_of:
-        it_em.add(volume, BDO + "volumeOf", iri(item))
-    if ctx.add_item_has_volume:
-        it_em.add(item, BDO + "instanceHasVolume", iri(volume))
+    it_em, _, volume = image_instance(ctx, em, work, abstract, rid, "I0" + base_rid,
+                                      "PR0EAP676", "LD_EAP_content", "LD_EAP_metadata",
+                                      emitters)
     it_em.add(volume, BDO + "hasIIIFManifest", iri(orig_url + "/manifest"))
-    it_em.add(volume, BDO + "volumeNumber", integer(1))
-    if ctx.add_item_for_work:
-        it_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "M" + rid))
-        if work_a is not None:
-            em_a.add(work_a, BDO + "workHasInstance", iri(BDR + item_rid))
-            it_em.add(item, BDO + "instanceOf", iri(BDR + abstract_rid))
-        else:
-            C.add_symmetric_property(ctx, it_em, "instanceOf", item_rid, abstract_rid)
     return emitters

@@ -23,10 +23,12 @@ from xmltoldmigration_spark.kg.model import (
     XSD,
     Emitter,
     boolean,
+    gyear,
     integer,
     iri,
     lit,
 )
+from xmltoldmigration_spark.kg.transfers import abstract_work
 
 MANIFEST_PREFIX = "https://eap.bl.uk/archive-file/"
 ORIG_URL_BASE = "https://eap.bl.uk/collection/"
@@ -93,12 +95,11 @@ def _add_event(em: Emitter, line, work: str, simplified: bool):
         em.add(event, RDF_TYPE, iri(BDO + "CopyEvent"))
         if simplified and line[13]:
             em.add(event, BDO + "eventWhere", iri(BDR + line[13]))
-        gy = "http://www.w3.org/2001/XMLSchema#gYear"
         if not_before == not_after:
-            em.add(event, BDO + "onYear", ("lit", "%04d" % int(not_before), None, gy))
+            em.add(event, BDO + "onYear", gyear(int(not_before)))
         else:
-            em.add(event, BDO + "notBefore", ("lit", "%04d" % int(not_before), None, gy))
-            em.add(event, BDO + "notAfter", ("lit", "%04d" % int(not_after), None, gy))
+            em.add(event, BDO + "notBefore", gyear(int(not_before)))
+            em.add(event, BDO + "notAfter", gyear(int(not_after)))
 
 
 def _add_note(em: Emitter, line, work: str, simplified: bool):
@@ -112,19 +113,12 @@ def _add_note(em: Emitter, line, work: str, simplified: bool):
 def _abstract_block(ctx: Ctx, em: Emitter, work: str, ref: str, emitters: list):
     abstract_rid = "WA" + ref
     other = ctx.auth.constraint_wa("MW" + ref, abstract_rid)
-    if other is None or other == abstract_rid:
-        em_a = Emitter(graph=abstract_rid)
-        work_a = C.create_root(em_a, BDR + abstract_rid, BDO + "Work")
-        adm_a = C.create_admin_root(em_a, work_a)
-        em_a.add(adm_a, ADM + "metadataLegal", iri(BDA + "LD_EAP_metadata"))
-        C.add_released(em_a, adm_a)
-        emitters.append(em_a)
-        em.add(work, BDO + "instanceOf", iri(work_a))
-        em_a.add(work_a, BDO + "workHasInstance", iri(work))
+    if other == abstract_rid:
+        other = None
+    _, em_a, work_a = abstract_work(ctx, em, work, other, abstract_rid,
+                                    "LD_EAP_metadata", emitters)
+    if work_a is not None:
         em_a.add(work_a, BDO + "language", iri(BDR + "LangBo"))
-    else:
-        em.add(work, BDO + "instanceOf", iri(BDR + other))
-        C.add_symmetric_property(ctx, em, "instanceOf", "MW" + ref, other)
     return abstract_rid
 
 

@@ -22,7 +22,7 @@ from xmltoldmigration_spark.kg.model import (
     iri,
     lit,
 )
-from xmltoldmigration_spark.kg.transfers.eap import rkts_to_bdr
+from xmltoldmigration_spark.kg.transfers import abstract_work, rkts_to_bdr
 
 ORIG_URL_BASE = "http://gretil.sub.uni-goettingen.de/gretil.html"
 
@@ -33,27 +33,18 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     adm = C.create_admin_root(em, work)
     emitters = [em]
 
+    # the cut id is not the one looked up: the whole field is, so a
+    # `K16,K17` list mints a new WA work instead of linking WA0RKI16
     abstract_rid = None
     rkts = line[2]
     if rkts:
         if "," in rkts:
             rkts = rkts[: rkts.index(",")]
         abstract_rid = rkts_to_bdr(ctx, line[2], True)
-    em_a = None
-    work_a = None
-    if abstract_rid is not None:
-        C.add_symmetric_property(ctx, em, "instanceOf", line[0], abstract_rid)
-    else:
-        abstract_rid = "WA" + line[0][2:]
-        em_a = Emitter(graph=abstract_rid)
-        work_a = C.create_root(em_a, BDR + abstract_rid, BDO + "Work")
-        emitters.append(em_a)
-        em.add(work, BDO + "instanceOf", iri(work_a))
-        em_a.add(work_a, BDO + "workHasInstance", iri(work))
+    _, em_a, work_a = abstract_work(ctx, em, work, abstract_rid, "WA" + line[0][2:],
+                                    "LD_GRETIL", emitters)
+    if work_a is not None:
         em_a.add(work_a, ADM + "status", iri(BDA + "StatusReleased"))  # quirk
-        adm_a = C.create_admin_root(em_a, work_a)
-        C.add_released(em_a, adm_a)
-        em_a.add(adm_a, ADM + "metadataLegal", iri(BDA + "LD_GRETIL"))
 
     C.add_released(em, adm)
     em.add(adm, ADM + "metadataLegal", iri(BDA + "LD_GRETIL"))

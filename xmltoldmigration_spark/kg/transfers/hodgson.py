@@ -13,17 +13,14 @@ from xmltoldmigration_spark.kg.model import (
     BDA,
     BDO,
     BDR,
-    RDF_TYPE,
     RDFS,
     SKOS,
     XSD,
     Emitter,
-    boolean,
-    integer,
     iri,
     lit,
 )
-from xmltoldmigration_spark.kg.transfers.eap import rkts_to_bdr
+from xmltoldmigration_spark.kg.transfers import abstract_work, image_instance, rkts_to_bdr
 
 
 def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
@@ -32,22 +29,11 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     work = C.create_root(em, BDR + "MW" + base, BDO + "Instance")
     emitters = [em]
 
-    abstract_rid = rkts_to_bdr(ctx, line[5], True)
-    em_a = None
-    work_a = None
-    if abstract_rid is None:
-        abstract_rid = "WA" + base
-        em_a = Emitter(graph=abstract_rid)
-        work_a = C.create_root(em_a, BDR + abstract_rid, BDO + "Work")
-        adm_a = C.create_admin_root(em_a, work_a)
-        emitters.append(em_a)
-        em.add(work, BDO + "instanceOf", iri(work_a))
-        em_a.add(work_a, BDO + "workHasInstance", iri(work))
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[5], True),
+                             "WA" + base, "LD_IA_Metadata", emitters)
+    _, em_a, work_a = abstract
+    if work_a is not None:
         em_a.add(work_a, BDO + "language", iri(BDR + "LangSa"))
-        C.add_released(em_a, adm_a)
-        em_a.add(adm_a, ADM + "metadataLegal", iri(BDA + "LD_IA_Metadata"))
-    else:
-        C.add_symmetric_property(ctx, em, "instanceOf", "MW" + base, abstract_rid)
 
     adm = C.create_admin_root(em, work)
     C.add_released(em, adm)
@@ -91,34 +77,8 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     if line[7] and work_a is not None:
         em.add(work, BDO + "workGenre", iri(BDR + line[7].strip()))
 
-    item_rid = "W" + base
-    it_em = Emitter(graph=item_rid)
-    item = C.create_root(it_em, BDR + item_rid, BDO + "ImageInstance")
-    emitters.append(it_em)
-    it_em.add(item, BDO + "inCollection", iri(BDR + "PR0IA_HOD01"))
-    if ctx.add_work_has_item:
-        em.add(work, BDO + "instanceHasReproduction", iri(BDR + item_rid))
-    adm_item = C.create_admin_root(it_em, item)
-    C.add_status(it_em, adm_item, "released")
-    it_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
-    it_em.add(adm_item, ADM + "restrictedInChina", boolean(False))
-    it_em.add(adm_item, ADM + "contentLegal", iri(BDA + "LD_IA_PD"))
-    it_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_IA_Metadata"))
-
-    volume = BDR + "I" + base
-    it_em.add(volume, RDF_TYPE, iri(BDO + "ImageGroup"))
-    if ctx.add_volume_of:
-        it_em.add(volume, BDO + "volumeOf", iri(item))
-    if ctx.add_item_has_volume:
-        it_em.add(item, BDO + "instanceHasVolume", iri(volume))
+    it_em, _, volume = image_instance(ctx, em, work, abstract, "W" + base, "I" + base,
+                                      "PR0IA_HOD01", "LD_IA_PD", "LD_IA_Metadata", emitters)
     it_em.add(volume, BDO + "hasIIIFManifest",
               iri("https://iiif.archivelab.org/iiif/" + line[1].strip() + "/manifest.json"))
-    it_em.add(volume, BDO + "volumeNumber", integer(1))
-    if ctx.add_item_for_work:
-        it_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "MW" + base))
-        if work_a is not None:
-            em_a.add(work_a, BDO + "workHasInstance", iri(BDR + item_rid))
-            it_em.add(item, BDO + "instanceOf", iri(BDR + abstract_rid))
-        else:
-            C.add_symmetric_property(ctx, it_em, "instanceOf", item_rid, abstract_rid)
     return emitters

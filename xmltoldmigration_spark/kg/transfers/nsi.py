@@ -14,12 +14,12 @@ from xmltoldmigration_spark.kg.model import (
     SKOS,
     XSD,
     Emitter,
-    boolean,
+    gyear,
     integer,
     iri,
     lit,
 )
-from xmltoldmigration_spark.kg.transfers.eap import rkts_to_bdr
+from xmltoldmigration_spark.kg.transfers import abstract_work, image_instance, rkts_to_bdr
 
 LANG_MAP = {
     "Sanskrit;Pracalita": ["Sa"],
@@ -65,21 +65,9 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     em.add(adm, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
     emitters = [em]
 
-    abstract_rid = rkts_to_bdr(ctx, line[19], True)
-    em_a = None
-    work_a = None
-    if abstract_rid is None:
-        abstract_rid = "WA" + wrid[1:]
-        em_a = Emitter(graph=abstract_rid)
-        work_a = C.create_root(em_a, BDR + abstract_rid, BDO + "Work")
-        adm_a = C.create_admin_root(em_a, work_a)
-        emitters.append(em_a)
-        em.add(work, BDO + "instanceOf", iri(work_a))
-        em_a.add(work_a, BDO + "workHasInstance", iri(work))
-        C.add_released(em_a, adm_a)
-        em_a.add(adm_a, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
-    else:
-        C.add_symmetric_property(ctx, em, "instanceOf", "M" + wrid, abstract_rid)
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[19], True),
+                             "WA" + wrid[1:], "LD_BDRC_CC0", emitters)
+    abstract_rid, em_a, work_a = abstract
     # reference quirk (NSITransfer.java:150-152): the symmetric call runs
     # again unconditionally once abstractWorkRID is non-null
     C.add_symmetric_property(ctx, em, "instanceOf", "M" + wrid, abstract_rid)
@@ -96,7 +84,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     if line[14].endswith(" CE"):
         date_str = line[14][:-3]
         event = C.get_event(em, work, "CopyEvent", "instanceEvent", reuse=True)
-        em.add(event, BDO + "onYear", ("lit", "%04d" % int(date_str), None, XSD + "gYear"))
+        em.add(event, BDO + "onYear", gyear(int(date_str)))
 
     note_text = line[6]
     if line[13]:
@@ -136,42 +124,16 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
         for t in line[7].split("&"):
             em_a.add(work_a, BDO + "workIsAbout", iri(BDR + t.strip()))
 
-    # image instance
-    item_rid = wrid
-    it_em = Emitter(graph=item_rid)
-    item = C.create_root(it_em, BDR + item_rid, BDO + "ImageInstance")
-    it_em.add(item, BDO + "numberOfVolumes", integer(1))
-    emitters.append(it_em)
-    it_em.add(item, BDO + "inCollection", iri(BDR + "PR1NEPAL00"))
-    it_em.add(item, BDO + "scanInfo", lit(SCAN_INFO, "en"))
-    if ctx.add_work_has_item:
-        em.add(work, BDO + "instanceHasReproduction", iri(BDR + item_rid))
-    adm_item = C.create_admin_root(it_em, item)
-    C.add_status(it_em, adm_item, "released")
-    it_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
-    it_em.add(adm_item, ADM + "restrictedInChina", boolean(False))
-    it_em.add(adm_item, ADM + "contentLegal", iri(BDA + "LD_BDRC_PD"))
-
     volume_rid = line[2].strip()
-    volume = BDR + volume_rid
+    it_em, item, volume = image_instance(ctx, em, work, abstract, wrid, volume_rid,
+                                         "PR1NEPAL00", "LD_BDRC_PD", None, emitters)
+    it_em.add(item, BDO + "numberOfVolumes", integer(1))
+    it_em.add(item, BDO + "scanInfo", lit(SCAN_INFO, "en"))
     volume_a = BDA + volume_rid
-    it_em.add(volume, RDF_TYPE, iri(BDO + "ImageGroup"))
     it_em.add(volume_a, RDF_TYPE, iri(ADM + "AdminData"))
     it_em.add(volume_a, ADM + "adminAbout", iri(volume))
     it_em.add(volume_a, ADM + "legacyImageGroupRID", lit(volume_rid))
-    if ctx.add_volume_of:
-        it_em.add(volume, BDO + "volumeOf", iri(item))
-    if ctx.add_item_has_volume:
-        it_em.add(item, BDO + "instanceHasVolume", iri(volume))
-    it_em.add(volume, BDO + "volumeNumber", integer(1))
     it_em.add(volume, BDO + "volumePagesTbrcIntro", integer(0))
-    if ctx.add_item_for_work:
-        it_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "M" + wrid))
-        if work_a is not None:
-            em_a.add(work_a, BDO + "workHasInstance", iri(BDR + item_rid))
-            it_em.add(item, BDO + "instanceOf", iri(BDR + abstract_rid))
-        else:
-            C.add_symmetric_property(ctx, it_em, "instanceOf", item_rid, abstract_rid)
     it_em.add(volume, BDO + "imageList", lit(""))
     it_em.add(volume, BDO + "imageCount", integer(0))
     it_em.add(volume, BDO + "volumePagesTotal", integer(0))

@@ -17,13 +17,13 @@ from xmltoldmigration_spark.kg.common import Ctx
 from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA, emitter_rows, error_row, to_batches
 
 
-def transfer_to_parsed(csv_df: DataFrame, transfer_name: str,
-                       one_direction: bool = False, auth=None) -> DataFrame:
+def transfer_to_parsed(csv_df: DataFrame, transfer_name: str, auth=None) -> DataFrame:
     """CSV rows -> tagged parse-output rows (same schema as kg/parse.py).
 
     `transfer_name` is one of eap/cudl/gretil/nsi/hodgson/femc; columns of
     `csv_df` must be the positional columns of the source CSV (c0..cN).
-    `auth` is handled as in `parse_src`.
+    `auth` is handled as in `parse_src`.  Transfers keep both directions
+    of every symmetric pair (normalizeOneDirection(false, false)).
     """
     if auth is None:
         from xmltoldmigration_spark.kg.authority import get_authority
@@ -33,16 +33,16 @@ def transfer_to_parsed(csv_df: DataFrame, transfer_name: str,
         f"xmltoldmigration_spark.kg.transfers.{transfer_name}"
     ).resources_from_line
     return csv_df.mapInArrow(
-        lambda batches: to_batches(_transfer_rows(batches, from_line, one_direction, auth)),
+        lambda batches: to_batches(_transfer_rows(batches, from_line, auth)),
         schema=PARSED_SCHEMA,
     )
 
 
-def _transfer_rows(batches, from_line, one_direction: bool, auth):
+def _transfer_rows(batches, from_line, auth):
     for rb in batches:
         for row in zip(*(col.to_pylist() for col in rb.columns)):
             line = [("" if v is None else str(v)) for v in row]
-            ctx = Ctx(auth=auth, one_direction=one_direction, prefer_many=False)
+            ctx = Ctx(auth=auth, one_direction=False)
             try:
                 emitters = from_line(line, ctx)
             except Exception as e:

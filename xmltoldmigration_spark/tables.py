@@ -1,8 +1,7 @@
 """Loaders for the driver-generated synthetic tables (TESTDATA.md).
 
 All queries() entries read through here so predicate pushdown / column
-pruning behavior is uniform and the table set matches the DuckDB oracle's
-pre-registered views.
+pruning behavior is uniform.
 """
 
 from __future__ import annotations
@@ -11,31 +10,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for spark.sql use."""
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
