@@ -117,7 +117,6 @@ def test_etext_content_nopages_golden():
     from xmltoldmigration_spark.kg.authority import get_authority
     from xmltoldmigration_spark.kg.common import Ctx
     from xmltoldmigration_spark.kg.migrators import etext as etext_mod
-    from xmltoldmigration_spark.kg.model import BDA, BDR
 
     xml_path = XML_DIR / "EtextTest.xml"
     golden = (XML_DIR.parent / "ttl" / "EtextTest-content-noPages.txt").read_text(
@@ -129,10 +128,6 @@ def test_etext_content_nopages_golden():
         root, ctx,
         is_paginated=False,
         needs_page_name_translation=False,
-        provider_uri=BDA + "CP001",
-        collection_uri=BDR + "PR0ET001",
-        first=True,
-        test_mode=True,
     )
     assert content == golden.strip()
 

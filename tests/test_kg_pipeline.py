@@ -16,14 +16,6 @@ from xmltoldmigration_spark.sources import corpus
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from xmltoldmigration_spark.session import get_spark
-
-    s = get_spark("kg-pipeline-test", master="local[4]", shuffle_partitions=8)
-    yield s
-
-
-@pytest.fixture(scope="module")
 def fixture_out(spark, tmp_path_factory):
     if not corpus.XML_DIR.exists():
         pytest.skip("no golden corpus")

@@ -164,7 +164,7 @@ def test_rkts_transfer_routing(tmp_path):
     assert rkts.EDITION_RIDS[0] not in split_graphs
 
 
-def test_rkts_parsed_split_outlines(tmp_path):
+def test_rkts_parsed_split_outlines(spark, tmp_path):
     """rkts_parsed(split_outlines=True) must union the typed edition-seed
     rows (o_lang/o_datatype all-None — name-only schema inference would
     raise CANNOT_DETERMINE_TYPE) and seed one O* outline graph per known
@@ -173,9 +173,7 @@ def test_rkts_parsed_split_outlines(tmp_path):
 
     _pytest.importorskip("pyspark")
     from xmltoldmigration_spark.kg.transfers import rkts
-    from xmltoldmigration_spark.session import get_spark
 
-    spark = get_spark("rkts-split-test", master="local[4]", shuffle_partitions=8)
     d = tmp_path / "rkts"
     rkts.write_synthetic_ttl_dir(str(d), n_works=2)
     parsed = rkts.rkts_parsed(spark, str(d), split_outlines=True)
@@ -196,7 +194,7 @@ def test_rkts_parsed_split_outlines(tmp_path):
     )
 
 
-def test_rkts_pipeline_merge(tmp_path):
+def test_rkts_pipeline_merge(spark, tmp_path):
     """rKTs rows union into the pipeline as a second source: triples land
     in the final graph table and error rows land in the errors side table."""
     import pytest as _pytest
@@ -204,10 +202,8 @@ def test_rkts_pipeline_merge(tmp_path):
     _pytest.importorskip("pyspark")
     from xmltoldmigration_spark.kg.transfers import rkts
     from xmltoldmigration_spark.plans.pipeline import Pipeline
-    from xmltoldmigration_spark.session import get_spark
     from xmltoldmigration_spark.sources import corpus
 
-    spark = get_spark("rkts-merge-test", master="local[4]", shuffle_partitions=8)
     d = tmp_path / "rkts"
     rkts.write_synthetic_ttl_dir(str(d), n_works=4)
     src = corpus.load_synthetic_src(spark, 30, num_partitions=2)

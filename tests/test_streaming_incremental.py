@@ -3,15 +3,7 @@ exactly once across restarts via the streaming checkpoint."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from xmltoldmigration_spark.session import get_spark
-
-    return get_spark("kg-stream-test", master="local[4]", shuffle_partitions=4)
 
 
 def test_stream_parse_exactly_once(spark, tmp_path):

@@ -79,7 +79,11 @@ def normalize_keep(s: str) -> str:
 
 @dataclass
 class Ctx:
-    """Per-record migration context: authority tables + side outputs."""
+    """Per-record migration context: authority tables + side outputs.
+
+    Each Ctx serves one record, so it holds no state for another record
+    to read: a cross-record fact leaves as a side row (`result.contents`,
+    `result.links`) and meets its reader in a pipeline join."""
 
     # the run's tables, handed in by the caller; a bare Ctx() gets the
     # empty authority, never a read of the resource files
@@ -88,14 +92,6 @@ class Ctx:
     # per-graph logDate -> logEntry node (same-date merge for I* graphs,
     # CommonMigration.java:1062-1070)
     log_by_date: dict = field(default_factory=dict)
-    # cross-record first-wins state (A5/A6); each Ctx serves one record,
-    # so a field one record type writes and another reads
-    # (etext_instances, work_vol_names) is empty where it is read
-    series_members_to_works: dict = field(default_factory=dict)
-    series_members_to_work_labels: dict = field(default_factory=dict)
-    worktopics: dict = field(default_factory=dict)
-    etext_instances: dict = field(default_factory=dict)
-    work_vol_names: dict = field(default_factory=dict)  # workId -> {volnum: (value, tag)}
     # SymetricNormalization.normalizeOneDirection(oneDirection,
     # preferManyOverOne) (java:44-62): the XML corpus runs (true, false);
     # the CSV transfers run (false, false) -> both directions kept.
@@ -459,19 +455,18 @@ def add_log_entry(
     rez: str,
     entry_num: int,
     syncfound: bool,
-    is_outline: bool,
 ) -> bool:
     """CommonMigration.addLogEntry:958-1117 — one <entry> -> one bda:LG node."""
     if e is None:
         return syncfound
     log_entry = None  # resolved name; None -> mint facet node at the end
-    log_entry_type = ADM + ("UpdateOutlineData" if is_outline else "UpdateData")
+    log_entry_type = ADM + "UpdateData"
     datevalue = attr(e, "when")
     rez_local = _local(rez)
     rid = rez_local[1:] if rez_local.startswith("MW") else rez_local
     is_batch = False
     log_agent = None
-    isoldstyle = bool(_OLDSTYLE_RID.match(rid)) and not is_outline
+    isoldstyle = bool(_OLDSTYLE_RID.match(rid))
 
     if (
         (rid.startswith("W1FEMC") and entry_num == 1)
@@ -491,7 +486,7 @@ def add_log_entry(
         elif rid.startswith(("P0RK", "L1RK", "G9GBX")):
             log_entry_type = ADM + "InitialDataImport"
         else:
-            log_entry_type = ADM + ("InitialOutlineData" if is_outline else "InitialDataCreation")
+            log_entry_type = ADM + "InitialDataCreation"
     if rid.startswith("W1FEMC") and entry_num == 0:
         log_entry_type = ADM + "InitialDataCreation"
 
@@ -511,9 +506,9 @@ def add_log_entry(
         or whovalue == "add-works-to-PR1CTC16"
     ):
         if log_entry_type.endswith("InitialDataCreation"):
-            log_entry_type = ADM + ("InitialOutlineDataImport" if is_outline else "InitialDataImport")
+            log_entry_type = ADM + "InitialDataImport"
         else:
-            log_entry_type = ADM + ("UpdateOutlineData" if is_outline else "UpdateData")
+            log_entry_type = ADM + "UpdateData"
         is_batch = True
         log_agent = whovalue
         whovalue = ""
@@ -541,9 +536,9 @@ def add_log_entry(
 
     if date_lex is not None and _DATES_OF_AUTO.get(date_lex_utc) == value:
         if log_entry_type.endswith("InitialDataCreation"):
-            log_entry_type = ADM + ("InitialOutlineDataImport" if is_outline else "InitialDataImport")
+            log_entry_type = ADM + "InitialDataImport"
         else:
-            log_entry_type = ADM + ("UpdateOutlineData" if is_outline else "UpdateData")
+            log_entry_type = ADM + "UpdateData"
         is_batch = True
         log_entry = BDA + "LGIM" + T.md5_hex(date_lex_utc + value, 10)
 
@@ -559,7 +554,7 @@ def add_log_entry(
             log_entry = ctx.log_by_date[date_lex]
 
     if value.startswith("Convert2Outline"):
-        log_entry_type = ADM + ("InitialOutlineDataImport" if is_outline else "InitialDataImport")
+        log_entry_type = ADM + "InitialDataImport"
         log_agent = value
         value = ""
 
@@ -605,17 +600,17 @@ def add_log_entry(
     return syncfound
 
 
-def add_log(ctx: Ctx, em: Emitter, root: ET.Element, rez: str, ns: str, is_outline: bool) -> None:
+def add_log(ctx: Ctx, em: Emitter, root: ET.Element, rez: str, ns: str) -> None:
     """CommonMigration.addLog:1121-1152."""
     syncfound = False
     for log in elems(root, ns, "log"):
         for j, entry in enumerate(elems(log, ns, "entry")):
-            syncfound = add_log_entry(ctx, em, entry, rez, j, syncfound, is_outline)
+            syncfound = add_log_entry(ctx, em, entry, rez, j, syncfound)
         no_ns = [c for c in log.iter("entry")]
         for k, entry in enumerate(no_ns):
-            syncfound = add_log_entry(ctx, em, entry, rez, k, syncfound, is_outline)
+            syncfound = add_log_entry(ctx, em, entry, rez, k, syncfound)
     rid = _local(rez)
-    if not is_outline and _OLDSTYLE_RID.match(rid) and not rid.startswith("I"):
+    if _OLDSTYLE_RID.match(rid) and not rid.startswith("I"):
         node = em.facet_node(FACET_LOG_ENTRY)
         em.add(node, RDF_TYPE, iri(ADM + "InitialDataCreation"))
         em.add(rez, ADM + "logEntry", iri(node))
@@ -1218,7 +1213,7 @@ def add_subjects(ctx: Ctx, em: Emitter | None, main: str, root: ET.Element, ns: 
     """CommonMigration.addSubjects:1831-1900 (J5-adjacent W->WA hop).
 
     With em=None returns ["prop-rid", ...] instead of emitting (the
-    deferred-worktopics path, A6)."""
+    outline's worktopics hand-off, A6)."""
     needs_commentary = False
     has_commentary = False
     res: list[str] | None = None

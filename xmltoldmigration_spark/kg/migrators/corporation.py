@@ -37,7 +37,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     C.add_names(ctx, em, root, main, NS)
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     C.add_descriptions(ctx, em, root, main, NS)
 
     for current in C.elems(root, NS, "member"):

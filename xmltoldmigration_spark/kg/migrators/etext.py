@@ -101,10 +101,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
         root, ctx,
         is_paginated=True,
         needs_page_name_translation=npt,
-        provider_uri=BDA + "CP001",
-        collection_uri=BDR + "PR0ET001",
-        first=True,
-        test_mode=True,
     )
     return [etext_em, item_em]
 
@@ -114,11 +110,6 @@ def migrate_one_etext(
     ctx: Ctx,
     is_paginated: bool,
     needs_page_name_translation: bool,
-    provider_uri: str,
-    collection_uri: str,
-    first: bool,
-    test_mode: bool = False,
-    image_num_page_num: dict | None = None,
 ):
     file_desc = root.find(_tei("teiHeader/fileDesc"))
     title_stmt = file_desc.find(_tei("titleStmt"))
@@ -131,7 +122,6 @@ def migrate_one_etext(
             indicated_work_id = C.text_of(idno).strip()
             break
     e_instance_id = "IE" + indicated_work_id[1:]
-    born_digital = indicated_work_id in ctx.etext_instances
     abstract_work_id = "WA" + indicated_work_id[1:]
     other = ctx.auth.constraint_wa("M" + indicated_work_id, abstract_work_id)
     if other is not None:
@@ -150,26 +140,26 @@ def migrate_one_etext(
 
     item_em = Emitter(graph=e_instance_id)
     item = BDR + e_instance_id
-    if first:
-        C.create_root(item_em, item, BDO + "EtextInstance")
-        item_em.add(item, BDO + "contentMethod",
-                    iri(BDR + ("ContentMethod_OCR" if needs_page_name_translation
-                               else "ContentMethod_ComputerInput")))
-        item_em.add(item, BDO + "inCollection", iri(collection_uri))
-        adm_item = C.create_admin_root(item_em, item)
-        item_em.add(adm_item, ADM + "contentProvider", iri(provider_uri))
-        item_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
-        C.add_released(item_em, adm_item)
-        # the work's access and ric reach this AdminData in the pipeline
-        # (J13: Pipeline._propagate_work_admin and the ric side join)
-        item_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
-        if not born_digital:
-            item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + indicated_work_id))
-            item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "M" + indicated_work_id))
-            # back-links into work / image-instance graphs (J14) — emitted
-            # as link rows, joined in the pipeline instead of file rewrites
-            ctx.link(etext_id, "instanceHasReproduction", indicated_work_id)
-        item_em.add(item, BDO + "instanceOf", iri(BDR + abstract_work_id))
+    C.create_root(item_em, item, BDO + "EtextInstance")
+    item_em.add(item, BDO + "contentMethod",
+                iri(BDR + ("ContentMethod_OCR" if needs_page_name_translation
+                           else "ContentMethod_ComputerInput")))
+    item_em.add(item, BDO + "inCollection", iri(BDR + "PR0ET001"))
+    adm_item = C.create_admin_root(item_em, item)
+    item_em.add(adm_item, ADM + "contentProvider", iri(BDA + "CP001"))
+    item_em.add(adm_item, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
+    C.add_released(item_em, adm_item)
+    # the work's access and ric reach this AdminData in the pipeline
+    # (J13: Pipeline._propagate_work_admin and the ric side join)
+    item_em.add(adm_item, ADM + "access", iri(BDA + "AccessOpen"))
+    # born-digital etexts keep these too: telling them apart needs the
+    # work's unicodeText flag, another record (COVERAGE.md)
+    item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + indicated_work_id))
+    item_em.add(item, BDO + "instanceReproductionOf", iri(BDR + "M" + indicated_work_id))
+    # back-links into work / image-instance graphs (J14) — emitted
+    # as link rows, joined in the pipeline instead of file rewrites
+    ctx.link(etext_id, "instanceHasReproduction", indicated_work_id)
+    item_em.add(item, BDO + "instanceOf", iri(BDR + abstract_work_id))
 
     etext_em.add(etext, BDO + "eTextInInstance", iri(BDR + e_instance_id))
     adm_etext = BDA + etext_id
@@ -228,8 +218,7 @@ def migrate_one_etext(
             break
 
     content = migrate_body(
-        root, ctx, etext_em, etext_id, image_num_page_num,
-        needs_page_name_translation, is_paginated,
+        root, ctx, etext_em, etext_id, needs_page_name_translation, is_paginated,
     )
     ctx.result.contents.append(("etext:" + etext_id, content))
     return etext_em, item_em, content
@@ -240,7 +229,6 @@ def migrate_body(
     ctx: Ctx,
     em: Emitter,
     etext_id: str,
-    image_num_page_num: dict | None,
     needs_page_name_translation: bool,
     keep_pages: bool,
 ) -> str:
@@ -262,16 +250,7 @@ def migrate_body(
         em.add(etext, BDO + "eTextHasPage", iri(page_r))
         page_num = par.get("n", "")
         if page_num:
-            if image_num_page_num is not None:
-                dotidx = page_num.rfind(".")
-                if dotidx == -1:
-                    continue
-                page_i = image_num_page_num.get(page_num[:dotidx].lower())
-                if page_i is None:
-                    ctx.error("gen", etext_id, etext_id, "page", f"cannot find image {page_num}")
-                else:
-                    em.add(page_r, BDO + "seqNum", integer(page_i))
-            elif needs_page_name_translation:
+            if needs_page_name_translation:
                 # distributed variant of EtextBodyMigration.java:108-120:
                 # instead of a record-local lookup into another record's
                 # file, emit a pageimg reference row; the pipeline joins

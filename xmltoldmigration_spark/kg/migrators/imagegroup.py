@@ -14,7 +14,6 @@ from xmltoldmigration_spark.kg.model import (
     BDR,
     FACET_LOG_ENTRY,
     RDF_TYPE,
-    SKOS,
     XSD,
     Emitter,
     integer,
@@ -45,14 +44,13 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
                 voln = int(num) if num else 1
             except ValueError:
                 voln = 1
-            migrate_into(root, ctx, em, item, C.attr(root, "RID"), voln,
-                         item_local, "M" + work)
+            migrate_into(root, ctx, em, item, C.attr(root, "RID"), voln, item_local)
             ctx.link(C.attr(root, "RID"), "isVolumeOf", work)
             return [em]
     em = Emitter(graph="WTestInstance")
     item = C.create_root(em, BDR + "WTestInstance", BDO + "ImageInstance")
     C.create_admin_root(em, item)
-    migrate_into(root, ctx, em, item, "testVolName", 1, "testVolumesName", "testWork")
+    migrate_into(root, ctx, em, item, "testVolName", 1, "testVolumesName")
     return [em]
 
 
@@ -64,7 +62,6 @@ def migrate_into(
     volume_name: str,
     volume_number: int,
     volumes_name: str,
-    work_id: str,
 ) -> None:
     ig_rid = C.attr(root, "RID").strip()
     status = C.attr(root, "status").strip()
@@ -78,16 +75,12 @@ def migrate_into(
         ctx.error("gen", volumes_name, volume_name, "imagegroup",
                   f"invalid volume number, must be a positive integer, got `{volume_number}`")
     em.add(vol, BDO + "volumeNumber", integer(volume_number))
-    vol_names = ctx.work_vol_names.get(work_id, {})
-    if volume_number in vol_names:
-        v, t = vol_names[volume_number]
-        em.add(vol, SKOS + "prefLabel", lit(v, t))
     if not ctx.one_direction:
         em.add(item, BDO + "instanceHasVolume", iri(vol))
     em.add(vol, BDO + "volumeOf", iri(item))
 
     C.add_status(em, adm_vol, status)
-    C.add_log(ctx, em, root, adm_vol, NS, False)
+    C.add_log(ctx, em, root, adm_vol, NS)
     C.add_descriptions(ctx, em, root, vol, NS)
     # raw ondisk image list side-output: feeds the distributed etext
     # page-name translation join (MigrationHelpers.getImgmapForImggrp:

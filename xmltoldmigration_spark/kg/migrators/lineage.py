@@ -70,7 +70,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
     C.add_descriptions(ctx, em, root, main, NS)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     _add_locations(ctx, em, root, main)
 
     for current in C.elems(root, NS, "object"):

@@ -20,7 +20,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     em.add(adm, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     C.add_descriptions(ctx, em, root, main, NS, guess_label=True)
     C.finalize_graph(em, adm, "office")
     return [em]

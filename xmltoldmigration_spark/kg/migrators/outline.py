@@ -62,6 +62,9 @@ class _State:
         self.i = 0
         self.used_rid: set[str] = set()
         self.used_rid_a: set[str] = set()
+        # A6: a node whose abstract redirects hands its topics to the
+        # abstract's node, when that node comes later in this outline
+        self.worktopics: dict[str, list[str]] = {}
 
 
 def get_part_rid(state: _State, node_rid: str, work_id: str) -> str:
@@ -122,7 +125,7 @@ def migrate_outline(root: ET.Element, ctx: Ctx, work_id: str, ancestor_creators:
 
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     C.add_descriptions(ctx, em, root, main, NS, False)
     ancestor_creators = _add_creators(ctx, em, main, root, True, root_work, None, ancestor_creators)
 
@@ -242,7 +245,7 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
                 em_a.add(adm_a, ADM + "restrictedInChina", boolean(True))
             em.add(node, BDO + "instanceOf", iri(node_a))
             em_a.add(node_a, BDO + "workHasInstance", iri(node))
-            topics = ctx.worktopics.pop(a_node_rid, None)
+            topics = state.worktopics.pop(a_node_rid, None)
             if topics:
                 for t in topics:
                     prop, _, target = t.partition("-")
@@ -281,9 +284,6 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
                              label[0] if label else None)
     if loc_vp is not None:
         loc_vp = loc_vp + (rid,)
-        if label is not None:
-            vol_labels = ctx.work_vol_names.setdefault(work_id, {})
-            vol_labels[loc_vp[0]] = label
     if loc_vp is not None and previous_loc is not None:
         if previous_loc[2] > loc_vp[0] or (previous_loc[2] == loc_vp[0] and previous_loc[3] > loc_vp[1]):
             ctx.error("outline", work_id, rid, "location",
@@ -294,7 +294,7 @@ def _add_node(ctx, em, r, e, work_id, state, previous_loc, legacy_rid, part_inde
     elif other_abstract is not None:
         topics = C.add_subjects(ctx, None, node, e, NS)
         if topics:
-            ctx.worktopics[other_abstract] = topics
+            state.worktopics[other_abstract] = topics
 
     for current in C.children(e, NS, "site"):
         stype = C.attr(current, "type").strip().lower()

@@ -167,7 +167,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
 
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     C.finalize_graph(em, adm, "person")
     return [em]
 

@@ -105,7 +105,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     C.add_externals(ctx, em, root, main, NS)
     C.add_descriptions(ctx, em, root, main, NS)
     _add_events(ctx, em, root, main, rid)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
 
     for gis in C.elems(root, NS, "gis"):
         _add_gis(ctx, em, gis, main, adm)

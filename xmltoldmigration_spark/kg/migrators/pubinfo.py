@@ -208,7 +208,8 @@ def migrate_into(
     status = C.attr(root, "status")
     extra_emitters: list[Emitter] = []
 
-    # series (J6/A5 — first member creates the WAS serial work)
+    # series (J6); every member writes the WAS serial work: the
+    # reference's first-wins rule (A5) needs a pipeline join
     series_names = []
     for current in C.elems(root, NS, "seriesName"):
         lv = C.get_literal(ctx, current, C.EWTS, "seriesName", rid, None)
@@ -221,22 +222,16 @@ def migrate_into(
             C.create_admin_root(em, a_iri)
             em.add(main, BDO + "instanceOf", iri(a_iri))
             em.add(a_iri, BDO + "workHasInstance", iri(main))
-        other_rid = ctx.auth.series_clusters.get(work_rid, work_rid)
-        serial_work_id = ctx.series_members_to_works.get(other_rid)
-        if serial_work_id is None and status != "withdrawn":
-            serial_work_id = "WAS" + other_rid[1:]
-            ctx.series_members_to_works[other_rid] = serial_work_id
+        if status != "withdrawn":
+            serial_work_id = "WAS" + ctx.auth.series_clusters.get(work_rid, work_rid)[1:]
             em_s = Emitter(graph=serial_work_id)
             serial_w = C.create_root(em_s, BDR + serial_work_id, BDO + "SerialWork")
             adm_s = C.create_admin_root(em_s, serial_w)
             C.add_status(em_s, adm_s, status)
             em_s.add(adm_s, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
-            if serial_work_id not in ctx.series_members_to_work_labels:
-                for v, t in series_names:
-                    em_s.add(serial_w, SKOS + "prefLabel", lit(v, t))
-                ctx.series_members_to_work_labels[serial_work_id] = series_names
+            for v, t in series_names:
+                em_s.add(serial_w, SKOS + "prefLabel", lit(v, t))
             extra_emitters.append(em_s)
-        if serial_work_id is not None:
             em.add(main, BDO + "serialInstanceOf", iri(BDR + serial_work_id))
             C.add_symmetric_property(ctx, em, "serialInstanceOf", C._local(main), serial_work_id)
         em.add(main, BDO + "instanceOf", iri(a_iri))
@@ -255,7 +250,7 @@ def migrate_into(
     C.add_notes(ctx, em, root, main, NS)
     C.add_externals(ctx, em, root, main, NS)
     adm_main = BDA + C._local(main)
-    C.add_log(ctx, em, root, adm_main, NS, False)
+    C.add_log(ctx, em, root, adm_main, NS)
 
     # printType (C19)
     found_print_type = ""

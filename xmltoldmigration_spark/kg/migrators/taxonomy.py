@@ -24,7 +24,7 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     em.add(main, BDO + "isRoot", ("lit", "true", None, "http://www.w3.org/2001/XMLSchema#boolean"))
     em.add(main, RDF_TYPE, iri(BDO + "Taxonomy"))
     adm = C.create_admin_root(em, main)
-    C.add_log(ctx, em, root, adm, NS, False)
+    C.add_log(ctx, em, root, adm, NS)
     counter = _Counter()
     _add_nodes(ctx, em, main, root, rid, counter)
     C.finalize_graph(em, adm, "outline")

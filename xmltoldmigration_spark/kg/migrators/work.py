@@ -139,8 +139,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
     adm_main_a = None
     em_s = None  # serial-work graph emitter
     serial_w = None
-    serial_work_id = ""
-    other_abstract = None
     canonical_conceptual = False
 
     redirection_instance_id = ctx.auth.instance_clusters.get(work_id)
@@ -163,25 +161,21 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
         em.add(main, BDO + "instanceOf", iri(main_a))
         em_a.add(main_a, BDO + "workHasInstance", iri(main))
         emitters.append(em_a)
-        serial_work_id = ctx.series_members_to_works.get(other_member)
-        if serial_work_id is None:
-            serial_work_id = "WAS" + (info_parent[1:] if info_parent else other_member[1:])
-            ctx.series_members_to_works[other_member] = serial_work_id
-            em_s = Emitter(graph=serial_work_id)
-            # NB reference quirk: serialW root triples land in mA's model
-            # (WorkMigration.java:333 createRoot(mA, ...)) — we put them in
-            # the serial graph, set-equivalent after the merge
-            serial_w = BDR + serial_work_id
-            C.create_root(em_s, serial_w, BDO + "SerialWork")
-            adm_serial = C.create_admin_root(em_s, serial_w)
-            C.add_status(em_s, adm_serial, status)
-            em_s.add(adm_serial, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
-            emitters.append(em_s)
-            em.add(main, BDO + "serialInstanceOf", iri(BDR + serial_work_id))
-            em_s.add(serial_w, BDO + "serialHasInstance", iri(main))
-        else:
-            em.add(main, BDO + "serialInstanceOf", iri(BDR + serial_work_id))
-            C.add_symmetric_property(ctx, em, "serialInstanceOf", "M" + work_id, serial_work_id)
+        # every member writes the serial work: the reference's
+        # first-wins rule (A5) needs a pipeline join
+        serial_work_id = "WAS" + (info_parent[1:] if info_parent else other_member[1:])
+        em_s = Emitter(graph=serial_work_id)
+        # NB reference quirk: serialW root triples land in mA's model
+        # (WorkMigration.java:333 createRoot(mA, ...)) — we put them in
+        # the serial graph, set-equivalent after the merge
+        serial_w = BDR + serial_work_id
+        C.create_root(em_s, serial_w, BDO + "SerialWork")
+        adm_serial = C.create_admin_root(em_s, serial_w)
+        C.add_status(em_s, adm_serial, status)
+        em_s.add(adm_serial, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
+        emitters.append(em_s)
+        em.add(main, BDO + "serialInstanceOf", iri(BDR + serial_work_id))
+        em_s.add(serial_w, BDO + "serialHasInstance", iri(main))
     elif info_node_type == "conceptualWork" and status != "withdrawn":
         em_a = Emitter(graph=a_work_id)
         if redirection_instance_id is not None:
@@ -205,7 +199,6 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
             add_redirection(em, work_id, ie_id)
             main = C.create_root(em, BDR + ie_id, BDO + "EtextInstance")
             emitters.append(em)
-            ctx.etext_instances[work_id] = True
         else:
             em = Emitter(graph="M" + work_id)
             if redirection_instance_id is not None:
@@ -239,8 +232,8 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
                 if not work_id.startswith("W1FEMC"):
                     add_redirection(em_a, a_work_id, other_abstract)
                     # graph reduced to the redirect stub: drop the Work root
-                    em_a.remove_matching(s=BDR + a_work_id)
-                    em_a.remove_matching(s=BDA + a_work_id)
+                    em_a.remove_matching(BDR + a_work_id)
+                    em_a.remove_matching(BDA + a_work_id)
                     main_a = None
                     adm_main_a = None
                 C.add_symmetric_property(ctx, em, "instanceOf", "M" + work_id, other_abstract)
@@ -260,9 +253,9 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
 
     # log entries go on the work if possible (WorkMigration.java:424-429)
     if adm_main_a is not None:
-        C.add_log(ctx, em_a, root, adm_main_a, NS, False)
+        C.add_log(ctx, em_a, root, adm_main_a, NS)
     elif adm_main is not None:
-        C.add_log(ctx, em, root, adm_main, NS, False)
+        C.add_log(ctx, em, root, adm_main, NS)
 
     if not canonical_conceptual:
         C.add_titles(
@@ -271,27 +264,13 @@ def migrate(root: ET.Element, ctx: Ctx) -> list[Emitter]:
             (em_a, main_a) if main_a is not None else None,
             guess_label=True,
         )
-    if is_series_member and serial_w is not None and main_a is not None:
-        if serial_work_id not in ctx.series_members_to_work_labels:
-            labels = [
-                k for k in em_a.triples
-                if k[0] == main_a and k[1] == SKOS + "prefLabel"
-            ]
-            for k in labels:
+    if serial_w is not None:
+        for k in em_a.triples:
+            if k[0] == main_a and k[1] == SKOS + "prefLabel":
                 em_s.add(serial_w, SKOS + "prefLabel", (k[2], k[3], k[4], k[5]))
-            ctx.series_members_to_work_labels[serial_work_id] = labels
 
     if main_a is not None:
         C.add_subjects(ctx, em_a, main_a, root, NS)
-        topics = ctx.worktopics.pop(a_work_id, None)
-        if topics:
-            for t in topics:
-                prop, _, target = t.partition("-")
-                em_a.add(main_a, BDO + prop, iri(BDR + target))
-    if other_abstract is not None and other_abstract != a_work_id and main is not None:
-        topics = C.add_subjects(ctx, None, main, root, NS)
-        if topics:
-            ctx.worktopics[other_abstract] = topics
 
     if main is not None:
         fpl_em = C.add_descriptions(

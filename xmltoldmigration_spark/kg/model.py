@@ -120,13 +120,9 @@ class Emitter:
     def remove(self, s: str, p: str, o: tuple) -> None:
         self.triples.pop((s, p, o[0], o[1], o[2], o[3]), None)
 
-    def remove_matching(self, s: str | None = None, p: str | None = None) -> None:
-        kill = [
-            k
-            for k in self.triples
-            if (s is None or k[0] == s) and (p is None or k[1] == p)
-        ]
-        for k in kill:
+    def remove_matching(self, s: str) -> None:
+        """Drop every triple whose subject is `s`."""
+        for k in [k for k in self.triples if k[0] == s]:
             del self.triples[k]
 
     def facet_node(self, facet: tuple[str, str], rdf_type: str | None = None) -> str:

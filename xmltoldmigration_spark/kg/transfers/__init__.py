@@ -36,8 +36,9 @@ from xmltoldmigration_spark.kg.model import (
 )
 
 
-def rkts_to_bdr(ctx: Ctx, rkts: str, indic_version: bool) -> str | None:
-    """EAPTransfer.rKTsToBDR:125-142 via abstract-rkts.csv."""
+def rkts_to_bdr(ctx: Ctx, rkts: str) -> str | None:
+    """EAPTransfer.rKTsToBDR:125-142 via abstract-rkts.csv, Indic version
+    (every transfer asks for it: K16 -> WA0RKI16)."""
     if not rkts or "?" in rkts:
         return None
     # abstract-rkts.csv maps WA rid -> rKTs id; the transfer needs the
@@ -49,7 +50,7 @@ def rkts_to_bdr(ctx: Ctx, rkts: str, indic_version: bool) -> str | None:
     if not rktsid.isdigit():
         return None
     prefix = "WA0RK" if rkts.startswith("K") else "WA0RT"
-    return prefix + ("I" if indic_version else "") + rktsid
+    return prefix + "I" + rktsid
 
 
 def abstract_work(ctx: Ctx, em: Emitter, inst: str, abstract_rid: str | None,

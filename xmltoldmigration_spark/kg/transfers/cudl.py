@@ -67,7 +67,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     orig_url = ORIG_URL_BASE + rid
     em.add(adm, ADM + "originalRecord", lit(orig_url, None, XSD + "anyURI"))
 
-    abstract_rid = rkts_to_bdr(ctx, line[4], True)
+    abstract_rid = rkts_to_bdr(ctx, line[4])
     em_a = None
     work_a = None
     if abstract_rid is None:

@@ -38,7 +38,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     work = C.create_root(em, BDR + "M" + rid, BDO + "Instance")
     emitters = [em]
 
-    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[15], True),
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[15]),
                              "WA" + base_rid, "LD_EAP_metadata", emitters)
     _, em_a, work_a = abstract
 

@@ -40,7 +40,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     if rkts:
         if "," in rkts:
             rkts = rkts[: rkts.index(",")]
-        abstract_rid = rkts_to_bdr(ctx, line[2], True)
+        abstract_rid = rkts_to_bdr(ctx, line[2])
     _, em_a, work_a = abstract_work(ctx, em, work, abstract_rid, "WA" + line[0][2:],
                                     "LD_GRETIL", emitters)
     if work_a is not None:

@@ -29,7 +29,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     work = C.create_root(em, BDR + "MW" + base, BDO + "Instance")
     emitters = [em]
 
-    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[5], True),
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[5]),
                              "WA" + base, "LD_IA_Metadata", emitters)
     _, em_a, work_a = abstract
     if work_a is not None:

@@ -65,7 +65,7 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     em.add(adm, ADM + "metadataLegal", iri(BDA + "LD_BDRC_CC0"))
     emitters = [em]
 
-    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[19], True),
+    abstract = abstract_work(ctx, em, work, rkts_to_bdr(ctx, line[19]),
                              "WA" + wrid[1:], "LD_BDRC_CC0", emitters)
     abstract_rid, em_a, work_a = abstract
     # reference quirk (NSITransfer.java:150-152): the symmetric call runs

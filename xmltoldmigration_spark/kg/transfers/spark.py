@@ -17,18 +17,15 @@ from xmltoldmigration_spark.kg.common import Ctx
 from xmltoldmigration_spark.kg.parse import PARSED_SCHEMA, emitter_rows, error_row, to_batches
 
 
-def transfer_to_parsed(csv_df: DataFrame, transfer_name: str, auth=None) -> DataFrame:
+def transfer_to_parsed(csv_df: DataFrame, transfer_name: str, auth) -> DataFrame:
     """CSV rows -> tagged parse-output rows (same schema as kg/parse.py).
 
     `transfer_name` is one of eap/cudl/gretil/nsi/hodgson/femc; columns of
     `csv_df` must be the positional columns of the source CSV (c0..cN).
-    `auth` is handled as in `parse_src`.  Transfers keep both directions
-    of every symmetric pair (normalizeOneDirection(false, false)).
+    `auth` is the run's Authority; it travels in the function, as in
+    `parse_src`.  Transfers keep both directions of every symmetric pair
+    (normalizeOneDirection(false, false)).
     """
-    if auth is None:
-        from xmltoldmigration_spark.kg.authority import get_authority
-
-        auth = get_authority()
     from_line = importlib.import_module(
         f"xmltoldmigration_spark.kg.transfers.{transfer_name}"
     ).resources_from_line

@@ -206,11 +206,8 @@ class Pipeline:
 
     def _read_stage(self, name: str) -> DataFrame:
         d = self._stage_dir(name)
-        schema = (d / "_DONE").read_text()
-        reader = self.spark.read
-        if schema:  # markers written before schemas were recorded are empty
-            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
-        return reader.parquet(str(d))
+        schema = T.StructType.fromJson(json.loads((d / "_DONE").read_text()))
+        return self.spark.read.schema(schema).parquet(str(d))
 
     def lineage(self) -> list[dict]:
         rows = []
