@@ -822,6 +822,40 @@ def test_ann_parameter_edges(spark):
     assert len(r2 & bf) >= len(r1 & bf)
 
 
+def test_topk_operators_share_one_tie_rule(spark):
+    """When every pair is a candidate (LSH probing all 4 buckets of 2
+    planes, IVF probing both cells), brute force, LSH and IVF return
+    identical rows.  Neighbours 1 and 2 of query 0 are a planted near-tie:
+    their cosines differ by less than 5e-7, the higher one on the larger
+    id, so the one tie rule (round(sim, 6) desc, then neighbour id) ranks
+    id 1 first in all three."""
+    import numpy as np
+
+    from xmltoldmigration_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        lsh_bucket_topk,
+    )
+
+    vecs = {0: [1.0, 0.0], 1: [4.0, 3.0], 2: [4.0, 3.0 - 3e-6],
+            3: [1.0, 1.0], 4: [0.0, 1.0], 5: [-1.0, 0.5]}
+    near = [np.float64(np.float32(vecs[i][0])) / np.linalg.norm(np.float32(vecs[i]))
+            for i in (1, 2)]
+    assert 0 < near[1] - near[0] < 5e-7 and round(near[0], 6) == round(near[1], 6)
+
+    emb = spark.createDataFrame(sorted(vecs.items()), "vec_id bigint, embedding array<float>")
+    qs = emb.filter(F.col("vec_id") == 0)
+    k = len(vecs) - 1
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    bf = rows(brute_force_topk(emb, qs, k=k))
+    assert bf[:2] == [(0, 1, 1), (0, 2, 2)] and len(bf) == k
+    assert rows(lsh_bucket_topk(emb, qs, k=k, n_planes=2, n_flip=2, n_tables=1)) == bf
+    assert rows(ivf_topk(emb, qs, k=k, n_centroids=2, n_probe=2)) == bf
+
+
 def test_exact_cosine_pairs_block_invariance(spark):
     """The blocked all-pairs result must not depend on the block grid:
     identical pair sets at rows_per_block 64 (many block pairs) and 4096

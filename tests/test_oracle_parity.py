@@ -205,7 +205,8 @@ def test_no_quadratic_joins_in_any_plan(spark):
     """Scale gate: no registry query may plan a CartesianProduct, and
     BroadcastNestedLoopJoin is allowed only where the build side is a
     literal prop-inverse dim (tools/plan_audit.py allowlist).  Plans are
-    compiled at sf0.001 — join strategy shape doesn't depend on sf, and
+    compiled at plan_audit.SF_DIR (sf0.001), the scale the snapshot was
+    written at — join strategy shape doesn't depend on sf, and
     a strategy flip (e.g. a lost equi-join condition turning a join
     quadratic) fails here before it ships.
 
@@ -213,16 +214,16 @@ def test_no_quadratic_joins_in_any_plan(spark):
     snapshot: shuffle and broadcast counts, pushed filters and each
     scan's column count, so a new exchange or a lost pushdown fails the
     suite and not just `git diff`."""
+    from tools import plan_audit
     from tools.plan_audit import _BNLJ_OK, _SKIP, OUT, audit_plan
     from xmltoldmigration_spark.queries import registry
 
     snapshot = json.loads(OUT.read_text())["queries"]
-    sf = "/root/testdata/sf0.001"
     bad = []
     for name, spec in sorted(registry().items()):
         if name in _SKIP:
             continue
-        plan = spec.fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        plan = spec.fn(spark, plan_audit.SF_DIR)._jdf.queryExecution().executedPlan().toString()
         facts = audit_plan(plan)
         if facts["cartesian"]:
             bad.append(f"{name}: CartesianProduct")

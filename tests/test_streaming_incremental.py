@@ -202,9 +202,8 @@ def test_stateful_sessionizer_split_invariant(events, cuts):
     import numpy as np
     import pandas as pd
 
-    from xmltoldmigration_spark.streaming.stateful import make_sessionize_group
+    from xmltoldmigration_spark.streaming.stateful import sessionize_group as fn
 
-    fn = make_sessionize_group(1800)
     ordered = sorted(events)  # stream arrival order = event-time order
     batches, prev = [], 0
     for c in sorted(min(c, len(ordered)) for c in cuts) + [len(ordered)]:

@@ -18,7 +18,7 @@ plan regression — a new shuffle, a lost pushdown, a join strategy flip —
 appears in `git diff` at the round boundary, the same way the golden
 fixtures pin values.
 
-Usage: python tools/plan_audit.py [sf_dir]
+Usage: python tools/plan_audit.py [sf_dir]   (default SF_DIR, sf0.001)
 """
 
 from __future__ import annotations
@@ -32,6 +32,9 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 OUT = REPO / ".plan_audit.json"
+# the one scale both this snapshot and its pytest gate
+# (test_no_quadratic_joins_in_any_plan) compile at
+SF_DIR = "/root/testdata/sf0.001"
 
 # queries whose BroadcastNestedLoopJoin build side is a literal/tiny dim
 # (a prop-inverse table of a handful of rows), which is the intended plan
@@ -75,7 +78,7 @@ def audit_plan(plan: str) -> dict:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
     from xmltoldmigration_spark.queries import registry
     from xmltoldmigration_spark.session import get_spark
 

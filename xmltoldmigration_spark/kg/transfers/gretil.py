@@ -33,14 +33,10 @@ def resources_from_line(line: list[str], ctx: Ctx) -> list[Emitter]:
     adm = C.create_admin_root(em, work)
     emitters = [em]
 
-    # the cut id is not the one looked up: the whole field is, so a
-    # `K16,K17` list mints a new WA work instead of linking WA0RKI16
-    abstract_rid = None
-    rkts = line[2]
-    if rkts:
-        if "," in rkts:
-            rkts = rkts[: rkts.index(",")]
-        abstract_rid = rkts_to_bdr(ctx, line[2])
+    # quirk: the whole field is looked up, not its id up to the first
+    # comma, so a `K16,K17` list mints a new WA work instead of linking
+    # WA0RKI16
+    abstract_rid = rkts_to_bdr(ctx, line[2]) if line[2] else None
     _, em_a, work_a = abstract_work(ctx, em, work, abstract_rid, "WA" + line[0][2:],
                                     "LD_GRETIL", emitters)
     if work_a is not None:

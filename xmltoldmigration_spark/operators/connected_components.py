@@ -55,7 +55,7 @@ def union_find(pairs) -> dict:
     return {n: find(n) for pair in pairs for n in pair}
 
 
-def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Return DataFrame[node, component] where component = min node id
     reachable from `node` over the undirected edge set.
 
@@ -66,11 +66,11 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     over (each iteration one shuffle join + aggregation, lineage truncated
     by localCheckpoint).
 
-    `edges` must have two columns of the same orderable type. Isolated
-    nodes appear only if present as a self-edge or in both columns.
+    `edges` must have columns `src` and `dst` of the same orderable type.
+    Isolated nodes appear only if present as a self-edge or in both columns.
     """
     if edges.limit(DRIVER_THRESHOLD + 1).count() <= DRIVER_THRESHOLD:
-        comp = union_find(edges.select(src, dst).collect())
+        comp = union_find(edges.select("src", "dst").collect())
         import pandas as pd
 
         # pandas -> Arrow path avoids per-row Py4J conversion
@@ -95,10 +95,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
         edges = edges.coalesce(target)
     # undirected: symmetrize once, dedup
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .union(edges.select(F.col(src).alias("a"), F.col(src).alias("b")))
-        .union(edges.select(F.col(dst).alias("a"), F.col(dst).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+        .union(edges.select(F.col("src").alias("a"), F.col("src").alias("b")))
+        .union(edges.select(F.col("dst").alias("a"), F.col("dst").alias("b")))
         .distinct()
     )
     # initial label = min direct neighbor (includes self via self-edges)

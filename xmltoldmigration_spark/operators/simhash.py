@@ -26,7 +26,6 @@ import itertools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,13 +84,10 @@ def simhash64(text: str) -> int:
 
 
 @F.pandas_udf(T.StringType())
-def _simhash_hex(texts: pd.Series) -> pd.Series:
+def simhash_hex(texts: pd.Series) -> pd.Series:
+    """Column UDF: simhash64 of each text as 16 lowercase hex digits."""
     vals = _simhash_from_texts(texts)
     return pd.Series([format(int(v), "016x") for v in vals], index=texts.index)
-
-
-def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash_hex") -> DataFrame:
-    return df.withColumn(out_col, _simhash_hex(F.col(text_col)))
 
 
 def hamming64(a: int, b: int) -> int:

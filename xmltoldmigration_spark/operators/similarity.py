@@ -1,24 +1,40 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the `embeddings` table shape: a `vec_id` column
+and an `embedding` column of array<float>.
 
 - brute_force_topk: exact cosine top-k — the (small) query matrix ships in
   the task closure and the corpus streams through one shuffle-free
   mapInPandas BLAS pass emitting batch-local top-k candidates. At 100 TB
   the corpus side stays partition-parallel; only the query set is
   collected (gated).
-- lsh_topk: random-hyperplane LSH bucketing — queries only probe their own
-  bucket (plus optional multi-probe), turning the scan into a bucket-local
-  join. The hyperplanes are a deterministic md5-seeded matrix so results are
-  reproducible across retries/executors.
+- lsh_bucket_topk: random-hyperplane LSH bucketing — queries only probe
+  their own bucket (plus optional multi-probe), turning the scan into a
+  bucket-local join. The hyperplanes are a deterministic md5-seeded matrix
+  so results are reproducible across retries/executors.
+- ivf_topk: inverted-file probing — each query scores only the corpus
+  vectors in its n_probe nearest coarse-quantizer cells.
+
+All three rank under one tie rule (`_top_k`), so on a candidate set that
+holds every pair they return identical rows.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+# brute_force_topk collects the query side to the driver: past this many
+# query rows the ANN operators are the ones to use
+MAX_QUERIES = 100_000
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Rows of `m` scaled to unit length; a zero row stays zero."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
 
 
 def _cosine(a: str, b: str):
@@ -30,46 +46,51 @@ def _cosine(a: str, b: str):
     return dot / (F.sqrt(na) * F.sqrt(nb))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 100_000,
-) -> DataFrame:
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """DataFrame[query_id, neighbor_id, rk]: the k best rows of
+    `scored[query_id, neighbor_id, sim]` per query, ranked by round(sim, 6)
+    descending, then neighbor_id.  BLAS summation order moves a cosine by
+    ~1e-7 with the batch's matrix blocking (i.e. with partitioning), far
+    below any real margin; at 6 decimals the order is a strict total order
+    that no partitioning can change."""
+    w = W.partitionBy("query_id").orderBy(F.round("sim", 6).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "rk")
+    )
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """DataFrame[query_id, neighbor_id, rk] — exact cosine top-k, self excluded.
 
     Broadcast-query GEMM: the query matrix is collected driver-side (gated
-    at `max_queries` — the operator's contract is a broadcast-small query
-    set, the same bound the previous crossJoin(broadcast(q)) shape imposed
-    implicitly) and shipped in the task closure; the corpus streams through
-    ONE shuffle-free mapInPandas pass that scores each Arrow batch with a
+    at MAX_QUERIES — the operator's contract is a broadcast-small query
+    set) and shipped in the task closure; the corpus streams through ONE
+    shuffle-free mapInPandas pass that scores each Arrow batch with a
     float64 BLAS matmul and emits only the batch-local top-k per query.
-    Similarities quantize to 6 decimals BEFORE selection (the ivf_topk
-    precedent: BLAS summation order varies ~1e-7 with batch blocking, far
-    below any real margin), making (sim desc, neighbor_id asc) a strict,
-    partitioning-independent total order — so the union of batch-local
-    top-ks provably contains the global top-k, and the final window ranks
-    O(n_batches * |q| * k) candidate rows instead of |corpus| * |q| pairs.
-    Replaces the interpreted aggregate/zip_with fold (no codegen for HOFs;
+    Similarities quantize to 6 decimals BEFORE selection, so the batch-local
+    order is `_top_k`'s: the union of batch-local top-ks provably contains
+    the global top-k, and the final window ranks O(n_batches * |q| * k)
+    candidate rows instead of |corpus| * |q| pairs.  Replaces the
+    interpreted aggregate/zip_with fold (no codegen for HOFs;
     exact_cosine_pairs measured that shape ~50x slower than BLAS)."""
     q_rows = (
         queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
+            F.col("vec_id").alias("qid"), F.col("embedding").cast("array<double>").alias("qv")
         )
-        .limit(max_queries + 1)
+        .limit(MAX_QUERIES + 1)
         .collect()
     )
-    if len(q_rows) > max_queries:
+    if len(q_rows) > MAX_QUERIES:
         raise ValueError(
-            f"brute_force_topk: query set exceeds max_queries={max_queries}; "
+            f"brute_force_topk: query set exceeds MAX_QUERIES={MAX_QUERIES}; "
             "use ivf_topk/lsh_bucket_topk for table-sized query sides"
         )
-    id_type = dict(corpus.dtypes)[id_col]
+    id_type = dict(corpus.dtypes)["vec_id"]
     cand_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
     c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("cv")
+        F.col("vec_id").alias("nid"), F.col("embedding").cast("array<double>").alias("cv")
     )
     if not q_rows:
         return (
@@ -81,8 +102,7 @@ def brute_force_topk(
             )
         )
     qids = np.array([r["qid"] for r in q_rows])
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    Qn = _unit(np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows]))
     n_q = len(q_rows)
 
     def score(batches):
@@ -92,8 +112,7 @@ def brute_force_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = _np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["cv"]])
-            Cn = C / _np.maximum(_np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+            Cn = _unit(_np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["cv"]]))
             sims = _np.round(Qn @ Cn.T, 6)  # (n_q, batch)
             nids = pdf["nid"].to_numpy()
             frames = []
@@ -114,38 +133,33 @@ def brute_force_topk(
             if frames:
                 yield _pd.concat(frames, ignore_index=True)
 
-    cand = c.mapInPandas(score, schema=cand_schema)
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk")
-    )
+    return _top_k(c.mapInPandas(score, schema=cand_schema), k)
 
 
-def _hyperplanes(dim: int, n_planes: int, table: int = 0) -> np.ndarray:
-    """Deterministic pseudo-random hyperplane matrix (md5 counter-mode).
-    `table` seeds independent matrices for the OR-amplified multi-table
-    construction; table 0 keeps the historical seed so single-table
-    results are stable across versions."""
-    prefix = "lsh-plane" if table == 0 else f"lsh-plane:t{table}"
-    vals = []
-    i = 0
-    while len(vals) < dim * n_planes:
-        h = hashlib.md5(f"{prefix}:{i}".encode()).digest()
-        for off in range(0, 16, 4):
-            vals.append(int.from_bytes(h[off : off + 4], "big") / 2**31 - 1.0)
-        i += 1
-    return np.array(vals[: dim * n_planes]).reshape(n_planes, dim)
+@functools.lru_cache(maxsize=8)
+def _planes(dim: int, n_planes: int, n_tables: int) -> np.ndarray:
+    """(n_tables * n_planes, dim) deterministic pseudo-random hyperplanes
+    (md5 counter-mode), one independent matrix per table of the
+    OR-amplified construction; table 0 keeps the historical seed so
+    single-table results are stable across versions.  Cached: each Python
+    worker builds a shape once and reuses it for every batch."""
+    n = dim * n_planes
+    mats = []
+    for t in range(n_tables):
+        prefix = "lsh-plane" if t == 0 else f"lsh-plane:t{t}"
+        raw = b"".join(
+            hashlib.md5(f"{prefix}:{i}".encode()).digest() for i in range(-(-n // 4))
+        )
+        # each digest is four big-endian uint32s, each mapped to [-1, 1)
+        vals = np.frombuffer(raw, dtype=">u4")[:n] / 2**31 - 1.0
+        mats.append(vals.reshape(n_planes, dim))
+    return np.vstack(mats)
 
 
 def lsh_candidates(
     corpus: DataFrame,
     queries: DataFrame,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_flip: int = 1,
     n_tables: int = 1,
 ) -> DataFrame:
@@ -169,29 +183,26 @@ def lsh_candidates(
     entries per vector — the classic LSH storage cost); the join is
     bucket-local on (table, bucket), and a pair colliding in several
     tables is deduped before scoring so the expensive cosine runs once
-    per pair.  Bucket ids come from one GEMM per Arrow batch; table ids and
-    probe masks are literals."""
+    per pair.  Bucket ids come from one GEMM per Arrow batch against
+    planes sized from the vectors themselves; table ids and probe masks
+    are literals."""
     from itertools import combinations
+
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
 
     masks = [0] + [
         sum(1 << p for p in bits)
         for r in range(1, min(n_flip, n_planes) + 1)
         for bits in combinations(range(n_planes), r)
     ]
-
-    # all L*k plane projections in one Arrow-batched GEMM against the
-    # closure-shipped plane matrix, packed into per-table bucket ids.
-    # Projections are quantized to 6 decimals before the sign test — BLAS
-    # GEMM noise is batch-shape-dependent (~1e-16..1e-7), so an unrounded
-    # near-zero projection would flip buckets with the partitioning.
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    P = np.vstack(
-        [_hyperplanes(dim, n_planes, table=t) for t in range(n_tables)]
-    )  # (L*k, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))  # bit p -> 2^p
 
+    # all L*k plane projections in one Arrow-batched GEMM, packed into
+    # per-table bucket ids.  Projections are quantized to 6 decimals before
+    # the sign test — BLAS GEMM noise is batch-shape-dependent
+    # (~1e-16..1e-7), so an unrounded near-zero projection would flip
+    # buckets with the partitioning.
     @pandas_udf(T.ArrayType(T.StructType([
         T.StructField("tbl", T.IntegerType()),
         T.StructField("bkt", T.LongType()),
@@ -200,7 +211,7 @@ def lsh_candidates(
         import pandas as pd
 
         V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        proj = np.round(V @ P.T, 6)  # (n, L*k)
+        proj = np.round(V @ _planes(V.shape[1], n_planes, n_tables).T, 6)  # (n, L*k)
         bits = (proj >= 0).reshape(len(V), n_tables, n_planes)
         bkts = (bits * weights).sum(axis=2)  # (n, L)
         tbl = np.arange(n_tables, dtype=np.int32)
@@ -215,8 +226,8 @@ def lsh_candidates(
 
     c = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("v"),
         )
         .withColumn("tb", F.explode(buckets))
         .select(
@@ -228,8 +239,8 @@ def lsh_candidates(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("v"),
         )
         .withColumn("tb", F.explode(buckets))
         .select(
@@ -245,14 +256,16 @@ def lsh_candidates(
             else F.col("tb.bkt").alias("bkt"),
         )
     )
-    cand = c.join(F.broadcast(q), ["tbl", "bkt"]).filter(
-        F.col("neighbor_id") != F.col("query_id")
+    # No forced broadcast: the query side is data-derived — AQE broadcasts
+    # it when it is actually small.  A pair colliding in several tables
+    # must score once; qv/cv are identical across the duplicates so the
+    # kept row is well-defined.
+    return (
+        c.join(q, ["tbl", "bkt"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .select("query_id", "qv", "neighbor_id", "cv")
     )
-    if n_tables > 1:
-        # a pair colliding in several tables must score once; qv/cv are
-        # identical across the duplicates so the kept row is well-defined
-        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    return cand.select("query_id", "qv", "neighbor_id", "cv")
 
 
 def lsh_bucket_topk(
@@ -260,34 +273,19 @@ def lsh_bucket_topk(
     queries: DataFrame,
     k: int = 5,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_flip: int = 1,
     n_tables: int = 1,
 ) -> DataFrame:
     """Approximate cosine top-k over the OR-amplified multi-probe LSH
     candidate set (see lsh_candidates for the construction and the
-    recall/scan trade).  Deterministic ties: (sim desc, neighbor_id)."""
-    scored = lsh_candidates(
-        corpus, queries, n_planes, id_col, vec_col, dim, n_flip, n_tables
-    ).withColumn("sim", _cosine("qv", "cv"))
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk")
+    recall/scan trade), ranked by `_top_k`."""
+    scored = lsh_candidates(corpus, queries, n_planes, n_flip, n_tables).withColumn(
+        "sim", _cosine("qv", "cv")
     )
+    return _top_k(scored, k)
 
 
-def exact_cosine_pairs(
-    df,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rows_per_block: int = 2048,
-    n_rows: int | None = None,
-):
+def exact_cosine_pairs(df, threshold: float, rows_per_block: int = 2048):
     """Exact all-pairs cosine >= threshold via BLOCKED numpy matmul.
 
     The naive pair join evaluates an interpreted higher-order-function
@@ -313,21 +311,17 @@ def exact_cosine_pairs(
     """
     import math
 
-    from pyspark.sql import functions as F
-
-    # an observed count sizes the block grid; callers that already know
-    # the cardinality pass n_rows and skip the extra evaluation of the
-    # upstream plan (for a plain table scan the count is metadata-only)
-    n = n_rows if n_rows is not None else df.count()
-    n_blocks = max(1, math.ceil(n / rows_per_block))
+    # an observed count sizes the block grid (for a plain table scan the
+    # count is metadata-only)
+    n_blocks = max(1, math.ceil(df.count() / rows_per_block))
 
     tagged = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
         # hash the id before the mod: raw pmod(id) breaks the
         # <=rows_per_block bound when ids are strided/clustered (e.g.
         # sharded allocators handing out k*1000 ids)
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     # block g serves as side A of pairs (g, j>=g) and side B of (i<=g, g);
     # both assignment lists are built on the SAME row and exploded once,
@@ -362,10 +356,8 @@ def exact_cosine_pairs(
             )
         ids_a = a["id"].to_numpy(dtype=np.int64)
         ids_b = b["id"].to_numpy(dtype=np.int64)
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in a["vec"]])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in b["vec"]])
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
+        A = _unit(np.stack([np.asarray(v, dtype=np.float64) for v in a["vec"]]))
+        B = _unit(np.stack([np.asarray(v, dtype=np.float64) for v in b["vec"]]))
         cos = A @ B.T
         ii, jj = np.nonzero(cos >= threshold)
         ia, ib = ids_a[ii], ids_b[jj]
@@ -384,12 +376,7 @@ def exact_cosine_pairs(
     )
 
 
-def ivf_index(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def ivf_index(corpus: DataFrame, n_centroids: int = 16):
     """Build a deterministic IVF (inverted-file) index: (centroids, cells).
 
     Coarse quantizer = n_centroids seed vectors chosen by a content-free
@@ -405,20 +392,14 @@ def ivf_index(
     probes only n_probe cells (the classic IVF trade of recall for a
     1/n_centroids scan fraction).
     """
-    import pandas as pd
-
     c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<float>").alias("vec")
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<float>").alias("vec")
     )
     seeds = [
         np.asarray(r["vec"], dtype=np.float64)
         for r in c.orderBy(F.xxhash64(F.col("id")), "id").limit(n_centroids).collect()
     ]
-
-    def normalize(m):
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    cmat = normalize(np.stack(seeds))
+    cmat = _unit(np.stack(seeds))
 
     def assign_df(df, cmat):
         cm = cmat
@@ -428,7 +409,7 @@ def ivf_index(
             import pandas as _pd
 
             for pdf in batches:
-                A = normalize(_np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["vec"]]))
+                A = _unit(_np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["vec"]]))
                 # quantize before argmax: BLAS GEMM results for one row vary
                 # ~1e-16..1e-7 with the batch's matrix blocking (i.e. with
                 # partitioning), so near-ties would flip cells run-to-run;
@@ -458,9 +439,7 @@ def ivf_index(
         .applyInPandas(cell_mean, "cell int, centroid array<double>")
         .collect()
     }
-    cmat2 = normalize(
-        np.stack([means.get(i, cmat[i]) for i in range(n_centroids)])
-    )
+    cmat2 = _unit(np.stack([means.get(i, cmat[i]) for i in range(n_centroids)]))
     cells = assign_df(c, cmat2)
     centroids = [(i, cmat2[i]) for i in range(n_centroids)]
     return centroids, cells
@@ -472,17 +451,15 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k via IVF probing (the second scale path
     next to the LSH buckets): each query scores only the vectors in its
     n_probe nearest cells — a fraction n_probe/n_centroids of the corpus.
-    Fully deterministic (golden-pinnable): cell assignment, probe order,
-    and the final ranking all quantize similarities to 6 decimals before
-    comparing, so BLAS summation-order noise (~1e-7, far below any real
-    margin) cannot flip a rank; ties then break on the lowest id."""
-    centroids, cells = ivf_index(corpus, n_centroids, id_col, vec_col)
+    Fully deterministic (golden-pinnable): cell assignment and probe order
+    quantize similarities to 6 decimals before comparing, and the final
+    ranking is `_top_k`'s, so BLAS summation-order noise cannot flip a
+    rank."""
+    centroids, cells = ivf_index(corpus, n_centroids)
     cmat = np.stack([m for _, m in centroids])
 
     # Probe assignment stays distributed: the tiny quantizer matrix ships
@@ -490,7 +467,7 @@ def ivf_topk(
     # queries gets its n_probe cells from one matmul + per-row argsort —
     # no driver collect, so the query side can itself be a large table.
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv")
     )
 
     def assign_probes(batches):
@@ -502,8 +479,7 @@ def ivf_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = _np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["qv"]])
-            Qn = Q / _np.maximum(_np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+            Qn = _unit(_np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["qv"]]))
             # quantize + stable sort: raw argsort of BLAS floats breaks ties
             # on ~1e-7 summation-order noise (batch-shape-dependent), which
             # made probe sets partition-sensitive; rounding to 6 decimals
@@ -533,13 +509,6 @@ def ivf_topk(
         .filter(F.col("id") != F.col("query_id"))
         .withColumn("cv", F.col("vec").cast("array<double>"))
         .withColumn("sim", _cosine("qv", "cv"))
+        .withColumnRenamed("id", "neighbor_id")
     )
-    # the fold in _cosine is sequential (bit-stable), but rank on the same
-    # 6-decimal quantization as the probe side so the whole operator's tie
-    # policy is one rule: round(sim, 6) desc, then id
-    w = W.partitionBy("query_id").orderBy(F.round(F.col("sim"), 6).desc(), F.col("id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", F.col("id").alias("neighbor_id"), "rk")
-    )
+    return _top_k(scored, k)

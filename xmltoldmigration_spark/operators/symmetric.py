@@ -21,40 +21,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+EDGE_COLS = ["src", "pred", "dst"]
 
-def complete_symmetric(
-    edges: DataFrame,
-    inverse_map: dict[str, str],
-    src: str = "src",
-    pred: str = "pred",
-    dst: str = "dst",
-) -> DataFrame:
-    """Union edges with their inverses per `inverse_map` (pred -> inverse
-    pred), dropping duplicates. Edges whose predicate has no inverse pass
-    through unchanged."""
+
+def complete_symmetric(edges: DataFrame, inverse_map: dict[str, str]) -> DataFrame:
+    """Union edges[src, pred, dst] with their inverses per `inverse_map`
+    (pred -> inverse pred), dropping duplicates. Edges whose predicate has
+    no inverse pass through unchanged."""
     spark = edges.sparkSession
     inv = spark.createDataFrame(
         [(k, v) for k, v in inverse_map.items()], ["_p", "_inv_p"]
     )
     inverted = (
-        edges.join(F.broadcast(inv), edges[pred] == F.col("_p"), "inner")
+        edges.join(F.broadcast(inv), edges["pred"] == F.col("_p"), "inner")
         .select(
-            F.col(dst).alias(src),
-            F.col("_inv_p").alias(pred),
-            F.col(src).alias(dst),
+            F.col("dst").alias("src"),
+            F.col("_inv_p").alias("pred"),
+            F.col("src").alias("dst"),
         )
     )
-    return edges.select(src, pred, dst).union(inverted).dropDuplicates([src, pred, dst])
+    return edges.select(*EDGE_COLS).union(inverted).dropDuplicates(EDGE_COLS)
 
 
-def normalize_one_direction(
-    edges: DataFrame,
-    canonical_of: dict[str, str],
-    src: str = "src",
-    pred: str = "pred",
-    dst: str = "dst",
-) -> DataFrame:
-    """Keep one canonical direction per symmetric predicate pair.
+def normalize_one_direction(edges: DataFrame, canonical_of: dict[str, str]) -> DataFrame:
+    """Keep one canonical direction per symmetric predicate pair of
+    edges[src, pred, dst].
 
     `canonical_of` maps non-canonical predicate -> canonical predicate
     (e.g. teacherOf -> studentOf when the student direction is kept). Edges
@@ -66,10 +57,10 @@ def normalize_one_direction(
     flip = spark.createDataFrame(
         [(k, v) for k, v in canonical_of.items()], ["_p", "_canon_p"]
     )
-    non_canon = edges.join(F.broadcast(flip), edges[pred] == F.col("_p"), "inner").select(
-        F.col(dst).alias(src), F.col("_canon_p").alias(pred), F.col(src).alias(dst)
+    non_canon = edges.join(F.broadcast(flip), edges["pred"] == F.col("_p"), "inner").select(
+        F.col("dst").alias("src"), F.col("_canon_p").alias("pred"), F.col("src").alias("dst")
     )
     canon = edges.join(
-        F.broadcast(flip), edges[pred] == F.col("_p"), "left_anti"
-    ).select(src, pred, dst)
-    return canon.union(non_canon).dropDuplicates([src, pred, dst])
+        F.broadcast(flip), edges["pred"] == F.col("_p"), "left_anti"
+    ).select(*EDGE_COLS)
+    return canon.union(non_canon).dropDuplicates(EDGE_COLS)

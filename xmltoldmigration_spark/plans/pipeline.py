@@ -245,23 +245,14 @@ class Pipeline:
         streams = split_streams(parsed)
         # the set of migrated graphs is invariant through the link and
         # side-join stages (they only rewrite objects or add rows into
-        # graphs that already exist), so compute it ONCE from the parsed
-        # triples — a single column-pruned scan of the parse output —
-        # and reuse it in every existence semi/anti-join.  Without this
-        # each `.distinct()` re-executed the whole join chain (3 extra
-        # full-chain runs per pipeline).  localCheckpoint computes
-        # the small list once, on first use.
+        # graphs that already exist), so take it from the parsed triples
+        # — a column-pruned scan of the parse output — for every
+        # existence semi/anti-join (a `.distinct()` over the joined chain
+        # would re-execute the whole chain)
+        graphs = streams["triples"].select("graph").distinct()
         cores = self.spark.sparkContext.defaultParallelism
-        # eager ONLY when the errors write will actually run CONCURRENTLY
-        # with the main graph write (>=4 cores AND errors pending): two
-        # threads racing to compute one lazy checkpoint would compute it
-        # twice.  On a fully-warm resume (graph + errors done) nothing
-        # consumes `graphs`, so an unconditional eager checkpoint would
-        # pay a full distinct-over-parse job per call — measured as the
-        # dominant per-query cost of warm kg bench runs.
         errors_pending = not (resume and self._done("errors"))
         co = cores >= 4 and errors_pending
-        graphs = streams["triples"].select("graph").distinct().localCheckpoint(eager=co)
 
         def _run_main() -> DataFrame:
             if resume and self._done("graph"):

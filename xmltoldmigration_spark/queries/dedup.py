@@ -229,10 +229,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="training-data dedup: SimHash 64-bit fingerprint (pandas UDF)",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xmltoldmigration_spark.operators.simhash import with_simhash
+    from xmltoldmigration_spark.operators.simhash import simhash_hex
 
     docs = load_table(spark, sf_dir, "documents")
-    return with_simhash(docs, text_col="text").select("doc_id", "simhash_hex")
+    return docs.select("doc_id", simhash_hex(F.col("text")).alias("simhash_hex"))
 
 
 # --------------------------------------------------------------------------
@@ -263,7 +263,4 @@ COSINE_THRESHOLD = 0.4
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xmltoldmigration_spark.operators.similarity import exact_cosine_pairs
 
-    e = load_table(spark, sf_dir, "embeddings")
-    # parquet count() is metadata-only; passing it spares the operator an
-    # extra evaluation of the input plan to size its block grid
-    return exact_cosine_pairs(e, COSINE_THRESHOLD, n_rows=e.count())
+    return exact_cosine_pairs(load_table(spark, sf_dir, "embeddings"), COSINE_THRESHOLD)

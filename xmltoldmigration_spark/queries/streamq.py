@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from xmltoldmigration_spark.queries import register
+from xmltoldmigration_spark.streaming.stateful import SESSION_GAP_S, sessionize_stream
 from xmltoldmigration_spark.tables import load_table
 
 
@@ -70,7 +71,7 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap = F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), F.col("ts"))
     g = ev.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > 1800 * 1_000_000), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > SESSION_GAP_S * 1_000_000), F.lit(1)).otherwise(F.lit(0)),
     )
     s = g.withColumn(
         "session_id", F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, 0))
@@ -113,8 +114,6 @@ def stream_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
     import uuid
-
-    from xmltoldmigration_spark.streaming.stateful import sessionize_stream
 
     ev = load_table(spark, sf_dir, "events")
     name = "sess_updates_" + uuid.uuid4().hex[:8]
