@@ -667,6 +667,71 @@ def test_one_side_table(spark, tmp_path):
         ("I9X5V1", "I9X5V1", "imagegroup claimed by works W9X5, W9XDUP")]
 
 
+def test_filtered_records_yield_no_rows(spark, tmp_path):
+    """F3 and F5 skip a record in the parse stage: a blacklisted outline,
+    an unreleased `G9GBX*` place and an ignored product write no row of
+    any stream, not even a status row; a released `G9GBX*` place is
+    migrated."""
+    def place(rid, status):
+        return (f'<g:place xmlns:g="http://www.tbrc.org/models/place#" RID="{rid}" '
+                f'status="{status}"><g:name lang="tibetan" encoding="extendedWylie">dgon pa'
+                '</g:name><g:info type="placeTypes:dgonPa"/></g:place>')
+
+    records = {
+        "tbrc-outlines/O1HU51.xml":
+            '<o:outline xmlns:o="http://www.tbrc.org/models/outline#" RID="O1HU51" '
+            'status="released"><o:name lang="tibetan" encoding="extendedWylie">dkar chag'
+            '</o:name><o:isOutlineOf work="W9X5"/></o:outline>',
+        "tbrc-places/G9GBX1.xml": place("G9GBX1", "provisional"),
+        "tbrc-places/G9GBX2.xml": place("G9GBX2", "released"),
+        "tbrc-products/PR99SUBSCRIBERS.xml":
+            '<pr:product xmlns:pr="http://www.tbrc.org/models/product#" '
+            'RID="PR99SUBSCRIBERS" status="released"><pr:name lang="english">subscribers'
+            "</pr:name></pr:product>",
+    }
+    src = spark.createDataFrame([("tbrc", p, "v1", "xml", x) for p, x in records.items()],
+                                schema=corpus.SRC_SCHEMA)
+    pipe = Pipeline(spark, str(tmp_path / "filters"))
+    final = pipe.run(src, resume=False)
+    parsed = pipe._read_stage("parsed")
+    for df in (final, parsed):
+        assert {r.graph for r in df.select("graph").distinct().collect()} == {"G9GBX2"}
+
+
+def test_duplicate_keys_keep_the_least_value(spark, tmp_path):
+    """One value per key whatever the input order: an old RID withdrawn to
+    two targets redirects to the least target (J1), and an imagegroup with
+    two ondisk lists numbers the etext pages by the least list."""
+    no_cover = corpus.synth_imagegroup_xml(29).replace("COVER29.tif|garbage|", "")
+    rows = [
+        ("tbrc", "tbrc-works/W9X5.xml", "v1", "xml", corpus.synth_work_xml(5)),
+        ("tbrc", "tbrc-persons/P9X3830.xml", "v1", "xml",
+         _withdrawn_person_xml("P9X3830", "P9X2")),
+        ("tbrc", "tbrc-persons/P9X3830.xml", "v1", "xml",
+         _withdrawn_person_xml("P9X3830", "P9X1")),
+        ("tbrc", "tbrc-etexts/UCB-OCR/UT9XU29.xml", "v1", "xml", corpus.synth_ucb_etext_xml(29)),
+        ("tbrc", "tbrc-imagegroups/I9XE29.xml", "v1", "xml", no_cover),
+        ("tbrc", "tbrc-imagegroups/I9XE29.xml", "v1", "xml", corpus.synth_imagegroup_xml(29)),
+    ]
+
+    def graph(order, name):
+        # one partition: the input order is the order each key's rows meet
+        src = spark.createDataFrame(order, schema=corpus.SRC_SCHEMA).coalesce(1)
+        return set(Pipeline(spark, str(tmp_path / name)).run(src, resume=False).collect())
+
+    forward, backward = graph(rows, "forward"), graph(rows[::-1], "backward")
+    assert forward == backward
+    creators = {r.o_value for r in forward
+                if r.graph == "WA9X5" and r.o_value.startswith(BDR + "P9X")}
+    assert creators == {BDR + "P9X1"}
+    bdo = "http://purl.bdrc.io/ontology/core/"
+    pages = {r.o_value for r in forward if r.predicate == bdo + "eTextHasPage"}
+    seqs = sorted(int(r.o_value) for r in forward
+                  if r.predicate == bdo + "seqNum" and r.subject in pages)
+    # the list with the cover image is the least: page 1 is its image 2
+    assert seqs and seqs[0] == 2
+
+
 def test_workers_use_the_authority_they_are_handed(spark):
     """parse_src and transfer_to_parsed run their migrators on executors
     with the Authority passed on the driver, not with the tables on disk."""

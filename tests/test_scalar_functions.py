@@ -6,7 +6,6 @@ from xmltoldmigration_spark.functions.lang import add_ewts_shad, get_bcp47
 from xmltoldmigration_spark.functions.text import (
     is_empty_pub_value,
     normalize_string,
-    normalize_tol_url,
     pad_edtf_zeros,
     parse_dates,
     rid_from_tbrc_url,
@@ -28,14 +27,6 @@ def test_normalize_string():
 
 def test_url_normalization():
     # MigrationTest.testUrlNormalization:192-201
-    assert (
-        normalize_tol_url("http://treasuryoflives.org/biographies/abc")
-        == "https://www.treasuryoflives.org/biographies/abc"
-    )
-    assert (
-        normalize_tol_url("http://beta.treasuryoflives.org/biographies/abc")
-        == "https://www.treasuryoflives.org/biographies/abc"
-    )
     assert rid_from_tbrc_url("http://tbrc.org/#library_work_Object-W00EGS1016761") == "W00EGS1016761"
     assert (
         rid_from_tbrc_url("http://tbrc.org/link?RID=O2DB102429|O2DB1024292DB102470$W21634")
@@ -101,41 +92,6 @@ def test_bcp47():
     assert get_bcp47("pāli", "kmfemc") == "pi-x-kmfemc"
     assert get_bcp47("english", "") == "en"
     assert get_bcp47("", "", "en") == "en"
-
-
-def test_image_list_decode():
-    # MigrationTest.testImageList:497-518 (C13)
-    from xmltoldmigration_spark.functions.imagelist import get_image_nums
-
-    assert get_image_nums("49050001.tif:3", None) == {
-        "49050001.tif": 1, "49050002.tif": 2, "49050003.tif": 3,
-    }
-    assert get_image_nums("49050025.tif:3", None) == {
-        "49050025.tif": 1, "49050026.tif": 2, "49050027.tif": 3,
-    }
-    assert get_image_nums("49050025.tif:2|49050028.tif:2", "1-24,27") == {
-        "49050025.tif": 25, "49050026.tif": 26,
-        "49050028.tif": 28, "49050029.tif": 29,
-    }
-
-
-def test_image_list_encode_roundtrip():
-    # C12: RLE encode + gap detection (ImageListTranslation.addImageList)
-    from xmltoldmigration_spark.functions.imagelist import (
-        encode_image_list,
-        get_image_nums,
-    )
-
-    src = "|".join(f"4905{i:04d}.tif" for i in [1, 2, 3, 6, 7, 10])
-    rle, total, missing, warnings = encode_image_list(src)
-    assert total == 6
-    assert rle == "49050001.tif:3|49050006.tif:2|49050010.tif"
-    assert missing == "4-5,8-9"
-    assert not warnings
-    decoded = get_image_nums(rle, missing)
-    assert decoded["49050001.tif"] == 1
-    assert decoded["49050006.tif"] == 6
-    assert decoded["49050010.tif"] == 10
 
 
 def test_plan_audit_parser():

@@ -65,25 +65,7 @@ def test_qcdate_total(s):
 @settings(max_examples=200, deadline=None)
 @given(any_text)
 def test_urls_total(s):
-    T.normalize_tol_url(s)
     T.rid_from_tbrc_url(s)
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.integers(min_value=1, max_value=9999), min_size=1, max_size=30, unique=True))
-def test_image_list_roundtrip_property(nums):
-    from xmltoldmigration_spark.functions.imagelist import (
-        encode_image_list,
-        get_image_nums,
-    )
-
-    nums = sorted(nums)
-    src = "|".join(f"IMG{n:04d}.tif" for n in nums)
-    rle, total, missing, _ = encode_image_list(src)
-    assert total == len(nums)
-    decoded = get_image_nums(rle, missing)
-    # every encoded image decodes to its ordinal position among pages
-    assert set(decoded) == {f"img{n:04d}.tif" for n in nums}
 
 
 # ---------------------------------------------------------------- simhash
@@ -136,13 +118,14 @@ def test_simhash_sub_chunks_match_per_text(monkeypatch):
 
 
 def test_simhash_locality():
-    from xmltoldmigration_spark.operators.simhash import hamming64, simhash64
+    from xmltoldmigration_spark.operators.simhash import simhash64
 
     base = "the quick brown fox jumps over the lazy dog " * 30
     near = base + "one extra token"
     far = "completely different material about parquet row groups " * 30
-    assert hamming64(simhash64(base), simhash64(near)) <= 6
-    assert hamming64(simhash64(base), simhash64(far)) >= 20
+    h = simhash64(base)
+    assert bin(h ^ simhash64(near)).count("1") <= 6
+    assert bin(h ^ simhash64(far)).count("1") >= 20
 
 
 # ---------------------------------------------------------------- rkts ttl

@@ -1,37 +1,9 @@
-"""Incremental (Structured Streaming) parse: new src files are picked up
-exactly once across restarts via the streaming checkpoint."""
+"""Stateful streaming sessionization (streaming/stateful.py): the stream
+converges to the batch answer, however it is cut into micro-batches."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-def test_stream_parse_exactly_once(spark, tmp_path):
-    from xmltoldmigration_spark.sources.corpus import load_synthetic_src
-    from xmltoldmigration_spark.streaming.incremental import stream_parse
-
-    src_dir = str(tmp_path / "src")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    load_synthetic_src(spark, 50, num_partitions=2).write.parquet(src_dir)
-    q = stream_parse(spark, src_dir, out_dir, ckpt)
-    assert q.awaitTermination(120), "streaming query timed out"
-    n1 = spark.read.parquet(out_dir).filter(F.col("stream") == "triple").count()
-    assert n1 > 0
-
-    # drop more files; restart drains ONLY the delta
-    load_synthetic_src(spark, 30, seed=7, num_partitions=1).write.mode("append").parquet(src_dir)
-    q = stream_parse(spark, src_dir, out_dir, ckpt)
-    assert q.awaitTermination(120), "streaming query timed out"
-    n2 = spark.read.parquet(out_dir).filter(F.col("stream") == "triple").count()
-    assert n2 > n1
-
-    # a third restart with no new input must add nothing (exactly-once)
-    q = stream_parse(spark, src_dir, out_dir, ckpt)
-    assert q.awaitTermination(120), "streaming query timed out"
-    n3 = spark.read.parquet(out_dir).filter(F.col("stream") == "triple").count()
-    assert n3 == n2
 
 
 def test_stateful_sessionization_matches_batch(spark, tmp_path):
@@ -96,50 +68,6 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
         for r in batch.collect()
     }
     assert got == want and len(want) > 20
-
-
-def test_windowed_counts_matches_batch(spark, tmp_path):
-    """Watermarked tumbling-window aggregation over a finite stream equals
-    the oracle-checked batch twin (complete-mode drain, availableNow)."""
-    import uuid
-
-    from xmltoldmigration_spark.streaming.windowed import windowed_counts
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").filter(
-        F.col("user_id") < 30
-    )
-    src_dir = str(tmp_path / "ev_win")
-    ev.coalesce(2).write.parquet(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    name = "win_" + uuid.uuid4().hex[:8]
-    q = (
-        windowed_counts(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "streaming query timed out"
-    got = {
-        (r.window_start, r.event_type): (r.n_events, round(r.sum_value, 4))
-        for r in spark.table(name).collect()
-    }
-    batch = (
-        ev.groupBy(
-            (F.floor(F.unix_timestamp("ts") / 300) * 300).cast("bigint").alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-    )
-    want = {
-        (r.window_start, r.event_type): (r.n_events, round(r.sum_value, 4))
-        for r in batch.collect()
-    }
-    assert got == want and len(want) > 50
 
 
 class _FakeState:

@@ -12,8 +12,6 @@ from __future__ import annotations
 import re
 import unicodedata
 
-EWTS_TAG = "bo-x-ewts"
-
 # (lang, encoding) -> BCP-47 tag. "" = attribute absent/empty.
 _LANG_ENC = {
     ("tibetan", "extendedWylie"): "bo-x-ewts",

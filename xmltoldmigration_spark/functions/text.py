@@ -34,13 +34,6 @@ def dst_shard(base_name: str) -> str:
 
 
 # C9 — URL normalization (CommonMigration.java:806-839)
-def normalize_tol_url(url: str) -> str:
-    res = url.replace("http", "https")
-    res = res.replace("//treasuryoflives.org", "//www.treasuryoflives.org")
-    res = res.replace("//beta.treasuryoflives.org", "//www.treasuryoflives.org")
-    return res
-
-
 def rid_from_tbrc_url(url: str) -> str:
     i = url.find("RID=")
     res = url

@@ -105,11 +105,6 @@ class PRResult:
     missing: list  # in golden, not in ours
     extra: list  # in ours, not in golden
 
-    @property
-    def f1(self) -> float:
-        p, r = self.precision, self.recall
-        return 0.0 if p + r == 0 else 2 * p * r / (p + r)
-
 
 def precision_recall(ours: list[tuple], golden: list[tuple]) -> PRResult:
     a = canonicalize(ours)

@@ -73,6 +73,23 @@ def _dispatch_table() -> dict:
     }
 
 
+# F5 — products that are never migrated (MigrationApp.java:503-505)
+_IGNORED_PRODUCTS = frozenset({"PR99SUBSCRIBERS", "PR88CT000129", "PR01JW33589"})
+
+
+def must_be_migrated(rtype: str, rid: str, status: str) -> bool:
+    """F3 (MigrationHelpers.mustBeMigrated:743-751): the outline
+    blacklist and the unreleased `G9GBX*` places are skipped; F5: so are
+    the ignored products."""
+    if rtype == "outline":
+        from xmltoldmigration_spark.kg.migrators.outline import RIDS_TO_IGNORE
+
+        return rid not in RIDS_TO_IGNORE
+    if rtype == "place":
+        return not rid.startswith("G9GBX") or status == "released"
+    return rtype != "product" or rid not in _IGNORED_PRODUCTS
+
+
 def migrate_record(rtype: str, content: str, ctx: Ctx):
     """Dispatch one XML record to its migrator (MigrationHelpers.xmlToRdf:700-741)."""
     dispatch = _dispatch_table()

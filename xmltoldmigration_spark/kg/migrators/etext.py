@@ -38,14 +38,6 @@ FACET_VOLUME = ("VL", BDR)
 PAGE_INSERT = "\n\n"
 LINE_INSERT = "\n"
 
-DISTRIBUTOR_TO_URI = {
-    "DharmaDownload": "001", "DrikungChetsang": "002", "eKangyur": "003",
-    "eTengyur": "003", "GuruLamaWorks": "004", "KarmaDelek": "005",
-    "PalriParkhang": "006", "Shechen": "007", "TulkuSangag": "008",
-    "UCB-OCR": "009", "VajraVidya": "010", "Various": "011",
-}
-PAGINATED_PROVIDERS = ("UCB-OCR", "eKangyur", "eTengyur")
-
 RTF_P = re.compile(r"(\s*\d*(PAGE|\$)[\x00-\x7f-ħ]*)+")
 
 

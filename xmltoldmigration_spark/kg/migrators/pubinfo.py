@@ -36,7 +36,6 @@ _COMPUTER_INPUT_DBU_MED = frozenset(
 # Exact-match lists (including source-data misspellings), then contains()
 # fallbacks.  Spec: (lang, script, gated) — gated=True means the Tibetan
 # entry is skipped once langTibetanDone.
-_BO = ("LangBo", "ScriptTibt")
 _ENC_GROUPS: list[tuple[list[str], list[tuple]]] = [
     (
         """in tibetan བོད་ཡིག ྦོབོད་ཡིག ྦབོད་ཡིག  ྐབོད་ཡིག ྦོོབོད་ཡིག བོ་དཡིག ཡིག ྐབོད་ཡིག

@@ -35,32 +35,11 @@ BF = "http://id.loc.gov/ontologies/bibframe/"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 SKOS = "http://www.w3.org/2004/02/skos/core#"
-OWL = "http://www.w3.org/2002/07/owl#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
-RKTS = "http://purl.rkts.eu/resource/"
 EDTF = "http://id.loc.gov/datatypes/edtf"
 VCARD = "http://www.w3.org/2006/vcard/ns#"
-TMP = "http://purl.bdrc.io/ontology/tmp/"
 
 RDF_TYPE = RDF + "type"
-PREFIXES = {
-    "": BDO,
-    "bdo": BDO,
-    "bdr": BDR,
-    "bda": BDA,
-    "bdg": BDG,
-    "bdu": BDU,
-    "adm": ADM,
-    "bf": BF,
-    "rdf": RDF,
-    "rdfs": RDFS,
-    "skos": SKOS,
-    "owl": OWL,
-    "xsd": XSD,
-    "rkts": RKTS,
-    "vcard": VCARD,
-    "tmp": TMP,
-}
 
 # Facet prefixes, mirroring bdrc-libraries FacetType as observed in the
 # golden corpus (bdr:NM…/EV…/NT…/CR…/CL…/TT…/ID…, bda:LG…).

@@ -73,7 +73,7 @@ def _parse_record(path: str, content, auth) -> Iterator[tuple]:
     `content` may be str or bytes — ElementTree accepts both, and the
     Arrow path hands in a zero-decode bytes view of the record."""
     from xmltoldmigration_spark.kg.common import Ctx
-    from xmltoldmigration_spark.kg.migrators import migrate_record
+    from xmltoldmigration_spark.kg.migrators import migrate_record, must_be_migrated
     from xmltoldmigration_spark.sources.corpus import rtype_from_path
 
     rid = path.rsplit("/", 1)[-1].removesuffix(".xml")
@@ -84,7 +84,10 @@ def _parse_record(path: str, content, auth) -> Iterator[tuple]:
     except Exception as e:  # record-level failure -> error row
         yield error_row(rid, rid, "parse", e)
         return
-    # status was captured during migrate_record — no second parse
+    # status was captured during migrate_record — no second parse; a
+    # skipped record yields no row at all, so links to it are J3 rows
+    if not must_be_migrated(rtype, rid, ctx.result.status):
+        return
     yield ("status", rid, rid, None, None, ctx.result.status, None, None)
     yield from emitter_rows(emitters, ctx.result.symmetric)
     for (etype, erid, sub, prop, msg) in ctx.result.errors:

@@ -88,7 +88,3 @@ def simhash_hex(texts: pd.Series) -> pd.Series:
     """Column UDF: simhash64 of each text as 16 lowercase hex digits."""
     vals = _simhash_from_texts(texts)
     return pd.Series([format(int(v), "016x") for v in vals], index=texts.index)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")

@@ -316,9 +316,10 @@ class Pipeline:
         MigrationHelpers.sanitizeRID it rewrites references, so the
         record's own admin data still names it.  The static
         ridReplacements table was already applied record-locally in the
-        parse stage."""
+        parse stage.  An old RID withdrawn to two targets keeps the
+        least."""
         triples = streams["triples"]
-        redirects = streams["redirects"].dropDuplicates(["old_rid"])
+        redirects = streams["redirects"].groupBy("old_rid").agg(F.min("new_rid").alias("new_rid"))
         red = redirects.select(
             F.col("old_rid").alias("_old_rid"),
             F.concat(F.lit(BDR), "old_rid").alias("_old_iri"),
@@ -396,11 +397,12 @@ class Pipeline:
         contents = streams["contents"]
         # imagegroup ondisk lists -> (ig, lowercase basename, 1-based seq);
         # entries without an extension are skipped WITHOUT consuming a
-        # sequence number (java:883-886), hence the filter before posexplode
+        # sequence number (java:883-886), hence the filter before posexplode;
+        # an imagegroup with two ondisk lists keeps the least
         imgmap = (
             contents.filter(F.col("kind").startswith("imgmap:"))
-            .select(F.expr("substring(kind, 8)").alias("ig"), "payload")
-            .dropDuplicates(["ig"])
+            .groupBy(F.expr("substring(kind, 8)").alias("ig"))
+            .agg(F.min("payload").alias("payload"))
             .select("ig", F.posexplode(
                 F.filter(F.split("payload", r"\|"), lambda e: e.contains("."))))
             .select(

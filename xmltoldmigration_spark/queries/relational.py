@@ -488,10 +488,9 @@ def set_union_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C12/C13 image-list RLE: the reference's addImageList run-length logic
 # (helpers/ImageListTranslation.java:26-111) re-expressed set-oriented —
 # consecutive-number runs become `IMG<start>.tif:<count>` tokens via the
-# classic gaps-and-islands window (num - row_number = island id).  The
-# scalar encoder in functions/imagelist.py stays the record-local C12
-# implementation (pinned to MigrationTest cases); this embodiment shows
-# the same RLE semantics is SQL-expressible and oracle-checkable.
+# classic gaps-and-islands window (num - row_number = island id), checked
+# against the same RLE in DuckDB SQL.  No migrator emits an RLE imageList,
+# so this embodiment is the engine's only C12/C13 code.
 # --------------------------------------------------------------------------
 @register(
     "c12_imagelist_rle",

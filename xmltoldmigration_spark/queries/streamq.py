@@ -1,9 +1,9 @@
 """Event-stream operators (batch-checkable embodiments).
 
-The reference pipeline is pure batch (SURVEY §2.7: no streaming), but this
-engine ships Structured Streaming variants for the `events` table
-(streaming/windowed.py); each queries() entry here computes the *batch
-equivalent* of the streaming aggregation so the DuckDB oracle can check it.
+The reference pipeline is pure batch (SURVEY §2.7: no streaming).  The
+tumbling-window aggregation runs as a batch query; the sessionization
+runs as a Structured Streaming query through streaming/stateful.py, and
+its final rows equal the batch twin that the DuckDB oracle checks.
 """
 
 from __future__ import annotations
@@ -106,10 +106,10 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="streaming: applyInPandasWithState sessionization (custom stateful op)",
 )
 def stream_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only: Structured Streaming (availableNow) over the events
-    table through the stateful operator; final per-session aggregates
-    equal the oracle-checked batch twin (asserted by
-    tests/test_streaming_incremental.py)."""
+    """Structured Streaming (availableNow) over the events table through
+    the stateful operator; the final per-session aggregates meet the
+    batch twin's SQL oracle (tests/test_streaming_incremental.py cuts the
+    stream into micro-batches)."""
     import os
     import shutil
     import tempfile

@@ -1,9 +1,7 @@
-"""Structured Streaming surface.
+"""Structured Streaming operators.
 
-The reference is pure batch (SURVEY.md §2.7) — resumability there is
-git-commit-per-type.  This module adds the Spark-native incremental
-ingestion path: new source records stream through the SAME record-local
-parse stage and append to the triple table, with exactly-once progress
-via the streaming checkpoint.  Windowed/stateful operators over the
-synthetic `events` table live in queries/streamq.py.
+The reference is pure batch (SURVEY.md §2.7).  stateful.py holds the
+applyInPandasWithState sessionizer that the driver query
+`stream_stateful_sessionization` (queries/streamq.py) runs over the
+synthetic `events` table.
 """
